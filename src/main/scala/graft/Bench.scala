@@ -1,5 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
+/** Times the declared builds, then every SparkEntry query — or, given
+  * trailing query names, only those (`runMain graft.Bench q20_topk_orders`).
+  */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -15,6 +18,9 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val errors = scala.collection.mutable.ArrayBuffer[String]()
+    val only = args.toSet
+    // a misspelt name must not pass as a fast, empty run
+    errors ++= (only -- SparkEntry.queries.keySet).toSeq.sorted
     // warm the JVM/codegen/scan paths once so the first measured query
     // doesn't absorb session startup (~5s); errors are non-fatal
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
@@ -41,7 +47,9 @@ object Bench {
       catch { case _: Throwable => errors += s"build:$name" }
       name -> (System.nanoTime() - t0) / 1e9
     }
-    val results = SparkEntry.queries.map { case (name, fn) =>
+    val results = SparkEntry.queries
+      .filter { case (name, _) => only.isEmpty || only(name) }
+      .map { case (name, fn) =>
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() }
       catch { case _: Throwable => errors += name }

@@ -226,24 +226,11 @@ object Dedup {
     // side is small so AQE broadcasts it and arr never shuffles
     // (shingles are distinct per doc, so |array_intersect| ≡ the
     // exploded join's pair count — output ≡ jaccardPairs row-for-row).
-    // This two-join shape reads the arr cache TWICE (x and y sides);
-    // the single-scan alternative (jaccardPrefixJoinSingleScan) reads
-    // it once but shuffles array payloads per admitted pair — the
-    // ProfilePrefix 10× pair adjudicates which ships as default.
-    exactJaccardScore(
-      passing
-        .join(arr.select($"doc_id".as("x"), $"shs".as("shx")), "x")
-        .join(arr.select($"doc_id".as("y"), $"shs".as("shy")), "y"),
-      threshold)
-  }
-
-  /** The exact-Jaccard re-check both q109 verify shapes share: one
-    * scoring definition so the spec's two-shape equality law cannot be
-    * broken by a one-sided edit. Input: (x, y, shx, shy) pair rows.
-    */
-  private def exactJaccardScore(pairs: DataFrame, threshold: Double): DataFrame = {
-    import pairs.sparkSession.implicits._
-    pairs
+    // The two joins read the arr cache twice (x and y sides) so that no
+    // array payload crosses a shuffle.
+    passing
+      .join(arr.select($"doc_id".as("x"), $"shs".as("shx")), "x")
+      .join(arr.select($"doc_id".as("y"), $"shs".as("shy")), "y")
       .select($"x", $"y",
         size(array_intersect($"shx", $"shy")).cast("long").as("inter"),
         size($"shx").cast("long").as("szx"),
@@ -253,35 +240,8 @@ object Dedup {
       .filter($"jac" >= threshold)
   }
 
-  /** The q109 verify stage with ONE reference to the shingle-array
-    * cache (the round-14 watch item): explode each admitted pair into
-    * its two doc legs, join the cache ONCE, and reassemble the pair's
-    * two arrays with a first-non-null aggregate. Trades the second
-    * cache scan for one shuffle of 2·|admitted| array-carrying rows —
-    * |admitted| ≈ the true pair set, so the shuffle is small; whether
-    * that beats a second in-memory columnar scan is an empirical
-    * question the ProfilePrefix 10× pair answers. Output ≡
-    * `jaccardPrefixJoin` ≡ `jaccardPairs` row-for-row (same exact
-    * re-check, same q16 oracle; equality pinned in
-    * DedupSimilaritySpec).
-    */
-  private[graft] def jaccardPrefixJoinSingleScan(spark: SparkSession,
-      d: String, threshold: Double = 0.5): DataFrame = {
-    import spark.implicits._
-    val arr = docShingleArrays(spark, d)
-    val legs = prefixAdmitted(spark, d, threshold)
-      .select($"x", $"y", explode(array($"x", $"y")).as("doc_id"))
-    exactJaccardScore(
-      legs.join(arr.select($"doc_id", $"shs"), "doc_id")
-        .groupBy($"x", $"y")
-        .agg(
-          first(when($"doc_id" === $"x", $"shs"), ignoreNulls = true).as("shx"),
-          first(when($"doc_id" === $"y", $"shs"), ignoreNulls = true).as("shy")),
-      threshold)
-  }
-
-  /** Stage-1 admission shared by both verify shapes: prefix-filter
-    * candidates cut by the lossless slim-hash Jaccard upper bound.
+  /** Stage-1 admission: prefix-filter candidates cut by the lossless
+    * slim-hash Jaccard upper bound.
     */
   private def prefixAdmitted(spark: SparkSession, d: String,
       threshold: Double): DataFrame = {

@@ -133,9 +133,8 @@ object Relational {
     * verdict's ask): no row_number anywhere, each partition folds a
     * k-heap per priority map-side, the single group shuffle merges
     * heaps, and the sorted array unpacks to (row, rnk). Same output as
-    * the single-window form (`topKOrdersWindow`) AND the round-10/11
-    * salted two-window decomposition (`topKOrdersSalted`) — both kept
-    * as spec equality rungs; the DuckDB oracle is unchanged.
+    * the single-window form (`topKOrdersWindow`), kept as the spec
+    * equality rung; the DuckDB oracle is unchanged.
     */
   def topKOrders(spark: SparkSession, d: String, k: Int = 10): DataFrame = {
     import spark.implicits._
@@ -145,27 +144,6 @@ object Relational {
         k, "rnk", Seq($"o_orderpriority"),
         struct((-$"o_totalprice").as("__np"), $"o_orderkey", $"o_totalprice"))
       .select($"o_orderpriority", $"o_orderkey", $"o_totalprice", $"rnk")
-  }
-
-  /** The salted two-window form `topKOrders` shipped in rounds 10–11 —
-    * kept as the decomposition rung the heap aggregate is spec-pinned
-    * against (it proves the same output through independent machinery).
-    */
-  private[graft] def topKOrdersSalted(spark: SparkSession, d: String,
-      k: Int = 10, salts: Int = 32): DataFrame = {
-    import spark.implicits._
-    val order = Seq($"o_totalprice".desc, $"o_orderkey".asc)
-    val local = Window.partitionBy($"o_orderpriority", $"__salt")
-      .orderBy(order: _*)
-    val global = Window.partitionBy($"o_orderpriority").orderBy(order: _*)
-    orders(spark, d)
-      .select($"o_orderpriority", $"o_orderkey", $"o_totalprice",
-        pmod(xxhash64($"o_orderkey"), lit(salts.toLong)).as("__salt"))
-      .withColumn("__r", row_number().over(local))
-      .filter($"__r" <= k)
-      .withColumn("rnk", row_number().over(global))
-      .filter($"rnk" <= k)
-      .drop("__salt", "__r")
   }
 
   /** The single-window form of `topKOrders` — one rank per priority

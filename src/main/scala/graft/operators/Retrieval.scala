@@ -74,7 +74,7 @@ object Retrieval {
     * table (|queries|·20 rows), never the full (query, doc) score
     * table. Round 10 memoized the full ~11 M-row score aggregate; the
     * columnar cache build of that table was most of q116's bench cost
-    * (tools.ProfileBm25), and no consumer ever read past rank 20 of it.
+    * (PERF.md, BM25 rework), and no consumer ever read past rank 20 of it.
     * Ranks within the top-20 cut equal global ranks for every rank ≤ 20
     * (the cut preserves the (score DESC, doc_id) prefix per query).
     */
@@ -150,7 +150,7 @@ object Retrieval {
     *  - the cache pins the one evaluation of the double weight chain per
     *    posting (inside one codegen stage the projection fuses into the
     *    query join's consume path and would re-evaluate per CANDIDATE —
-    *    ~18× per posting on this corpus; ProfileBm25b measured ~5 s);
+    *    ~18× per posting on this corpus, ~5 s measured in PERF.md);
     *  - the doc_id partitioning flows through the broadcast query join
     *    (streamed side), and HashPartitioning(doc_id) satisfies the
     *    (query_id, doc_id) clustering the score aggregate requires —

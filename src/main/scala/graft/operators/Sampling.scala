@@ -508,8 +508,8 @@ object Sampling {
     * per-source `row_number` window over the RAW corpus is exactly the
     * hot-group sort the rank machinery exists to avoid. Sources with
     * ≤ k docs keep everything with τ_s = 0 (the q114 small-corpus
-    * path, per-group). The round-11 salted two-window decomposition is
-    * kept as `groupPrioritySampleSalted`, the spec equality rung.
+    * path, per-group). PipelineOpsSpec pins the output to a driver
+    * replay of the same priorities.
     */
   def groupPrioritySample(spark: SparkSession, d: String, k: Int = 20): DataFrame = {
     import spark.implicits._
@@ -540,31 +540,6 @@ object Sampling {
       .select($"source", $"doc_id", $"w",
         (($"w".cast("double") * lit(4294967296.0)) / $"h1".cast("double"))
           .as("pri"))
-  }
-
-  /** The salted two-window form `groupPrioritySample` shipped in round
-    * 11 — kept as the decomposition rung the heap aggregate is
-    * spec-pinned against.
-    */
-  private[graft] def groupPrioritySampleSalted(spark: SparkSession,
-      d: String, k: Int = 20, salts: Int = 32): DataFrame = {
-    import spark.implicits._
-    val pri = priBySource(spark, d)
-      .withColumn("__salt", pmod(xxhash64($"doc_id"), lit(salts.toLong)))
-    val order = Seq($"pri".desc, $"doc_id".asc)
-    val local = Window.partitionBy($"source", $"__salt").orderBy(order: _*)
-    val global = Window.partitionBy($"source").orderBy(order: _*)
-    val survivors = pri
-      .withColumn("__r", row_number().over(local))
-      .filter($"__r" <= k + 1)
-      .withColumn("rank", row_number().over(global).cast("long"))
-      .filter($"rank" <= k + 1)
-    val tau = survivors.filter($"rank" === k + 1)
-      .select($"source", $"pri".as("tau"))
-    survivors.filter($"rank" <= k)
-      .join(broadcast(tau), Seq("source"), "left")
-      .select($"source", $"doc_id", $"w", $"pri", $"rank",
-        greatest($"w".cast("double"), coalesce($"tau", lit(0.0))).as("est_w"))
   }
 
   /** q197: split DRIFT audit — the gate a pipeline runs right after

@@ -304,8 +304,7 @@ object Text {
     * each merge step is a vocabulary-sized aggregate (map-side combined,
     * corpus-sublinear by Heaps' law) plus a single-row argmax collect —
     * the driver holds one (pair, count) row per step, the lloydCentroids
-    * trajectory shape. Per-step word tables are cached; they are
-    * vocab-sized and session-bounded.
+    * trajectory shape.
     *
     * Iterative-refinement precedent in the reference:
     * gelly_java/PageRankWithEdgeWeights.java:103-104.
@@ -416,9 +415,12 @@ object Text {
       .groupBy($"w").agg(count(lit(1)).as("n"))
       .select(regexp_replace($"w", "(.)", "|$1|").as("s"), $"n")
       .cache()
-    val bests = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // every step's word table is cached for the next step's scan and
+    // released once the trajectory is collected
+    val cached = scala.collection.mutable.ArrayBuffer(words)
+    val steps = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
     var exhausted = false
-    for (j <- 1 to nMerges if !exhausted) {
+    try for (j <- 1 to nMerges if !exhausted) {
       val sy = split($"s".substr(lit(2), length($"s") - 2), "\\|\\|")
       val pc = words
         .select($"n", sy.as("sy"))
@@ -437,16 +439,14 @@ object Text {
       stepRow.collect().headOption match {
         case Some(best) =>
           val (l, r) = (best.getString(1), best.getString(2))
+          steps += ((j.toLong, l, r, best.getString(3), best.getLong(4)))
           words = words.select(
             replace($"s", lit(s"|$l||$r|"), lit(s"|$l$r|")).as("s"), $"n").cache()
-          bests += stepRow
+          cached += words
         case None => exhausted = true
       }
-    }
-    if (bests.isEmpty)
-      Seq.empty[(Long, String, String, String, Long)]
-        .toDF("step", "lsym", "rsym", "merged", "cnt")
-    else bests.reduce(_ union _)
+    } finally cached.foreach(_.unpersist())
+    steps.toSeq.toDF("step", "lsym", "rsym", "merged", "cnt")
   }
 
   /** PII scan + redaction: per-document counts of email / phone / SSN /

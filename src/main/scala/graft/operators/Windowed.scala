@@ -916,8 +916,10 @@ object Windowed {
       .withColumn("share", expr("unit div n_touch") +
         when($"rk" === 1L, expr("unit % n_touch")).otherwise(lit(0L)))
       .select($"touch_type", $"share")
-    val direct = p
-      .join(t, p("user_id") === t("user_id") && pairCond, "left_anti")
+    // both sides derive from `ev`: aliased, so the key compares the two
+    // sides instead of resolving to a trivially-true user_id == user_id
+    val direct = p.as("p")
+      .join(t.as("t"), $"p.user_id" === $"t.user_id" && pairCond, "left_anti")
       .select(lit("direct").as("touch_type"), ($"cents" * 10000L).as("share"))
     ranked.unionByName(direct)
       .groupBy($"touch_type")

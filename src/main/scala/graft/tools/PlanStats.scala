@@ -5,8 +5,9 @@ import java.io.PrintWriter
 import org.apache.spark.sql.SparkSession
 
 /** Regenerates PLANSTATS.md — a one-row-per-query audit of physical-plan
-  * shape across the ENTIRE query surface: shuffle count, scans,
-  * join strategies, nested-loop/cartesian occurrences, codegen spans.
+  * shape across the ENTIRE query surface: shuffle count, scans, parquet
+  * re-scans, join strategies, nested-loop/cartesian occurrences and
+  * SortAggregates.
   * The grep-able complement to PLANS.md's full dumps: a regression that
   * turns a broadcast join into a nested loop, or doubles a query's
   * exchanges, shows up as a diff in this table.
@@ -43,20 +44,31 @@ object PlanStats {
     out.println("r17) raises every consumer's listed shuffle count while lowering the")
     out.println("executed cost; read consumer rows as build-lineage × references.")
     out.println()
-    out.println("| query | shuffles | scans | bhj | smj | bnlj |")
-    out.println("|---|---|---|---|---|---|")
+    out.println("`rescans` counts parquet scans beyond the first of each file: a base")
+    out.println("lineage referenced by two sides re-scans its source per reference, but")
+    out.println("joins and declared self-joins also show here, so a row is a lead, not a")
+    out.println("verdict. `sortagg` counts SortAggregate operators, which a struct- or")
+    out.println("array-buffered aggregate falls back to, sorting its whole input.")
+    out.println()
+    out.println("| query | shuffles | scans | rescans | bhj | smj | bnlj | sortagg |")
+    out.println("|---|---|---|---|---|---|---|---|")
+    // the file each parquet scan reads, from its Location metadata
+    val scanFile = "Scan parquet [^\\n]*?/(\\w+)\\.parquet".r
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val p = fn(spark, d).queryExecution.executedPlan.toString
         def c(pat: String) = pat.r.findAllIn(p).length
         val shuffles = c("(?m)^\\s*[+:]*-? ?Exchange hashpartitioning") +
           c("(?m)Exchange rangepartitioning") + c("Exchange SinglePartition")
-        out.println(s"| $name | $shuffles | ${c("Scan parquet")} | " +
+        val scans = scanFile.findAllMatchIn(p).map(_.group(1)).toSeq
+        val rescans = scans.size - scans.distinct.size
+        out.println(s"| $name | $shuffles | ${c("Scan parquet")} | $rescans | " +
           s"${c("BroadcastHashJoin")} | ${c("SortMergeJoin")} | " +
-          s"${c("BroadcastNestedLoopJoin") + c("CartesianProduct")} |")
+          s"${c("BroadcastNestedLoopJoin") + c("CartesianProduct")} | " +
+          s"${c("SortAggregate")} |")
       } catch {
         case e: Throwable =>
-          out.println(s"| $name | ERR ${e.getClass.getSimpleName} | | | | |")
+          out.println(s"| $name | ERR ${e.getClass.getSimpleName} | | | | | | |")
       }
     }
     out.close()

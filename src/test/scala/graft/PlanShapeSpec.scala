@@ -71,14 +71,11 @@ class PlanShapeSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.rank.windowMaxRows")
   }
 
-  test("q20 heap top-k equals the window AND salted rungs; plan has no window at all") {
+  test("q20 heap top-k equals the window rung; plan has no window at all") {
     val heap = graft.operators.Relational.topKOrders(spark, sf)
     val win = graft.operators.Relational.topKOrdersWindow(spark, sf)
-    val salted = graft.operators.Relational.topKOrdersSalted(spark, sf)
     assert(heap.exceptAll(win).isEmpty && win.exceptAll(heap).isEmpty,
       "heap top-k drifted from the single-window form")
-    assert(heap.exceptAll(salted).isEmpty && salted.exceptAll(heap).isEmpty,
-      "heap top-k drifted from the salted two-window rung")
     val p = plan(heap)
     // ONE aggregate operator: the bounded heap runs in
     // ObjectHashAggregate with a partial (map-side) mode — no
