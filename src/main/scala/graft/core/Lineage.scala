@@ -53,15 +53,30 @@ object Lineage {
   private val applied = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkContext, String]())
 
+  /** A cut frame together with its row count. */
+  final class Pin private[Lineage] (val df: DataFrame, count: => Long) {
+    lazy val rows: Long = count
+  }
+
   /** Truncate `df`'s lineage (eagerly — the input plan is computed
-    * NOW and the result is a checkpoint-backed scan): localCheckpoint
-    * by default, reliable `checkpoint()` into the dial's directory
-    * when `spark.graft.reliableCheckpointDir` is set and non-empty.
+    * NOW and the result is a checkpoint-backed scan) and count its rows:
+    * localCheckpoint by default, reliable `checkpoint()` into the dial's
+    * directory when `spark.graft.reliableCheckpointDir` is set and
+    * non-empty.
+    *
+    * On the local arm the checkpoint is marked lazily and its one
+    * materializing job is a narrow count over the checkpointed RDD, so
+    * the count costs no job of its own. On the reliable arm the eager
+    * checkpoint writes the files in one job as before, and `rows` reads
+    * them back in a second job only when a caller asks for it.
     */
-  def cut(df: DataFrame): DataFrame = {
+  def counted(df: DataFrame): Pin = {
     val spark = df.sparkSession
     spark.conf.getOption(ConfKey).map(_.trim).filter(_.nonEmpty) match {
-      case None => df.localCheckpoint()
+      case None =>
+        val cp = df.localCheckpoint(eager = false)
+        val n = checkpointed(cp).count()
+        new Pin(cp, n)
       case Some(dir) =>
         val sc = spark.sparkContext
         if (applied.get(sc) != dir) {
@@ -69,10 +84,33 @@ object Lineage {
           applied.put(sc, dir): Unit
         }
         df.persist(StorageLevel.MEMORY_AND_DISK)
-        try df.checkpoint()
-        finally df.unpersist(blocking = false): Unit
+        val cp =
+          try df.checkpoint()
+          finally df.unpersist(blocking = false): Unit
+        new Pin(cp, checkpointed(cp).count())
     }
   }
+
+  /** `counted` without the count. */
+  def cut(df: DataFrame): DataFrame = counted(df).df
+
+  /** Drop the blocks of every local checkpoint under `df`'s plan (they
+    * live on the RDD, not in the cache manager, so `unpersist` alone
+    * would leave them until GC). Reliable checkpoints hold no blocks;
+    * for them this is a no-op.
+    */
+  def release(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false): Unit
+      case _ =>
+    }
+
+  private def checkpointed(cp: DataFrame): org.apache.spark.rdd.RDD[_] =
+    cp.queryExecution.logical match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+      case other => sys.error(s"checkpoint did not yield an RDD scan: ${other.nodeName}")
+    }
 
   /** Chain-position syntax: `df.transform(...).cutLineage()` keeps the
     * loop bodies reading like the `.localCheckpoint()` they replace.

@@ -114,15 +114,10 @@ object Memo {
       if (s eq spark) {
         if (!s.sparkContext.isStopped) {
           df.unpersist(blocking = false)
-          // localCheckpoint()ed entries store their blocks on the RDD, not
-          // the cache manager — unpersist alone would orphan them until
-          // GC. Traverse the WHOLE plan: the checkpoint may sit under a
-          // Union/Project (dedupLabels memoizes checkpointed-labels ∪
-          // singletons), not only at the root
-          df.queryExecution.logical.collect {
-            case lr: org.apache.spark.sql.execution.LogicalRDD =>
-              lr.rdd.unpersist(blocking = false)
-          }
+          // the WHOLE plan: the checkpoint may sit under a Union/Project
+          // (dedupLabels memoizes checkpointed-labels ∪ singletons), not
+          // only at the root
+          Lineage.release(df)
         }
         it.remove()
       }

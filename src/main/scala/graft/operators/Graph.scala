@@ -676,7 +676,9 @@ object Graph {
     * Scale: the textbook distributed walk — each step is ONE join of the
     * walk frontier onto the ranked adjacency keyed by the current
     * vertex; state is |V| rows throughout; the adjacency (with
-    * per-vertex neighbor ranks) is built once and reused across steps.
+    * per-vertex neighbor ranks) is pinned once and reused across steps,
+    * and the steps themselves run in the query's action, not as one
+    * eager job each at construction.
     */
   def randomWalks(spark: SparkSession, d: String, steps: Int = 4): DataFrame = {
     import spark.implicits._
@@ -684,27 +686,32 @@ object Graph {
     val edges = copurchaseEdges(spark, d).select($"p1", $"p2")
     val nb = edges.select($"p1".as("v"), $"p2".as("u"))
       .union(edges.select($"p2".as("v"), $"p1".as("u")))
-    // materialized once: reused by every step's join, and the checkpoint
-    // gives each step's self-join fresh attribute ids (no ambiguity)
+    // materialized once: the one pin every step's join re-reads
     val ranked = nb
       .withColumn("idx", row_number().over(
         Window.partitionBy($"v").orderBy($"u")).cast("long") - 1L)
       .withColumn("deg", count(lit(1)).over(Window.partitionBy($"v")))
       .cutLineage()
-    var walk = ranked.select($"v".as("start")).distinct()
-      .withColumn("cur", $"start")
-      .cutLineage()
+    // every vertex with a neighbor has exactly one idx = 0 row
+    var walk = ranked.filter($"idx" === 0L)
+      .select($"v".as("start"), $"v".as("cur"))
     for (t <- 1 to steps) {
+      // a per-step renamed projection: its aliases are fresh attribute
+      // ids, so joining the pin onto a walk that already read it is no
+      // self-join, and plain names resolve on one side only. The steps
+      // stay one lineage — the md5 pick is deterministic, so nothing
+      // needs freezing between them
+      val adj = ranked.select($"v".as("__v"), $"u".as("__u"),
+        $"idx".as("__idx"), $"deg".as("__deg"))
       val pick = pmod(md5Bits32(concat(lit("walk:"), $"start".cast("string"),
-        lit(s":$t:"), $"cur".cast("string")), 1), $"deg")
+        lit(s":$t:"), $"cur".cast("string")), 1), $"__deg")
       val keep = ($"start" +: (1 until t).map(i => col(s"v$i"))) :+
-        ranked("u").as(s"v$t")
+        $"__u".as(s"v$t")
       walk = walk
-        .join(ranked, $"cur" === ranked("v"))
-        .filter(ranked("idx") === pick)
+        .join(adj, $"cur" === $"__v")
+        .filter($"__idx" === pick)
         .select(keep: _*)
         .withColumn("cur", col(s"v$t"))
-        .cutLineage()
     }
     walk.select($"start".as("start_id") +: (1 to steps).map(i => col(s"v$i")): _*)
   }
@@ -744,9 +751,10 @@ object Graph {
     // releases as soon as its own checkpoint materializes, so nDf and
     // cands each re-ran the union+distinct lineage (measured: three
     // identical 64-task stages ≈ 42 of the query's 49 task-s)
-    val verts = Ranks.pinBase(edges.select($"p1".as("v"))
+    val pin = Ranks.pinBase(edges.select($"p1".as("v"))
       .union(edges.select($"p2".as("v"))).distinct())
-    val ranked = Ranks.globalRankPinned(verts, "r", $"v".asc)
+    val verts = pin.df
+    val ranked = Ranks.globalRankPinned(verts, pin.rows, "r", $"v".asc)
     val nDf = verts.agg(count(lit(1)).as("n"))
     val cands = verts
       .select($"v", explode(sequence(lit(0L), lit((m - 1).toLong))).as("draw"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Lineage
 import graft.core.Lineage.CutOps
 
 /** The two-phase distributed global rank — rankedVocab's machinery
@@ -18,7 +19,7 @@ import graft.core.Lineage.CutOps
   *     (|partitions| scalars, the A3 closed-over-scalar shape),
   *  4. global rank = local rank + partition offset.
   *
-  * The `localCheckpoint` pins the sampled range boundaries so the two
+  * The lineage cut pins the sampled range boundaries so the two
   * consumers (the count pass and the rank pass) see the SAME
   * partitioning — without it the range sampler may re-draw and offsets
   * would not match.
@@ -26,23 +27,27 @@ import graft.core.Lineage.CutOps
   * The order MUST be total (include a tiebreak key), or ranks at
   * partition boundaries become sampling-dependent.
   *
-  * Fixed cost per rank call = one input materialization + the range
-  * sample job + the range shuffle/checkpoint + the count collect
-  * (~0.5–1.5 s at sf0.1, amortizing constants at 100×). Queries that
-  * rank the SAME base several times (three RFM quartiles, a signal
-  * committee) should `pinBase` once and call the `*Pinned` forms so
-  * the input materialization is paid once, not per rank.
+  * Fixed cost per rank call = one counted input cut (a single job that
+  * materializes the input and returns the row count that prices the
+  * window/machinery dial) + on the machinery arm the range sample job,
+  * the range shuffle/checkpoint and the offsets collect (~0.5–1.5 s at
+  * sf0.1, amortizing constants at 100×). Queries that rank the SAME
+  * base several times (three RFM quartiles, a signal committee) should
+  * `pinBase` once and call the `*Pinned` forms with the pin's row count
+  * (k × rows for an unpivot of k metrics): the input cut is then paid
+  * once, and a pinned rank on the window arm runs no job at
+  * construction.
   */
 object Ranks {
 
   /** Eagerly materialize a base that several rank calls (or a rank
-    * call plus sibling aggregates over the same rows) will share.
-    * `localCheckpoint` both computes the lineage NOW and pins the
-    * result, so every consumer — the range sampler, the shuffle, a
-    * count — re-reads cached partitions instead of re-running the
-    * upstream plan.
+    * call plus sibling aggregates over the same rows) will share. The
+    * counted cut both computes the lineage NOW and pins the result, so
+    * every consumer — the range sampler, the shuffle, an aggregate —
+    * re-reads pinned partitions instead of re-running the upstream
+    * plan; its `rows` is what the `*Pinned` forms take as their n.
     */
-  def pinBase(df: DataFrame): DataFrame = df.cutLineage()
+  def pinBase(df: DataFrame): Lineage.Pin = Lineage.counted(df)
 
   /** Covering-class spans over a CLASS HISTOGRAM (`cnt` rows per
     * (groups, value) class): appends the inclusive prefix count `hi`,
@@ -139,7 +144,7 @@ object Ranks {
       prePinned: Boolean): DataFrame = {
     // the base feeds two consumers (the histogram and the final join) —
     // pin it so the upstream lineage runs once
-    val base = if (prePinned) df else pinBase(df)
+    val base = if (prePinned) df else pinBase(df).df
     val classes = base.groupBy(groups ++ values: _*)
       .agg(count(lit(1)).as("__cnt"))
     val classNames = classes.columns.dropRight(1).toSeq
@@ -193,12 +198,11 @@ object Ranks {
       order: Seq[Column]): DataFrame = {
     val spark = df.sparkSession
     val parts = spark.sparkContext.defaultParallelism
-    val input = df.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one cheap job: materializes the persist (the range sampler would
-    // have paid it anyway) and prices the small-side dial
-    val n = input.count()
-    if (takesWindowArm(spark, n)) {
+    // one job: the counted cut materializes the input (the range sampler
+    // would have paid it anyway) and its count prices the small-side dial
+    val pin = Lineage.counted(df)
+    val input = pin.df
+    if (takesWindowArm(spark, pin.rows)) {
       // |classes| fits one sorted scan task — the exclusive prefix sum
       // is a global-order window (one single-partition exchange over
       // histogram rows, never corpus rows); checkpoint pins the result
@@ -208,14 +212,14 @@ object Ranks {
       val out = input
         .withColumn(outCol, sum(col("__cnt")).over(w) - col("__cnt"))
         .cutLineage()
-      input.unpersist()
+      Lineage.release(input)
       return out
     }
     val parted = input
       .repartitionByRange(parts, order: _*)
       .withColumn("__pid", spark_partition_id())
       .cutLineage()
-    input.unpersist()
+    Lineage.release(input)
     val sizes = graft.core.Bounded.collect(
         parted.groupBy(col("__pid")).agg(sum(col("__cnt")).as("n")),
         parts.toLong, "prefixSum partition offsets (|partitions| rows)")
@@ -243,16 +247,20 @@ object Ranks {
     */
   def groupRowNumber(df: DataFrame, rankCol: String, groups: Seq[Column],
       order: Seq[Column]): DataFrame =
-    groupRowNumberImpl(df, rankCol, groups, order, prePinned = false)
+    groupRowNumberImpl(df, rankCol, groups, order, pinnedRows = None)
 
-  /** `groupRowNumber` over a `pinBase`-materialized input. */
-  def groupRowNumberPinned(df: DataFrame, rankCol: String,
+  /** `groupRowNumber` over a `pinBase`-materialized input of `rows` rows
+    * (or a narrow projection of one — k × the pin's rows for an unpivot
+    * of k metrics).
+    */
+  def groupRowNumberPinned(df: DataFrame, rows: Long, rankCol: String,
       groups: Seq[Column], order: Seq[Column]): DataFrame =
-    groupRowNumberImpl(df, rankCol, groups, order, prePinned = true)
+    groupRowNumberImpl(df, rankCol, groups, order, Some(rows))
 
   private def groupRowNumberImpl(df: DataFrame, rankCol: String,
-      groups: Seq[Column], order: Seq[Column], prePinned: Boolean): DataFrame = {
-    val gr = rankImpl(df, "__gr", groups ++ order, prePinned)
+      groups: Seq[Column], order: Seq[Column],
+      pinnedRows: Option[Long]): DataFrame = {
+    val gr = rankImpl(df, "__gr", groups ++ order, pinnedRows)
     val goff = gr.groupBy(groups: _*)
       .agg(min(col("__gr")).as("__goff"))
     val groupNames = goff.columns.dropRight(1).toSeq
@@ -305,28 +313,27 @@ object Ranks {
       isMax: Boolean, exclusive: Boolean): DataFrame = {
     val spark = df.sparkSession
     val parts = spark.sparkContext.defaultParallelism
-    val input = df.withColumn("__w", weight).persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // one job: the counted cut materializes the input (the range sampler
+    // would have paid that anyway) and its count prices the small-side
+    // dial
+    val pin = Lineage.counted(df.withColumn("__w", weight))
+    val input = pin.df
     def comb(c: Column) = if (isMax) max(c) else sum(c)
-    // the count prices the small-side dial AND materializes the persist
-    // (the range sampler would have paid that anyway)
-    if (takesWindowArm(spark, input.count())) {
+    if (takesWindowArm(spark, pin.rows)) {
       // the whole input fits sorted tasks: this IS the window form the
       // machinery decomposes (its scaladoc's "distributed replacement
       // for"), legitimate again because no group can exceed the pinned
-      // row bound; checkpoint keeps multi-consumer callers re-reading
-      val pinned = input.cutLineage()
-      input.unpersist()
+      // row bound; the pin keeps multi-consumer callers re-reading
       val w = Window.partitionBy(groups: _*).orderBy(order: _*)
         .rowsBetween(Window.unboundedPreceding,
           if (exclusive) -1 else Window.currentRow)
-      return pinned.withColumn(outCol, comb(col("__w")).over(w)).drop("__w")
+      return input.withColumn(outCol, comb(col("__w")).over(w)).drop("__w")
     }
     val parted = input
       .repartitionByRange(parts, groups ++ order: _*)
       .withColumn("__pid", spark_partition_id())
       .cutLineage()
-    input.unpersist()
+    Lineage.release(input)
     val cellNames = "__pid" +: groups.map(g =>
       parted.select(g).columns.head)
     val cells = parted.groupBy(col("__pid") +: groups: _*)
@@ -371,47 +378,49 @@ object Ranks {
 
   /** Append `rankCol` (1-based, long) under the given total order. */
   def globalRank(df: DataFrame, rankCol: String, order: Column*): DataFrame =
-    rankImpl(df, rankCol, order, prePinned = false)
+    rankImpl(df, rankCol, order, pinnedRows = None)
 
-  /** `globalRank` over a base already materialized via `pinBase` —
-    * skips the per-call persist (the range sampler and the shuffle
-    * both re-read the pinned partitions directly).
+  /** `globalRank` over a base already materialized via `pinBase` (or a
+    * narrow projection of one) holding `rows` rows — skips the per-call
+    * cut (the range sampler and the shuffle both re-read the pinned
+    * partitions directly) and, on the window arm, runs no job.
     */
-  def globalRankPinned(df: DataFrame, rankCol: String, order: Column*): DataFrame =
-    rankImpl(df, rankCol, order, prePinned = true)
+  def globalRankPinned(df: DataFrame, rows: Long, rankCol: String,
+      order: Column*): DataFrame =
+    rankImpl(df, rankCol, order, Some(rows))
 
   private def rankImpl(df: DataFrame, rankCol: String, order: Seq[Column],
-      prePinned: Boolean): DataFrame = {
+      pinnedRows: Option[Long]): DataFrame = {
     val spark = df.sparkSession
     val parts = spark.sparkContext.defaultParallelism
     // repartitionByRange SAMPLES its input in a separate job before the
-    // shuffle — without a cache the upstream lineage runs twice (sample
-    // + shuffle). Pin it for the pair, release once the checkpoint has
-    // materialized. A pre-pinned input (pinBase / a prior rank's
-    // checkpoint) is already cheap to re-read — skip the persist.
-    val input =
-      if (prePinned) df
-      else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the count prices the small-side dial AND materializes the persist
-    // (the range sampler would have paid that anyway)
-    val n = input.count()
+    // shuffle — without a pin the upstream lineage runs twice (sample
+    // + shuffle). The counted cut pins it in one job whose count prices
+    // the small-side dial; its blocks are released once the range
+    // checkpoint has materialized. A pre-pinned input (pinBase / a
+    // prior rank's checkpoint) is already cheap to re-read and arrives
+    // with its count — no job at all.
+    val (input, n) = pinnedRows match {
+      case Some(rows) => (df, rows)
+      case None =>
+        val pin = Lineage.counted(df)
+        (pin.df, pin.rows)
+    }
     if (takesWindowArm(spark, n)) {
-      // the whole input fits one sorted task: pin it (its consumers —
-      // the offset aggregate and the final join in the group forms —
-      // re-read the checkpoint) and rank with one global-order window
-      // (one single-partition exchange of ≤ windowMaxRows slim rows);
-      // under the required total order this is the machinery's
-      // local-rank + offset, bit for bit
-      val pinned = if (prePinned) input else input.cutLineage()
-      if (!prePinned) input.unpersist()
-      return pinned.withColumn(rankCol,
+      // the whole input fits one sorted task: rank the pinned input (its
+      // consumers — the offset aggregate and the final join in the group
+      // forms — re-read the pin) with one global-order window (one
+      // single-partition exchange of ≤ windowMaxRows slim rows); under
+      // the required total order this is the machinery's local-rank +
+      // offset, bit for bit
+      return input.withColumn(rankCol,
         row_number().over(Window.orderBy(order: _*)).cast("long"))
     }
     val parted = input
       .repartitionByRange(parts, order: _*)
       .withColumn("__pid", spark_partition_id())
       .cutLineage()
-    if (!prePinned) input.unpersist()
+    if (pinnedRows.isEmpty) Lineage.release(input)
     val sizes = graft.core.Bounded.collect(
         parted.groupBy(col("__pid")).agg(count(lit(1)).as("n")),
         parts.toLong, "groupRowNumber partition offsets (|partitions| rows)")

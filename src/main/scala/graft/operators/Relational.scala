@@ -1263,7 +1263,7 @@ object Relational {
         .agg(count(lit(1)).as("cnt"))
     val hist = Ranks.pinBase(
       dfHist(lineitem(spark, d), "lineitem.l_partkey", "l_partkey")
-        .unionByName(dfHist(events(spark, d), "events.user_id", "user_id")))
+        .unionByName(dfHist(events(spark, d), "events.user_id", "user_id"))).df
     // both percentiles from ONE pass over the spanned histogram
     val picks = Ranks.pickPercentiles(
       Ranks.classSpans(hist, Seq($"relation"), $"df", $"cnt"),

@@ -566,7 +566,7 @@ object Sampling {
     import spark.implicits._
     val hist = Ranks.pinBase(hashSplit(spark, d)
       .join(documents(spark, d).select($"doc_id", $"n_chars"), "doc_id")
-      .groupBy($"split", $"n_chars").agg(count(lit(1)).as("cnt")))
+      .groupBy($"split", $"n_chars").agg(count(lit(1)).as("cnt"))).df
     val counts = hist.groupBy($"split")
       .agg(sum($"cnt").as("n"), sum($"n_chars" * $"cnt").as("tot"))
     val picks = Ranks.pickPercentiles(

@@ -682,7 +682,7 @@ object Similarity {
         cosineFromParts(dotPreQ($"q_qemb", $"qemb"), $"q_n2", $"n2").as("cos"))
     // pinned: the top-k heap aggregate AND the candidate-volume count
     // both read the scored union without re-running the two joins
-    val all = Ranks.pinBase(brute.unionByName(leveled))
+    val all = Ranks.pinBase(brute.unionByName(leveled)).df
     // per-(budget, query) top-k via the native bounded-heap aggregate
     // (map-side partial heaps, shuffle carries ≤ partitions·k rows per
     // group) — replaces a full rank of every scored candidate. The

@@ -1555,7 +1555,7 @@ object Text {
     // shuffled again after the first combine.
     val hist = graft.operators.Ranks.pinBase(
       documents(spark, d).groupBy($"source", $"n_chars".as("x"))
-        .agg(count(lit(1)).as("cnt")))
+        .agg(count(lit(1)).as("cnt"))).df
     // weighted median over a class histogram: inclusive prefix counts
     // give each class its rank span [lo, hi]; the middle ranks
     // (n+1)/2, (n+2)/2 select 1–2 covering classes, and the weighted
@@ -1583,7 +1583,7 @@ object Text {
     val devHist = graft.operators.Ranks.pinBase(
       hist.join(broadcast(med), "source")
         .withColumn("dev", abs($"x".cast("double") - $"median_chars"))
-        .groupBy($"source", $"dev").agg(sum($"cnt").as("cnt")))
+        .groupBy($"source", $"dev").agg(sum($"cnt").as("cnt"))).df
     val mad = medianOfHist(devHist, "dev", "mad_chars")
     devHist.join(broadcast(med), "source").join(broadcast(mad), "source")
       .groupBy($"source")
@@ -2121,7 +2121,7 @@ object Text {
     val sig = graft.operators.Ranks.pinBase(qualityScore(spark, d)
       .select($"doc_id", $"stop_ratio", $"alpha_ratio")
       .join(tokenEntropy(spark, d).select($"doc_id", $"entropy_q"), "doc_id")
-      .join(documents(spark, d).select($"doc_id", $"lang"), "doc_id"))
+      .join(documents(spark, d).select($"doc_id", $"lang"), "doc_id")).df
     val stacked = sig.select($"doc_id", $"lang", expr(
       """stack(3, 'r_stop', stop_ratio, 'r_alpha', alpha_ratio,
         |  'r_ent', cast(entropy_q AS double)) AS (sig_name, v)"""

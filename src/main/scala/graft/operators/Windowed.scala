@@ -191,15 +191,16 @@ object Windowed {
     */
   def funnelLatency(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val conv = Ranks.pinBase(funnelStages(spark, d).filter($"stage" === 3L)
+    val pin = Ranks.pinBase(funnelStages(spark, d).filter($"stage" === 3L)
       .select($"user_id", ($"t2" - $"t1").as("d_vc"),
         ($"t3" - $"t2").as("d_cp"), ($"t3" - $"t1").as("d_vp")))
+    val conv = pin.df
     val stacked = conv.select($"user_id", expr(
       """stack(3,
         |  'view_to_click', d_vc,
         |  'click_to_purchase', d_cp,
         |  'view_to_purchase', d_vp) AS (metric, dur_us)""".stripMargin))
-    val durs = Ranks.groupRowNumberPinned(stacked, "rn",
+    val durs = Ranks.groupRowNumberPinned(stacked, 3L * pin.rows, "rn",
       Seq($"metric"), Seq($"dur_us", $"user_id"))
     // ONE map-side-combined aggregate carries counts, extremes, sums
     // AND both percentile picks (`max(when(rn = target))` — the q174
@@ -423,12 +424,13 @@ object Windowed {
 
   def sessionStats(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val s = Ranks.pinBase(sessionize(spark, d))
-    // n as a driver scalar off the pinned partitions (the same A3
+    val pin = Ranks.pinBase(sessionize(spark, d))
+    val s = pin.df
+    // n as a driver scalar, counted by the pin's own job (the same A3
     // closed-over-scalar shape the rank machine uses for its offsets):
     // it prices the percentile TARGET ranks as plan literals, so no
     // scalar subquery or 1-row crossJoin has to carry them
-    val n = s.count()
+    val n = pin.rows
     val t50 = (50L * n + 99L) / 100L
     val t90 = (90L * n + 99L) / 100L
     // both percentile metrics UNPIVOT into one (metric, v) stream ranked
@@ -438,7 +440,7 @@ object Windowed {
     // events n+1..2n — and groupRowNumber's offset join disappears.
     val stacked = s.select($"user_id", $"session_seq", expr(
       "stack(2, 'events', n_events, 'duration', duration_us) AS (metric, v)"))
-    val ranked = Ranks.globalRankPinned(stacked, "gr",
+    val ranked = Ranks.globalRankPinned(stacked, 2L * n, "gr",
       $"metric", $"v", $"user_id", $"session_seq")
     // ONE aggregate computes the whole datasheet: counts/sums read the
     // events rows (v IS n_events there; session_seq = 0 marks each user
@@ -492,7 +494,7 @@ object Windowed {
     */
   def watermarkAdvisor(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val late = Ranks.pinBase(
+    val pin = Ranks.pinBase(
       Ranks.groupRunningMaxExcl(
           events(spark, d)
             .select($"event_type", $"event_id", unix_micros($"ts").as("tsu")),
@@ -500,12 +502,13 @@ object Windowed {
         .withColumn("late_us",
           greatest(lit(0L), coalesce($"__rmax", $"tsu") - $"tsu"))
         .drop("__rmax"))
+    val late = pin.df
     // per-type row counts only — broadcast so every ranked row knows its
     // percentile targets; counts, the out-of-order sum, the max AND both
     // picks then fold in ONE map-side-combined aggregate (the q174
     // trick — the old form re-read the ranked stream three times)
     val counts = late.groupBy($"event_type").agg(count(lit(1)).as("n"))
-    Ranks.groupRowNumberPinned(late, "rn",
+    Ranks.groupRowNumberPinned(late, pin.rows, "rn",
         Seq($"event_type"), Seq($"late_us", $"event_id"))
       .join(broadcast(counts), "event_type")
       .groupBy($"event_type")
@@ -955,13 +958,14 @@ object Windowed {
     // (metric is a group key — one rank machine instead of three, no
     // chains), then pivot back onto the unique user key; the purchase
     // aggregate runs exactly once
-    val base = Ranks.pinBase(u.crossJoin(broadcast(mx))
+    val pin = Ranks.pinBase(u.crossJoin(broadcast(mx))
       .select($"user_id", ($"mx" - $"last_dy").as("recency_days"),
         $"frequency", $"monetary_c"))
+    val base = pin.df
     val stacked = base.select($"user_id", expr(
       """stack(3, 'rn_r', recency_days, 'rn_f', frequency,
         |  'rn_m', monetary_c) AS (metric, v)""".stripMargin))
-    val ranks = Ranks.groupRowNumberPinned(stacked, "rn",
+    val ranks = Ranks.groupRowNumberPinned(stacked, 3L * pin.rows, "rn",
         Seq($"metric"), Seq($"v", $"user_id"))
       .groupBy($"user_id").pivot("metric", Seq("rn_r", "rn_f", "rn_m"))
       .agg(first($"rn"))

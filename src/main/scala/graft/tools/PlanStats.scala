@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Regenerates PLANSTATS.md — a one-row-per-query audit of physical-plan
   * shape across the ENTIRE query surface: shuffle count, scans, parquet
-  * re-scans, join strategies, nested-loop/cartesian occurrences and
-  * SortAggregates.
+  * re-scans, join strategies, nested-loop/cartesian occurrences,
+  * SortAggregates, and the Spark jobs construction runs.
   * The grep-able complement to PLANS.md's full dumps: a regression that
   * turns a broadcast join into a nested loop, or doubles a query's
   * exchanges, shows up as a diff in this table.
@@ -17,6 +17,32 @@ import org.apache.spark.sql.SparkSession
   * joins to broadcast at run time, so the table is conservative).
   */
 object PlanStats {
+  /** Run `body` and count the Spark jobs it starts on this thread (and on
+    * the threads Spark starts for it), by a job tag read back through a
+    * listener once the bus has drained.
+    */
+  private[graft] def jobsRun[T](spark: SparkSession)(body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = s"graft-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag))) jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try {
+      val r = body
+      ScaleSweep.drainBus(spark)
+      (r, jobs.get)
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val d = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val spark = SparkSession.builder()
@@ -49,14 +75,20 @@ object PlanStats {
     out.println("joins and declared self-joins also show here, so a row is a lead, not a")
     out.println("verdict. `sortagg` counts SortAggregate operators, which a struct- or")
     out.println("array-buffered aggregate falls back to, sorting its whole input.")
+    out.println("`cjobs` counts the Spark jobs run while `SparkEntry.queries(q)` builds")
+    out.println("the frame, in this table's order on one session: a memo build is")
+    out.println("charged to the first query that touches it.")
     out.println()
-    out.println("| query | shuffles | scans | rescans | bhj | smj | bnlj | sortagg |")
-    out.println("|---|---|---|---|---|---|---|---|")
+    out.println("| query | shuffles | scans | rescans | bhj | smj | bnlj | sortagg | cjobs |")
+    out.println("|---|---|---|---|---|---|---|---|---|")
     // the file each parquet scan reads, from its Location metadata
     val scanFile = "Scan parquet [^\\n]*?/(\\w+)\\.parquet".r
+    var totalCjobs = 0
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val p = fn(spark, d).queryExecution.executedPlan.toString
+        val (df, cjobs) = jobsRun(spark)(fn(spark, d))
+        totalCjobs += cjobs
+        val p = df.queryExecution.executedPlan.toString
         def c(pat: String) = pat.r.findAllIn(p).length
         val shuffles = c("(?m)^\\s*[+:]*-? ?Exchange hashpartitioning") +
           c("(?m)Exchange rangepartitioning") + c("Exchange SinglePartition")
@@ -65,14 +97,16 @@ object PlanStats {
         out.println(s"| $name | $shuffles | ${c("Scan parquet")} | $rescans | " +
           s"${c("BroadcastHashJoin")} | ${c("SortMergeJoin")} | " +
           s"${c("BroadcastNestedLoopJoin") + c("CartesianProduct")} | " +
-          s"${c("SortAggregate")} |")
+          s"${c("SortAggregate")} | $cjobs |")
       } catch {
         case e: Throwable =>
-          out.println(s"| $name | ERR ${e.getClass.getSimpleName} | | | | | | |")
+          out.println(s"| $name | ERR ${e.getClass.getSimpleName} | | | | | | | |")
       }
     }
+    out.println()
+    out.println(s"Construction jobs over the catalog: $totalCjobs.")
     out.close()
-    println("wrote PLANSTATS.md")
+    println(s"wrote PLANSTATS.md (construction jobs: $totalCjobs)")
     spark.stop()
   }
 }

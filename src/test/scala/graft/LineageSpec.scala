@@ -56,24 +56,38 @@ class LineageSpec extends AnyFunSuite {
     import spark.implicits._
     val df = spark.range(1000).select($"id", ($"id" % 7).as("k"))
       .repartition(5, $"k")
+    val n = df.count()
     val localArm = Lineage.cut(df)
-    val dir = Files.createTempDirectory("graft_reliable_ckpt")
-    spark.conf.set(Lineage.ConfKey, dir.toString)
-    val reliableArm =
-      try Lineage.cut(df)
-      finally spark.conf.unset(Lineage.ConfKey)
-    assert(canon(localArm) == canon(reliableArm))
-    assert(localArm.rdd.getNumPartitions == reliableArm.rdd.getNumPartitions)
-    // the reliable arm must be file-backed (that IS the recoverability
-    // claim): setCheckpointDir minted a UUID subdir holding rdd-* data
-    val files = Files.walk(dir).iterator()
-    var sawPart = false
-    while (files.hasNext) {
-      val f = files.next()
-      if (f.getFileName.toString.startsWith("part-")) sawPart = true
+    // the plain cut, and the counted cut with its row count checked
+    val cuts: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "cut" -> (d => Lineage.cut(d)),
+      "counted" -> { d =>
+        val pin = Lineage.counted(d)
+        assert(pin.rows == n, s"counted cut: ${pin.rows} rows, want $n")
+        pin.df
+      })
+    for ((name, cut) <- cuts) {
+      val local = cut(df)
+      val dir = Files.createTempDirectory("graft_reliable_ckpt")
+      spark.conf.set(Lineage.ConfKey, dir.toString)
+      val reliableArm =
+        try cut(df)
+        finally spark.conf.unset(Lineage.ConfKey)
+      assert(canon(localArm) == canon(local), name)
+      assert(canon(localArm) == canon(reliableArm), name)
+      assert(localArm.rdd.getNumPartitions == local.rdd.getNumPartitions, name)
+      assert(localArm.rdd.getNumPartitions == reliableArm.rdd.getNumPartitions, name)
+      // the reliable arm must be file-backed (that IS the recoverability
+      // claim): setCheckpointDir minted a UUID subdir holding rdd-* data
+      val files = Files.walk(dir).iterator()
+      var sawPart = false
+      while (files.hasNext) {
+        val f = files.next()
+        if (f.getFileName.toString.startsWith("part-")) sawPart = true
+      }
+      assert(sawPart, s"$name: no checkpoint part files under $dir")
+      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile): Unit
     }
-    assert(sawPart, s"no checkpoint part files under $dir")
-    org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile): Unit
   }
 
   test("static-side pin: cache preserves a repartition's hash " +

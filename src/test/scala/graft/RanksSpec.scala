@@ -138,8 +138,10 @@ class RanksSpec extends AnyFunSuite {
   test("pinned forms are value-identical to the unpinned forms") {
     import spark.implicits._
     val df = fixture
-    val base = Ranks.pinBase(df)
-    val a = Ranks.globalRankPinned(base, "r", $"v", $"id")
+    val pin = Ranks.pinBase(df)
+    assert(pin.rows === 500L)
+    val base = pin.df
+    val a = Ranks.globalRankPinned(base, pin.rows, "r", $"v", $"id")
       .select($"id", $"r").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val b = Ranks.globalRank(df, "r", $"v", $"id")
       .select($"id", $"r").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -252,6 +254,35 @@ class RanksSpec extends AnyFunSuite {
       assert(small.sameElements(big),
         s"$name: dial arms diverge — ${small.take(3).mkString(";")} vs ${big.take(3).mkString(";")}")
     }
+  }
+
+  test("machinery arm releases its input pin once the range table is cut") {
+    import spark.implicits._
+    // the counted input cut is needed only until `parted` is cut; after
+    // a rank and its action the only new persisted RDD is `parted`
+    val df = spark.range(5000).select(
+      (pmod(hash($"id"), lit(10L)) < 9L).cast("int").as("g"),
+      pmod(hash($"id", lit(1)), lit(97L)).as("v"),
+      $"id".as("rid"))
+    val machines: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      "globalRank" -> (in => Ranks.globalRank(in, "r", $"v".asc, $"rid".asc)),
+      "groupRowNumber" -> (in => Ranks.groupRowNumber(in, "r",
+        Seq($"g"), Seq($"v", $"rid"))),
+      "groupRunningSum" -> (in => Ranks.groupRunningSum(in, "r",
+        Seq($"g"), Seq($"v", $"rid"), $"v")),
+      "groupRunningMaxExcl" -> (in => Ranks.groupRunningMaxExcl(in, "r",
+        Seq($"g"), Seq($"v", $"rid"), $"v")))
+    spark.conf.set("spark.graft.rank.windowMaxRows", "0")
+    try {
+      for ((name, make) <- machines) {
+        // new ids, not a size difference: the cleaner dropping an older
+        // leg's RDD mid-leg must not hide one this leg left behind
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        assert(make(df).count() === 5000L)
+        val grown = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+        assert(grown <= 1, s"$name: $grown persisted RDDs left behind, want <= 1")
+      }
+    } finally spark.conf.unset("spark.graft.rank.windowMaxRows")
   }
 
   test("dial bound 0 forces the machinery even on an EMPTY input") {
