@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Lineage
 import graft.core.Lineage.CutOps
 import graft.plans.LexExtreme.lexMax
 import graft.core.Tables._
@@ -322,24 +323,23 @@ object Graph {
         .select($"v".as("x"), $"m".as("y"))
         .distinct()
     }
-    var edges = edges0.select($"x", $"y")
+    val start = Lineage.counted(edges0.select($"x", $"y")
       .filter($"x" =!= $"y")
       .select(greatest($"x", $"y").as("x"), least($"x", $"y").as("y"))
-      .distinct()
-      .cutLineage()
+      .distinct())
+    var edges = start.df
     var round = 0
     var stable = false
-    var edgeCount = edges.count()
+    var edgeCount = start.rows
     while (!stable && round < maxRounds) {
-      val next = smallStar(largeStar(edges)).cutLineage()
+      val next = Lineage.counted(smallStar(largeStar(edges)))
       // fixpoint = the directed-canonical edge SETS are equal; both are
       // distinct by construction, so equality ⟺ same cardinality AND an
-      // empty one-sided difference — one count (cheap on the checkpoint)
-      // + one anti-join job per round, not two exceptAll jobs
-      val nextCount = next.count()
-      stable = nextCount == edgeCount && next.exceptAll(edges).isEmpty
-      edges = next
-      edgeCount = nextCount
+      // empty one-sided difference — the cut's own count + one anti-join
+      // job per round, not two exceptAll jobs
+      stable = next.rows == edgeCount && next.df.exceptAll(edges).isEmpty
+      edges = next.df
+      edgeCount = next.rows
       round += 1
     }
     // non-star edges at this point would put a node on the hi side of
@@ -433,11 +433,12 @@ object Graph {
     def degrees(e: DataFrame): DataFrame =
       e.select($"p1".as("id")).union(e.select($"p2".as("id")))
         .groupBy($"id").agg(count(lit(1)).as("deg"))
-    var edges = edges0.select($"p1", $"p2").cutLineage()
+    val start = Lineage.counted(edges0.select($"p1", $"p2"))
+    var edges = start.df
     // carry the surviving-edge count across rounds: the stability test
-    // needs |next| vs |edges|, and |edges| is last round's |next| — one
-    // count job per round instead of two
-    var edgeCount = edges.count()
+    // needs |next| vs |edges|, and |edges| is last round's |next| — the
+    // counted cut's own job is the only one per round
+    var edgeCount = start.rows
     var round = 0
     var stable = false
     while (!stable && round < maxRounds) {
@@ -446,15 +447,13 @@ object Graph {
       // every round, so there is no static side to pin, and the cut
       // reports UnknownPartitioning under AQE (LineageSpec's cache-arm
       // canary documents which form the CC pins ride instead).
-      val next = edges
+      val next = Lineage.counted(edges
         .join(keep.select($"id".as("p1")), Seq("p1"), "left_semi")
         .join(keep.select($"id".as("p2")), Seq("p2"), "left_semi")
-        .select($"p1", $"p2")
-        .cutLineage()
-      val nextCount = next.count()
-      stable = nextCount == edgeCount
-      edgeCount = nextCount
-      edges = next
+        .select($"p1", $"p2"))
+      stable = next.rows == edgeCount
+      edgeCount = next.rows
+      edges = next.df
       round += 1
     }
     require(stable, s"k-core peel did not converge in $maxRounds rounds")
@@ -591,13 +590,12 @@ object Graph {
     while (!done && round < maxRounds) {
       val cand = nb.join(frontier, nb("z") === frontier("id"))
         .select($"x".as("id"), ($"hops" + 1L).as("hops"))
-      val fresh = cand.join(dist, Seq("id"), "left_anti")
-        .groupBy($"id").agg(min($"hops").as("hops"))
-        .cutLineage()
-      if (fresh.isEmpty) done = true
+      val fresh = Lineage.counted(cand.join(dist, Seq("id"), "left_anti")
+        .groupBy($"id").agg(min($"hops").as("hops")))
+      if (fresh.rows == 0) done = true
       else {
-        dist = dist.union(fresh).cutLineage()
-        frontier = fresh
+        dist = dist.union(fresh.df).cutLineage()
+        frontier = fresh.df
       }
       round += 1
     }

@@ -15,8 +15,9 @@ import graft.core.Lineage.CutOps
   *  1. `repartitionByRange` on the order columns (a sampled range
   *     shuffle — each partition owns a contiguous slice of the order),
   *  2. per-partition `row_number` (parallel local sorts),
-  *  3. driver-collected partition row counts → prefix offsets
-  *     (|partitions| scalars, the A3 closed-over-scalar shape),
+  *  3. partition row counts folded to the driver in one narrow job
+  *     over the cut → prefix offsets (|partitions| scalars, the A3
+  *     closed-over-scalar shape),
   *  4. global rank = local rank + partition offset.
   *
   * The lineage cut pins the sampled range boundaries so the two
@@ -30,7 +31,7 @@ import graft.core.Lineage.CutOps
   * Fixed cost per rank call = one counted input cut (a single job that
   * materializes the input and returns the row count that prices the
   * window/machinery dial) + on the machinery arm the range sample job,
-  * the range shuffle/checkpoint and the offsets collect (~0.5–1.5 s at
+  * the range shuffle/checkpoint and the offsets fold (~0.5–1.5 s at
   * sf0.1, amortizing constants at 100×). Queries that rank the SAME
   * base several times (three RFM quartiles, a signal committee) should
   * `pinBase` once and call the `*Pinned` forms with the pin's row count
@@ -206,7 +207,11 @@ object Ranks {
       // |classes| fits one sorted scan task — the exclusive prefix sum
       // is a global-order window (one single-partition exchange over
       // histogram rows, never corpus rows); checkpoint pins the result
-      // for its two consumers exactly like the machinery path
+      // for its two consumers exactly like the machinery path.
+      // Declared single-partition window: the counted pin proves the
+      // input holds ≤ windowMaxRows rows, so Spark's "No Partition
+      // Defined for Window" WARN from this line is expected and bounded
+      // (PlanShapeSpec pins that the arm appears only under the bound)
       val w = Window.orderBy(order: _*)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val out = input
@@ -220,12 +225,8 @@ object Ranks {
       .withColumn("__pid", spark_partition_id())
       .cutLineage()
     Lineage.release(input)
-    val sizes = graft.core.Bounded.collect(
-        parted.groupBy(col("__pid")).agg(sum(col("__cnt")).as("n")),
-        parts.toLong, "prefixSum partition offsets (|partitions| rows)")
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets: Map[Int, Long] = sizes.map(_._1)
-      .zip(sizes.scanLeft(0L)(_ + _._2)).toMap
+    val offsets = partitionOffsets(parted, "__pid", Some("__cnt"), parts,
+      "prefixSum partition offsets (|partitions| rows)")
     val w = Window.partitionBy(col("__pid")).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     parted
@@ -359,6 +360,25 @@ object Ranks {
       .drop("__pid", "__w", "__off")
   }
 
+  /** Exclusive offsets by partition id of a range-cut table: pid → the
+    * total `weight` (or row count when `weight` is None) of every lower
+    * pid. One narrow fold over the cut, not an aggregate + collect — the
+    * cut is already materialized, so the totals need no shuffle.
+    */
+  private[graft] def partitionOffsets(parted: DataFrame, pid: String,
+      weight: Option[String], parts: Int, what: String): Map[Int, Long] = {
+    val totals = graft.core.Bounded.fold(
+        parted.select(col(pid) +: weight.toSeq.map(col): _*),
+        new graft.core.Bounded.Sums[Int](parts.toLong))(
+        (s, r) => s.add(r.getInt(0),
+          if (weight.isEmpty) null else r.getAs[java.lang.Long](1)),
+        _ merge _)
+      .result(what)
+    val sizes = totals.toSeq.map { case (p, (sum, rows)) =>
+      (p, if (weight.isEmpty) rows else sum.longValue) }.sortBy(_._1)
+    sizes.map(_._1).zip(sizes.scanLeft(0L)(_ + _._2)).toMap
+  }
+
   /** Null-safe equi-join on shared key column NAMES: the right side's
     * keys are renamed and matched with `<=>` so NULL keys pair up
     * (window ranks order nulls first; a plain using-join would
@@ -412,7 +432,10 @@ object Ranks {
       // forms — re-read the pin) with one global-order window (one
       // single-partition exchange of ≤ windowMaxRows slim rows); under
       // the required total order this is the machinery's local-rank +
-      // offset, bit for bit
+      // offset, bit for bit. Declared single-partition window: n is the
+      // pin's row count, ≤ windowMaxRows, so Spark's "No Partition
+      // Defined for Window" WARN from this line is expected and bounded
+      // (PlanShapeSpec pins that the arm appears only under the bound)
       return input.withColumn(rankCol,
         row_number().over(Window.orderBy(order: _*)).cast("long"))
     }
@@ -421,12 +444,8 @@ object Ranks {
       .withColumn("__pid", spark_partition_id())
       .cutLineage()
     if (pinnedRows.isEmpty) Lineage.release(input)
-    val sizes = graft.core.Bounded.collect(
-        parted.groupBy(col("__pid")).agg(count(lit(1)).as("n")),
-        parts.toLong, "groupRowNumber partition offsets (|partitions| rows)")
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets: Map[Int, Long] = sizes.map(_._1)
-      .zip(sizes.scanLeft(0L)(_ + _._2)).toMap
+    val offsets = partitionOffsets(parted, "__pid", None, parts,
+      "groupRowNumber partition offsets (|partitions| rows)")
     parted
       .withColumn(rankCol, row_number().over(
         Window.partitionBy(col("__pid")).orderBy(order: _*)).cast("long")

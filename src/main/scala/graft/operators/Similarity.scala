@@ -564,7 +564,7 @@ object Similarity {
     }
   }
 
-  private def assignTo(c: DataFrame, cents: Array[(Long, Seq[Long])]): DataFrame = {
+  private[graft] def assignTo(c: DataFrame, cents: Array[(Long, Seq[Long])]): DataFrame = {
     import c.sparkSession.implicits._
     // argmin assignment rides the same dial as the probe primitive:
     // below it, the literal array_min (scan-stage, the catalog plan);
@@ -590,10 +590,11 @@ object Similarity {
 
   /** Lloyd's trainer: seed with the k lowest vec_ids, run `updates`
     * (assign → re-quantized-mean) rounds, return the centroid matrix —
-    * k·dims longs on the driver, the bounded collect MLlib's KMeans also
-    * does each round. Memo-shared per (dir, k, updates): q62, q67 and
-    * q91 all train the same (8, 2) quantizer, so the scan+agg rounds run
-    * ONCE per session and later callers collect the tiny cached table.
+    * k·dims longs on the driver, the bounded reduction MLlib's KMeans
+    * also does each round (here one narrow fold per round, `lloydStep`).
+    * Memo-shared per (dir, k, updates): q62, q67 and q91 all train the
+    * same (8, 2) quantizer, so the rounds run ONCE per session and later
+    * callers collect the tiny cached table.
     */
   /** q185: IVF list-balance audit — the index-ops datasheet behind the
     * q125/q155 IVF deployments: assign EVERY corpus vector to its
@@ -771,17 +772,38 @@ object Similarity {
     if (cents.isEmpty) return cents
     val dims = cents(0)._2.length.toLong
     for (_ <- 1 to updates) {
-      val rows = graft.core.Bounded.collect(
-        assignTo(c, cents)
-          .select($"cluster", posexplode($"qemb").as(Seq("i", "q")))
-          .groupBy($"cluster", $"i")
-          .agg(round(sum($"q").cast("double") / count(lit(1))).cast("long").as("cq")),
-        k * dims, "lloydCentroids update (k·dims rows)")
-      cents = rows.groupBy(_.getLong(0)).map { case (cid, rs) =>
-        (cid, rs.sortBy(_.getInt(1)).map(_.getLong(2)).toSeq)
+      cents = lloydStep(c, cents, k * dims).toSeq.groupBy(_._1._1).map {
+        case (cid, cells) => (cid, cells.sortBy(_._1._2).map(_._2.longValue))
       }.toArray
     }
     cents
+  }
+
+  /** One Lloyd update as one narrow fold over the assigned corpus:
+    * (cluster, dim) → the re-quantized mean round(Σq / rows) (Spark's
+    * `round(double)`: HALF_UP on the double's decimal form), the
+    * semantics of the (cluster, dim) `sum / count(1)` aggregate it
+    * replaces — a NULL cell counts its row and adds nothing, a cell
+    * whose values are all NULL keeps a NULL mean, an overflowing sum
+    * throws, and more than `bound` (k·dims) cells fail the bound.
+    */
+  private[graft] def lloydStep(c: DataFrame, cents: Array[(Long, Seq[Long])],
+      bound: Long): Map[(Long, Int), java.lang.Long] = {
+    import c.sparkSession.implicits._
+    graft.core.Bounded.fold(assignTo(c, cents).select($"cluster", $"qemb"),
+        new graft.core.Bounded.Sums[(Long, Int)](bound))({ (s, r) =>
+        val cid = r.getLong(0)
+        val q = r.getSeq[java.lang.Long](1)
+        var i = 0
+        while (i < q.length) { s.add((cid, i), q(i)); i += 1 }
+        s
+      }, _ merge _)
+      .result("lloydCentroids update (k·dims rows)")
+      .map { case (cell, (sum, rows)) =>
+        cell -> (if (sum eq null) null else java.lang.Long.valueOf(
+          java.math.BigDecimal.valueOf(sum.doubleValue / rows.toDouble)
+            .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue.toLong))
+      }
   }
 
   /** IVF ANN with a TRAINED coarse quantizer: the inverted lists come
@@ -791,8 +813,8 @@ object Similarity {
     * probe the `nProbe` nearest lists and are scored exactly (quantized
     * cosine) against only those lists' members.
     *
-    * Scale: training cost is `updates` scan+agg rounds (centroid matrix
-    * driver-bounded); assignment and probe selection are scan-stage
+    * Scale: training cost is `updates` one-job fold rounds (centroid
+    * matrix driver-bounded); assignment and probe selection are scan-stage
     * argmins over literal centroids — no join; the candidate join hash
     * partitions on list id and touches ~nProbe/nLists of the corpus per
     * query. Whole pipeline (training trajectory included) is mirrored by
@@ -985,11 +1007,11 @@ object Similarity {
     * `targetLabel`, trained for `epochs` synchronous epochs. Per epoch,
     * every vector's margin y·⟨w, x⟩ is a scan-stage integer dot against
     * the broadcast weight vector; misclassified vectors (margin ≤ 0)
-    * contribute y·x to one map-side-combined update aggregate; the new
-    * 64-long weight vector collects to the driver (the Lloyd-loop
-    * shape — bounded by dims, never by data). Output: per-label positive
-    * prediction counts under the final weights — the probe's confusion
-    * structure.
+    * contribute y·x to one update fold (`probeStep`: one job, no
+    * exchange) whose 64-long partials merge on the driver (the
+    * Lloyd-loop shape — bounded by dims·partitions, never by data).
+    * Output: per-label positive prediction counts under the final
+    * weights — the probe's confusion structure.
     *
     * Exactness: embeddings re-quantize to 1e3 (coarser than the cosine
     * family's 1e7 — weights are SUMS of ±x over epochs, and the margin
@@ -1015,26 +1037,93 @@ object Similarity {
         transform($"embedding", x => round(x.cast("double") * lit(1000.0)).cast("long")).as("x3"),
         when($"label" === targetLabel, 1L).otherwise(-1L).as("y"))
     }
-    val dims = graft.core.Scalars.headOption(ex.select(size($"x3")))
-      .map(_.getInt(0)).getOrElse(0)
+    val yx = ex.select($"y", $"x3") // planned once, folded every epoch
+    // the first epoch's fold also reads dims (the first row's width), so
+    // no probe job runs ahead of it
+    val start = probeStep(yx, None)
+    val dims = math.max(start.first, 0)
     var w: Seq[Long] = Seq.fill(dims)(0L)
-    for (_ <- 1 to epochs) {
+    for (epoch <- 1 to epochs) {
       // margin of w=0 is 0 ⇒ epoch 1 updates on every vector (batch
       // perceptron convention; the first weight vector is the signed
       // class-sum direction)
-      val upd = ex
-        .withColumn("m", $"y" * dotPreQ($"x3", typedLit(w)))
-        .filter($"m" <= 0)
-        .select($"y", posexplode($"x3").as(Seq("i", "xi")))
-        .groupBy($"i").agg(sum($"y" * $"xi").as("dw"))
-      val upd2 = graft.core.Bounded.collect(upd, w.length.toLong,
-          "linearProbe gradient (dims rows)")
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      w = w.zipWithIndex.map { case (wi, i) => wi + upd2.getOrElse(i, 0L) }
+      val upd = (if (epoch == 1) start else probeStep(yx, Some(w.toArray))).dw(dims)
+      w = w.zipWithIndex.map { case (wi, i) => wi + upd.get(i).fold(0L)(_.longValue) }
     }
     ex.withColumn("pos", (dotPreQ($"x3", typedLit(w)) > 0L).cast("long"))
       .groupBy($"label")
       .agg(count(lit(1)).as("n"), sum($"pos").as("n_pred_pos"))
+  }
+
+  /** One perceptron epoch as one narrow fold over the probe base's
+    * (y, x3) projection, with the semantics of the (dim) `sum(y * x)`
+    * aggregate over margin-≤-0 vectors it replaces: the margin is y ·
+    * `quantized_dot(x3, w)` (wrapping long math over the common prefix,
+    * NULL if a cell of that prefix is, and a NULL margin drops the
+    * vector), products and sums are ANSI (`multiplyExact` / `addExact`),
+    * a dim whose cells are all NULL keeps a NULL sum, and `ProbeStep.dw`
+    * applies the dims bound. `w = None` is the first epoch, w = 0: every
+    * margin is 0, so a vector passes unless it holds a NULL, and the
+    * state records the first row's width in partition order — what a
+    * `head(1)` dims probe reads.
+    */
+  private[graft] def probeStep(yx: DataFrame, w: Option[Array[Long]]): ProbeStep = {
+    val v = w.orNull
+    graft.core.Bounded.fold(yx, new ProbeStep(w.fold(Long.MaxValue)(_.length.toLong)))(
+      (s, r) => s.add(r.getLong(0), r.getSeq[java.lang.Long](1), v), _ merge _)
+  }
+
+  /** A perceptron epoch's fold state: y·x sums per dim (at most `bound`
+    * dims), `first` = the first row's width (-1 before any row), and
+    * `nullReach` = the largest first-NULL index over first-epoch rows
+    * holding a NULL (-1 if none). The first epoch folds before dims is
+    * known: a row whose first NULL sits at p would pass a margin over
+    * dims ≤ p and then bring more than p dims, so p + 1 counts toward the
+    * width the dims bound checks.
+    */
+  private[graft] final class ProbeStep(bound: Long) extends Serializable {
+    private val sums = new graft.core.Bounded.Sums[Int](bound)
+    var first = -1
+    private var nullReach = -1
+
+    def add(y: Long, x: scala.collection.Seq[java.lang.Long], w: Array[Long]): ProbeStep = {
+      if (first < 0) first = x.length
+      val n = if (w eq null) x.length else math.min(x.length, w.length)
+      var dot = 0L
+      var i = 0
+      while (i < n && (x(i) ne null)) {
+        if (w ne null) dot += x(i).longValue * w(i)
+        i += 1
+      }
+      if ((w eq null) && i < n) nullReach = math.max(nullReach, i)
+      if (i == n && Math.multiplyExact(y, dot) <= 0) {
+        i = 0
+        while (i < x.length) {
+          val xi = x(i)
+          sums.add(i, if (xi eq null) null
+            else java.lang.Long.valueOf(Math.multiplyExact(y, xi.longValue)))
+          i += 1
+        }
+      }
+      this
+    }
+
+    def merge(o: ProbeStep): ProbeStep = {
+      if (first < 0) first = o.first
+      nullReach = math.max(nullReach, o.nullReach)
+      sums.merge(o.sums)
+      this
+    }
+
+    /** dim → Σ y·x, null where every cell was NULL — the aggregate's rows,
+      * after the dims bound.
+      */
+    def dw(dims: Int): Map[Int, java.lang.Long] = {
+      val what = "linearProbe gradient (dims rows)"
+      val cells = sums.result(what)
+      graft.core.Bounded.requireWithin(math.max(cells.size, nullReach + 1), dims.toLong, what)
+      cells.map { case (i, (dw, _)) => i -> dw }
+    }
   }
 
   /** q119: top principal direction of the (uncentered) embedding Gram
@@ -1053,9 +1142,9 @@ object Similarity {
     * driver-held values with a fixed left-fold order and HALF_UP
     * rounding, so both engines replay it bit-identically.
     *
-    * Scale: per step one scan-stage projection (dot against a literal)
-    * and one (dim) aggregate with map-side combine — d·parts partial
-    * rows; nothing driver-side beyond the d-vector itself.
+    * Scale: per step one narrow fold over the pinned corpus (`powerStep`:
+    * one job, one stage, no exchange) — d·parts partial sums reach the
+    * driver; nothing driver-side beyond the d-vector itself.
     */
   def powerIteration(spark: SparkSession, d: String, iters: Int = 4): DataFrame = {
     import spark.implicits._
@@ -1064,21 +1153,18 @@ object Similarity {
       embeddings(spark, d).filter($"embedding".isNotNull)
         .select($"vec_id", quantize($"embedding").as("eq"))
     }
-    val dims = graft.core.Scalars.headOption(ex.select(size($"eq")))
-      .map(_.getInt(0)).getOrElse(0)
+    val eqs = ex.select($"eq") // planned once, folded every step
+    // the first step's fold also reads dims (the first row's width),
+    // so no probe job runs ahead of it
+    val start = powerStep(eqs, None)
+    val dims = math.max(start.first, 0)
     var vq: Seq[Long] = Seq.fill(dims)(1000000L)
     // dims = 0 ⇔ empty corpus: the matvec would produce an empty u and
     // reduceLeft/0-norm would throw — the output below is already the
     // correct empty frame
-    for (_ <- 1 to iters if dims > 0) {
-      val u = ex
-        .withColumn("dv", dotPreQ($"eq", typedLit(vq)))
-        .select($"dv", posexplode($"eq").as(Seq("i", "e")))
-        .groupBy($"i")
-        .agg(sum($"e".cast("decimal(38,0)") * $"dv").as("u"))
-      val u2 = graft.core.Bounded.collect(u, dims.toLong,
-          "powerIteration matvec (dims rows)")
-        .map(r => r.getInt(0) -> r.getDecimal(1)).toMap
+    for (step <- 1 to iters if dims > 0) {
+      val u2 = (if (step == 1) start else powerStep(eqs, Some(vq.toArray)))
+        .u(dims)
       val ud = (0 until dims).map(i =>
         u2.getOrElse(i, java.math.BigDecimal.ZERO).doubleValue())
       val nrm = math.sqrt(ud.map(x => x * x).reduceLeft(_ + _))
@@ -1091,6 +1177,95 @@ object Similarity {
     spark.createDataset((0 until dims).map(i =>
         (i.toLong, vq(i), vq(i).toDouble / 1000000.0)))
       .toDF("dim", "vq", "v")
+  }
+
+  /** One power-iteration matvec u = Xᵀ(Xv) as one narrow fold over the
+    * quantized corpus's (eq) projection, with the semantics of the (dim)
+    * `sum(e · dv)` DECIMAL(38,0) aggregate it replaces: dv =
+    * `quantized_dot(eq, v)` (wrapping long math over the common prefix,
+    * NULL if a cell of that prefix is), a cell adds e·dv unless e or dv
+    * is NULL, and `PowerStep.u` applies the checks. `vq = None` is the
+    * first step, v = 1e6 on every dim: each row dots over its own width,
+    * and the state records the first row's width in partition order —
+    * what a `head(1)` dims probe reads. A row no wider than dims dots
+    * the same prefix either way, and a wider one fails the dims bound
+    * either way.
+    */
+  private[graft] def powerStep(eqs: DataFrame, vq: Option[Array[Long]]): PowerStep = {
+    val v = vq.orNull
+    graft.core.Bounded.fold(eqs, new PowerStep(vq.fold(Int.MaxValue)(_.length)))(
+      (s, r) => s.add(r.getSeq[java.lang.Long](0), v), _ merge _)
+  }
+
+  /** A matvec's fold state: `sums(i)` = Σ e·dv over dim i's non-NULL
+    * cells (null while there are none, kept for at most `cap` dims),
+    * `width` = the widest row (the dims the aggregate would group),
+    * `first` = the first row's width (-1 before any row).
+    */
+  private[graft] final class PowerStep(cap: Int) extends Serializable {
+    var first = -1
+    private var width = 0
+    private var overflow = false
+    private var sums = new Array[java.math.BigInteger](0)
+
+    // Spark writes a DECIMAL(38,0) sum reaching 10^38 as NULL, partial
+    // or final, and raises on it under ANSI; < 2^126 is always below
+    private def acc(i: Int, p: java.math.BigInteger): Unit = {
+      val t = if (sums(i) eq null) p else sums(i).add(p)
+      if (t.bitLength >= 126 && t.abs.compareTo(PowerStep.Limit) >= 0) overflow = true
+      sums(i) = t
+    }
+
+    def add(eq: scala.collection.Seq[java.lang.Long], v: Array[Long]): PowerStep = {
+      val n = eq.length
+      if (first < 0) first = n
+      width = math.max(width, n)
+      val m = if (v eq null) n else math.min(n, v.length)
+      var dv = 0L
+      var i = 0
+      while (i < m && (eq(i) ne null)) {
+        dv += eq(i).longValue * (if (v eq null) 1000000L else v(i))
+        i += 1
+      }
+      if (i == m) {
+        val keep = math.min(n, cap)
+        if (sums.length < keep) sums = java.util.Arrays.copyOf(sums, keep)
+        val bdv = java.math.BigInteger.valueOf(dv)
+        i = 0
+        while (i < keep) {
+          if (eq(i) ne null) acc(i, java.math.BigInteger.valueOf(eq(i).longValue).multiply(bdv))
+          i += 1
+        }
+      }
+      this
+    }
+
+    def merge(o: PowerStep): PowerStep = {
+      if (first < 0) first = o.first
+      width = math.max(width, o.width)
+      overflow ||= o.overflow
+      if (sums.length < o.sums.length) sums = java.util.Arrays.copyOf(sums, o.sums.length)
+      for (i <- o.sums.indices if o.sums(i) ne null) acc(i, o.sums(i))
+      this
+    }
+
+    /** dim → u, null where every cell was NULL — the aggregate's rows,
+      * after its ANSI overflow and the dims bound.
+      */
+    def u(dims: Int): Map[Int, java.math.BigDecimal] = {
+      if (overflow) throw new ArithmeticException(
+        "powerIteration matvec: DECIMAL(38,0) sum overflow")
+      graft.core.Bounded.requireWithin(width, dims.toLong,
+        "powerIteration matvec (dims rows)")
+      (0 until width).map { i =>
+        i -> (if (i < sums.length && (sums(i) ne null)) new java.math.BigDecimal(sums(i))
+          else null)
+      }.toMap
+    }
+  }
+
+  private[graft] object PowerStep {
+    val Limit: java.math.BigInteger = java.math.BigInteger.TEN.pow(38)
   }
 
   /** Per-label centroid-distance outlier flagging: each vector's cosine

@@ -534,8 +534,9 @@ object Text {
   /** Frequency-ranked vocabulary (id 1 = most frequent; ties broken
     * lexicographically), ranked with a DISTRIBUTED two-phase rank: range-
     * partition the vocab on the rank order, row_number within each range,
-    * then add per-range offsets (the range sizes, collected to the driver —
-    * bounded by the partition count, the A3 closed-over-scalar shape).
+    * then add per-range offsets (the range sizes, folded to the driver in
+    * one narrow job over the pinned ranges — bounded by the partition
+    * count, the A3 closed-over-scalar shape).
     * Equivalent to `row_number() OVER (ORDER BY c DESC, w)` but with no
     * single-partition Exchange anywhere in the plan: the vocabulary is
     * corpus-sublinear (Heaps' law) yet still billions of rows at 100 TB —
@@ -558,13 +559,9 @@ object Text {
         .withColumn("pid", spark_partition_id())
         .cutLineage()
     }
-    val sizes = graft.core.Bounded.collect(
-        parted.groupBy($"pid").agg(count(lit(1)).as("n")),
-        spark.sparkContext.defaultParallelism.toLong,
-        "rankedVocab partition offsets (|partitions| rows)")
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    val offsets: Map[Int, Long] = sizes.map(_._1)
-      .zip(sizes.scanLeft(0L)(_ + _._2)).toMap
+    val offsets = Ranks.partitionOffsets(parted, "pid", None,
+      spark.sparkContext.defaultParallelism,
+      "rankedVocab partition offsets (|partitions| rows)")
     parted
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window

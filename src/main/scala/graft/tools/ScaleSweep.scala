@@ -117,7 +117,7 @@ object ScaleSweep {
     * public JVM method, so plain reflection reaches it; if the API
     * ever moves, fall back to the old sleep rather than fail the sweep.
     */
-  private[tools] def drainBus(spark: SparkSession,
+  private[graft] def drainBus(spark: SparkSession,
       timeoutMs: Long = 10000L): Unit = {
     try {
       val sc = spark.sparkContext

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Tables
-import graft.operators.{Graph, Ranks}
+import graft.operators.{Graph, Ranks, Similarity}
 
 /** Job budgets for DataFrame construction: the calls below hold
   * everything they need before they are asked, so building their frames
@@ -18,6 +18,34 @@ class JobBudgetSpec extends AnyFunSuite {
 
   private def jobs[T](body: => T): Int =
     graft.tools.PlanStats.jobsRun(spark)(body)._2
+
+  /** Shuffle-map tasks run while `body` runs (stages found by a job tag). */
+  private def shuffleTasks[T](body: => T): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted,
+      SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val tag = s"graft-shuffles-${java.util.UUID.randomUUID()}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag))) stages.add(e.stageInfo.stageId): Unit
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskType == "ShuffleMapTask")
+          n.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try {
+      body
+      graft.tools.ScaleSweep.drainBus(spark)
+      n.get
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("a second Tables.table read of an unchanged file runs no job") {
     val dir = Files.createTempDirectory("graft_jobs_tables").toString
@@ -44,5 +72,18 @@ class JobBudgetSpec extends AnyFunSuite {
     val one = jobs(Graph.randomWalks(spark, sf, steps = 1))
     val four = jobs(Graph.randomWalks(spark, sf, steps = 4))
     assert(one == four, s"steps=1 ran $one construction jobs, steps=4 ran $four")
+  }
+
+  test("powerIteration and linearProbe: one construction job per step, no shuffle") {
+    Similarity.powerIteration(spark, sf, iters = 1) // memos warm
+    val p1 = jobs(Similarity.powerIteration(spark, sf, iters = 1))
+    val p4 = jobs(Similarity.powerIteration(spark, sf, iters = 4))
+    assert(p4 - p1 == 3, s"iters=1 ran $p1 construction jobs, iters=4 ran $p4")
+    Similarity.linearProbe(spark, sf, epochs = 1)
+    val l1 = jobs(Similarity.linearProbe(spark, sf, epochs = 1))
+    val l3 = jobs(Similarity.linearProbe(spark, sf, epochs = 3))
+    assert(l3 - l1 == 2, s"epochs=1 ran $l1 construction jobs, epochs=3 ran $l3")
+    assert(shuffleTasks(Similarity.powerIteration(spark, sf, iters = 2)) == 0)
+    assert(shuffleTasks(Similarity.linearProbe(spark, sf, epochs = 2)) == 0)
   }
 }

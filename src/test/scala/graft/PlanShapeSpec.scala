@@ -71,6 +71,49 @@ class PlanShapeSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.rank.windowMaxRows")
   }
 
+  test("rank dial: the single-partition windows appear only within windowMaxRows") {
+    import spark.implicits._
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    // Spark warns when it plans a Window with no partition spec: the
+    // witness that a single-partition window was planned
+    val seen = new java.util.concurrent.atomic.AtomicInteger(0)
+    val appender = new AbstractAppender("graft-window-warn", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("No Partition Defined for Window"))
+          seen.incrementAndGet(): Unit
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    ctx.getConfiguration.getRootLogger.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    // 100 rows; 30 (g, b) classes feed groupRank's prefix sum
+    val df = spark.range(100).select($"id".as("v"), ($"id" % 10).as("g"),
+      ($"id" % 3).as("b"))
+    def windowWarns(bound: Long)(build: => org.apache.spark.sql.DataFrame): Int = {
+      spark.conf.set("spark.graft.rank.windowMaxRows", bound.toString)
+      try {
+        seen.set(0)
+        plan(build)
+        seen.get
+      } finally spark.conf.unset("spark.graft.rank.windowMaxRows")
+    }
+    try {
+      assert(windowWarns(100)(graft.operators.Ranks.globalRank(df, "r", $"v".asc)) > 0)
+      assert(windowWarns(99)(graft.operators.Ranks.globalRank(df, "r", $"v".asc)) == 0)
+      def classRank = graft.operators.Ranks.groupRank(df, "rk", Seq($"g"), Seq($"b"))
+      assert(windowWarns(30)(classRank) > 0)
+      assert(windowWarns(29)(classRank) == 0)
+    } finally {
+      ctx.getConfiguration.getRootLogger.removeAppender("graft-window-warn")
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
+
   test("q20 heap top-k equals the window rung; plan has no window at all") {
     val heap = graft.operators.Relational.topKOrders(spark, sf)
     val win = graft.operators.Relational.topKOrdersWindow(spark, sf)
