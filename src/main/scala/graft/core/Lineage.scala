@@ -68,14 +68,16 @@ object Lineage {
     * materializing job is a narrow count over the checkpointed RDD, so
     * the count costs no job of its own. On the reliable arm the eager
     * checkpoint writes the files in one job as before, and `rows` reads
-    * them back in a second job only when a caller asks for it.
+    * them back in a second job only when a caller asks for it. A
+    * checkpoint with no partitions (an AQE-coalesced empty shuffle, say)
+    * holds 0 rows and runs no count job.
     */
   def counted(df: DataFrame): Pin = {
     val spark = df.sparkSession
     spark.conf.getOption(ConfKey).map(_.trim).filter(_.nonEmpty) match {
       case None =>
         val cp = df.localCheckpoint(eager = false)
-        val n = checkpointed(cp).count()
+        val n = rowsOf(cp)
         new Pin(cp, n)
       case Some(dir) =>
         val sc = spark.sparkContext
@@ -87,7 +89,7 @@ object Lineage {
         val cp =
           try df.checkpoint()
           finally df.unpersist(blocking = false): Unit
-        new Pin(cp, checkpointed(cp).count())
+        new Pin(cp, rowsOf(cp))
     }
   }
 
@@ -105,6 +107,11 @@ object Lineage {
         lr.rdd.unpersist(blocking = false): Unit
       case _ =>
     }
+
+  private def rowsOf(cp: DataFrame): Long = {
+    val rdd = checkpointed(cp)
+    if (rdd.partitions.isEmpty) 0L else rdd.count()
+  }
 
   private def checkpointed(cp: DataFrame): org.apache.spark.rdd.RDD[_] =
     cp.queryExecution.logical match {

@@ -38,6 +38,17 @@ import graft.core.Lineage.CutOps
   * (k × rows for an unpivot of k metrics): the input cut is then paid
   * once, and a pinned rank on the window arm runs no job at
   * construction.
+  *
+  * Window arm (n ≤ windowMaxRows): each form plans the window it
+  * decomposes over the counted input — `globalRank` one global-order
+  * window (a single-partition exchange of ≤ windowMaxRows rows, the
+  * one declared "No Partition Defined for Window" site besides
+  * `groupRank`'s prefix sum), `groupRowNumber` and the running scans
+  * one window partitioned by their groups (a hash exchange, one sort,
+  * no join). Plan once what the driver already holds: a count the
+  * caller knows (a pin's rows, k metrics × n) is a literal, and
+  * `groupRowNumber`'s `sizeCol` hands each row its group size instead
+  * of a separate count aggregate and join.
   */
 object Ranks {
 
@@ -80,13 +91,15 @@ object Ranks {
     * ⌈pct·n/100⌉ = `(pct·n + 99) div 100` — exactly one class per
     * group covers each target, so `max(when(...))` folds every pick
     * into ONE |classes|-row aggregate (no filter+join per percentile).
+    * `also` rides the same aggregate (per-group totals over the
+    * histogram), after the picks.
     */
   def pickPercentiles(spanned: DataFrame, groups: Seq[Column], value: Column,
-      pcts: Seq[(Int, String)]): DataFrame = {
+      pcts: Seq[(Int, String)], also: Column*): DataFrame = {
     val aggs = pcts.map { case (p, out) =>
       max(when(col("lo") <= expr(s"($p * n + 99) div 100") &&
         expr(s"($p * n + 99) div 100") <= col("hi"), value)).as(out)
-    }
+    } ++ also
     spanned.groupBy(groups: _*).agg(aggs.head, aggs.tail: _*)
   }
 
@@ -242,29 +255,55 @@ object Ranks {
     * user_id…). Identical to `groupRank(groups, order, Seq())` when
     * the order is total (every tie class is a singleton, so rank ==
     * row_number — the q100 comment made law), but skips the tie-class
-    * aggregate and its full-table shuffle join: per-group rank =
-    * global rank − (group's first global rank) + 1, one |groups|-row
-    * broadcast join.
+    * aggregate and its full-table shuffle join.
+    *
+    * Within the dial (n ≤ windowMaxRows) this IS the per-group window
+    * it decomposes — `row_number() over (partition by groups order by
+    * order)`, one hash exchange on the groups, one sort, one Window —
+    * legitimate because no group can exceed the counted bound. Above
+    * it, per-group rank = global rank − (group's first global rank) +
+    * 1, with the |groups|-row offset table broadcast.
+    *
+    * `sizeCol`, when given, appends each row's group size (long) —
+    * `count(1) over (partition by groups)`, evaluated in the same
+    * Window as the rank on the window arm and folded into the offset
+    * aggregate on the machinery arm — so callers that need n for a
+    * percentile target or a bucket need no separate count join.
+    * Output columns: the input's, then `sizeCol`, then `rankCol`.
     */
   def groupRowNumber(df: DataFrame, rankCol: String, groups: Seq[Column],
-      order: Seq[Column]): DataFrame =
-    groupRowNumberImpl(df, rankCol, groups, order, pinnedRows = None)
+      order: Seq[Column], sizeCol: Option[String] = None): DataFrame =
+    groupRowNumberImpl(df, rankCol, groups, order, pinnedRows = None, sizeCol)
 
-  /** `groupRowNumber` over a `pinBase`-materialized input of `rows` rows
-    * (or a narrow projection of one — k × the pin's rows for an unpivot
-    * of k metrics).
+  /** `groupRowNumber` over a `pinBase`-materialized input of `rows` rows,
+    * or a frame cheap to recompute from one: a narrow projection (k ×
+    * the pin's rows for an unpivot of k metrics) or a pinned scan's
+    * output. Above the dial the range sampler and the shuffle each
+    * re-read it.
     */
   def groupRowNumberPinned(df: DataFrame, rows: Long, rankCol: String,
-      groups: Seq[Column], order: Seq[Column]): DataFrame =
-    groupRowNumberImpl(df, rankCol, groups, order, Some(rows))
+      groups: Seq[Column], order: Seq[Column],
+      sizeCol: Option[String] = None): DataFrame =
+    groupRowNumberImpl(df, rankCol, groups, order, Some(rows), sizeCol)
 
   private def groupRowNumberImpl(df: DataFrame, rankCol: String,
-      groups: Seq[Column], order: Seq[Column],
-      pinnedRows: Option[Long]): DataFrame = {
-    val gr = rankImpl(df, "__gr", groups ++ order, pinnedRows)
-    val goff = gr.groupBy(groups: _*)
-      .agg(min(col("__gr")).as("__goff"))
-    val groupNames = goff.columns.dropRight(1).toSeq
+      groups: Seq[Column], order: Seq[Column], pinnedRows: Option[Long],
+      sizeCol: Option[String]): DataFrame = {
+    val (input, n) = countedInput(df, pinnedRows)
+    if (takesWindowArm(df.sparkSession, n)) {
+      // the size rides the rank's own (partition, order) spec with a
+      // whole-partition frame, so both land in ONE Window over one sort
+      val w = Window.partitionBy(groups: _*).orderBy(order: _*)
+      val sized = sizeCol.fold(input)(s => input.withColumn(s,
+        count(lit(1)).over(w.rowsBetween(Window.unboundedPreceding,
+          Window.unboundedFollowing))))
+      return sized.withColumn(rankCol, row_number().over(w).cast("long"))
+    }
+    val gr = rankMachinery(input, "__gr", groups ++ order,
+      releaseInput = pinnedRows.isEmpty)
+    val goff = gr.groupBy(groups: _*).agg(min(col("__gr")).as("__goff"),
+      sizeCol.map(s => count(lit(1)).as(s)).toSeq: _*)
+    val groupNames = goff.columns.take(groups.size).toSeq
     joinNullSafe(gr, goff, groupNames, bcast = true)
       .withColumn(rankCol, col("__gr") - col("__goff") + lit(1L))
       .drop("__gr", "__goff")
@@ -296,7 +335,7 @@ object Ranks {
   def groupRunningSum(df: DataFrame, outCol: String, groups: Seq[Column],
       order: Seq[Column], weight: Column): DataFrame =
     groupScanImpl(df, outCol, groups, order, weight, isMax = false,
-      exclusive = false)
+      exclusive = false, pinnedRows = None)
 
   /** EXCLUSIVE per-group running MAX of `value` under `order` — the
     * distributed replacement for `max(v).over(Window.partitionBy(groups)
@@ -307,20 +346,26 @@ object Ranks {
   def groupRunningMaxExcl(df: DataFrame, outCol: String, groups: Seq[Column],
       order: Seq[Column], value: Column): DataFrame =
     groupScanImpl(df, outCol, groups, order, value, isMax = true,
-      exclusive = true)
+      exclusive = true, pinnedRows = None)
+
+  /** `groupRunningMaxExcl` over a `pinBase`-materialized input of `rows`
+    * rows — skips the per-call counted cut, so a caller that scans and
+    * then ranks the same rows pays one cut for both.
+    */
+  def groupRunningMaxExclPinned(df: DataFrame, rows: Long, outCol: String,
+      groups: Seq[Column], order: Seq[Column], value: Column): DataFrame =
+    groupScanImpl(df, outCol, groups, order, value, isMax = true,
+      exclusive = true, pinnedRows = Some(rows))
 
   private def groupScanImpl(df: DataFrame, outCol: String,
       groups: Seq[Column], order: Seq[Column], weight: Column,
-      isMax: Boolean, exclusive: Boolean): DataFrame = {
+      isMax: Boolean, exclusive: Boolean,
+      pinnedRows: Option[Long]): DataFrame = {
     val spark = df.sparkSession
     val parts = spark.sparkContext.defaultParallelism
-    // one job: the counted cut materializes the input (the range sampler
-    // would have paid that anyway) and its count prices the small-side
-    // dial
-    val pin = Lineage.counted(df.withColumn("__w", weight))
-    val input = pin.df
+    val (input, n) = countedInput(df.withColumn("__w", weight), pinnedRows)
     def comb(c: Column) = if (isMax) max(c) else sum(c)
-    if (takesWindowArm(spark, pin.rows)) {
+    if (takesWindowArm(spark, n)) {
       // the whole input fits sorted tasks: this IS the window form the
       // machinery decomposes (its scaladoc's "distributed replacement
       // for"), legitimate again because no group can exceed the pinned
@@ -334,7 +379,7 @@ object Ranks {
       .repartitionByRange(parts, groups ++ order: _*)
       .withColumn("__pid", spark_partition_id())
       .cutLineage()
-    Lineage.release(input)
+    if (pinnedRows.isEmpty) Lineage.release(input)
     val cellNames = "__pid" +: groups.map(g =>
       parted.select(g).columns.head)
     val cells = parted.groupBy(col("__pid") +: groups: _*)
@@ -411,25 +456,10 @@ object Ranks {
 
   private def rankImpl(df: DataFrame, rankCol: String, order: Seq[Column],
       pinnedRows: Option[Long]): DataFrame = {
-    val spark = df.sparkSession
-    val parts = spark.sparkContext.defaultParallelism
-    // repartitionByRange SAMPLES its input in a separate job before the
-    // shuffle — without a pin the upstream lineage runs twice (sample
-    // + shuffle). The counted cut pins it in one job whose count prices
-    // the small-side dial; its blocks are released once the range
-    // checkpoint has materialized. A pre-pinned input (pinBase / a
-    // prior rank's checkpoint) is already cheap to re-read and arrives
-    // with its count — no job at all.
-    val (input, n) = pinnedRows match {
-      case Some(rows) => (df, rows)
-      case None =>
-        val pin = Lineage.counted(df)
-        (pin.df, pin.rows)
-    }
-    if (takesWindowArm(spark, n)) {
+    val (input, n) = countedInput(df, pinnedRows)
+    if (takesWindowArm(df.sparkSession, n)) {
       // the whole input fits one sorted task: rank the pinned input (its
-      // consumers — the offset aggregate and the final join in the group
-      // forms — re-read the pin) with one global-order window (one
+      // consumers re-read the pin) with one global-order window (one
       // single-partition exchange of ≤ windowMaxRows slim rows); under
       // the required total order this is the machinery's local-rank +
       // offset, bit for bit. Declared single-partition window: n is the
@@ -439,11 +469,37 @@ object Ranks {
       return input.withColumn(rankCol,
         row_number().over(Window.orderBy(order: _*)).cast("long"))
     }
+    rankMachinery(input, rankCol, order, releaseInput = pinnedRows.isEmpty)
+  }
+
+  /** A rank input and its row count: a pinned caller's frame and rows as
+    * given (no job), else one counted cut of `df` — a single job that
+    * materializes the input (the range sampler would have paid that
+    * anyway) and returns the count that prices the small-side dial.
+    */
+  private def countedInput(df: DataFrame,
+      pinnedRows: Option[Long]): (DataFrame, Long) = pinnedRows match {
+    case Some(rows) => (df, rows)
+    case None =>
+      val pin = Lineage.counted(df)
+      (pin.df, pin.rows)
+  }
+
+  /** The range-partitioned global rank over a counted input.
+    * repartitionByRange SAMPLES its input in a separate job before the
+    * shuffle, so the input must be cheap to re-read (a counted cut or a
+    * caller's pin). `releaseInput` drops the input's checkpoint blocks
+    * once the range table is cut — only for a cut this call made; a
+    * caller's pin is the caller's to keep.
+    */
+  private def rankMachinery(input: DataFrame, rankCol: String,
+      order: Seq[Column], releaseInput: Boolean): DataFrame = {
+    val parts = input.sparkSession.sparkContext.defaultParallelism
     val parted = input
       .repartitionByRange(parts, order: _*)
       .withColumn("__pid", spark_partition_id())
       .cutLineage()
-    if (pinnedRows.isEmpty) Lineage.release(input)
+    if (releaseInput) Lineage.release(input)
     val offsets = partitionOffsets(parted, "__pid", None, parts,
       "groupRowNumber partition offsets (|partitions| rows)")
     parted

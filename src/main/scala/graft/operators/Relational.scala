@@ -515,16 +515,15 @@ object Relational {
     * rides `Ranks.groupRowNumber` (the row-level fast path — a class
     * histogram would be as big as the rows), never a per-type window: a
     * hot event_type spans many range partitions. The per-group row
-    * counts are one map-side-combined aggregate of the raw scan,
-    * broadcast back on. The final aggregate touches |groups|·B cells.
+    * counts ride the rank as its size column. The final aggregate
+    * touches |groups|·B cells.
     */
   def equiDepthHist(spark: SparkSession, d: String, bins: Int = 8): DataFrame = {
     import spark.implicits._
     val ev = events(spark, d).select($"event_type", $"event_id", $"value")
-    val counts = ev.groupBy($"event_type").agg(count(lit(1)).as("n"))
     val ranked = Ranks.groupRowNumber(ev, "rn", Seq($"event_type"),
-      Seq($"value".asc, $"event_id".asc))
-    ranked.join(broadcast(counts), Seq("event_type"))
+      Seq($"value".asc, $"event_id".asc), sizeCol = Some("n"))
+    ranked
       .withColumn("bin", expr(s"(rn - 1) * ${bins}L div n"))
       .groupBy($"event_type", $"bin")
       .agg(count(lit(1)).as("n_rows"),
@@ -1261,17 +1260,17 @@ object Relational {
         .agg(count(lit(1)).as("df"))
         .groupBy(lit(rel).as("relation"), $"df")
         .agg(count(lit(1)).as("cnt"))
-    val hist = Ranks.pinBase(
+    val hist =
       dfHist(lineitem(spark, d), "lineitem.l_partkey", "l_partkey")
-        .unionByName(dfHist(events(spark, d), "events.user_id", "user_id"))).df
-    // both percentiles from ONE pass over the spanned histogram
-    val picks = Ranks.pickPercentiles(
-      Ranks.classSpans(hist, Seq($"relation"), $"df", $"cnt"),
-      Seq($"relation"), $"df", Seq(50 -> "p50_df", 99 -> "p99_df"))
-    val agg = hist.groupBy($"relation")
-      .agg(sum($"df" * $"cnt").as("n_rows"), sum($"cnt").as("n_keys"),
+        .unionByName(dfHist(events(spark, d), "events.user_id", "user_id"))
+    // the totals and both percentiles from ONE aggregate over the
+    // spanned histogram (classSpans' n IS the key count), so the
+    // histogram has one consumer and needs no pin
+    Ranks.pickPercentiles(
+        Ranks.classSpans(hist, Seq($"relation"), $"df", $"cnt"),
+        Seq($"relation"), $"df", Seq(50 -> "p50_df", 99 -> "p99_df"),
+        sum($"df" * $"cnt").as("n_rows"), max($"n").as("n_keys"),
         max($"df").as("max_df"))
-    agg.join(picks, "relation")
       .select($"relation", $"n_rows", $"n_keys", $"max_df", $"p50_df",
         $"p99_df",
         expr("max_df * n_keys * 1000000L div n_rows").as("skew_q6"),

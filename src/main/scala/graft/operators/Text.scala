@@ -1000,12 +1000,11 @@ object Text {
     // (surprisal, doc_id) is already a TOTAL order within each lang, so
     // rank == row_number — the groupRowNumber fast path (no tie-class
     // aggregate/join); no lang-partitioned window anywhere (q136)
-    val ranked = graft.operators.Ranks.groupRowNumber(base, "rn",
-      Seq($"lang"), Seq($"mean_bigram_surprisal", $"doc_id"))
-    // group sizes from the CHECKPOINTED rank output, not the base —
-    // counting from `base` would re-run the surprisal lineage
-    val langN = ranked.groupBy($"lang").agg(count(lit(1)).as("n"))
-    ranked.join(broadcast(langN), "lang")
+    // the group sizes ride the rank as its size column — counting from
+    // `base` would re-run the surprisal lineage
+    graft.operators.Ranks.groupRowNumber(base, "rn",
+        Seq($"lang"), Seq($"mean_bigram_surprisal", $"doc_id"),
+        sizeCol = Some("n"))
       .select($"doc_id", $"lang", $"n_bigrams", $"bits_q",
         $"mean_bigram_surprisal",
         when(lit(3L) * $"rn" <= $"n", lit("head"))

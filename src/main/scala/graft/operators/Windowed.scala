@@ -204,9 +204,8 @@ object Windowed {
       Seq($"metric"), Seq($"dur_us", $"user_id"))
     // ONE map-side-combined aggregate carries counts, extremes, sums
     // AND both percentile picks (`max(when(rn = target))` — the q174
-    // trick); the old two-filter-two-join form re-read the ranked
-    // stream three times for the same numbers
-    durs.crossJoin(broadcast(conv.agg(count(lit(1)).as("n"))))
+    // trick); every metric holds the pin's n rows, so n is a literal
+    durs.withColumn("n", lit(pin.rows))
       .groupBy($"metric")
       .agg(count(lit(1)).as("n_converted"), min($"dur_us").as("min_us"),
         max(when($"rn" === expr("(50 * n + 99) div 100"), $"dur_us"))
@@ -494,23 +493,21 @@ object Windowed {
     */
   def watermarkAdvisor(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val pin = Ranks.pinBase(
-      Ranks.groupRunningMaxExcl(
-          events(spark, d)
-            .select($"event_type", $"event_id", unix_micros($"ts").as("tsu")),
-          "__rmax", Seq($"event_type"), Seq($"event_id"), $"tsu")
-        .withColumn("late_us",
-          greatest(lit(0L), coalesce($"__rmax", $"tsu") - $"tsu"))
-        .drop("__rmax"))
-    val late = pin.df
-    // per-type row counts only — broadcast so every ranked row knows its
-    // percentile targets; counts, the out-of-order sum, the max AND both
-    // picks then fold in ONE map-side-combined aggregate (the q174
-    // trick — the old form re-read the ranked stream three times)
-    val counts = late.groupBy($"event_type").agg(count(lit(1)).as("n"))
+    // ONE counted cut of the events projection serves both scans: the
+    // running max and the lateness rank both take its row count
+    val pin = Ranks.pinBase(events(spark, d)
+      .select($"event_type", $"event_id", unix_micros($"ts").as("tsu")))
+    val late = Ranks.groupRunningMaxExclPinned(pin.df, pin.rows, "__rmax",
+        Seq($"event_type"), Seq($"event_id"), $"tsu")
+      .withColumn("late_us",
+        greatest(lit(0L), coalesce($"__rmax", $"tsu") - $"tsu"))
+      .drop("__rmax")
+    // the rank carries each row's per-type count n, so every ranked row
+    // knows its percentile targets; counts, the out-of-order sum, the
+    // max AND both picks then fold in ONE map-side-combined aggregate
+    // (the q174 trick)
     Ranks.groupRowNumberPinned(late, pin.rows, "rn",
-        Seq($"event_type"), Seq($"late_us", $"event_id"))
-      .join(broadcast(counts), "event_type")
+        Seq($"event_type"), Seq($"late_us", $"event_id"), sizeCol = Some("n"))
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n_events"),
         sum(($"late_us" > 0L).cast("long")).as("n_out_of_order"),
@@ -715,19 +712,19 @@ object Windowed {
       .select($"event_type", $"user_id", $"event_id",
         (unix_micros($"ts") - unix_micros($"prev")).as("gap"))
     // per-type median rank via the two-phase group rank — a hot event
-    // type's gap population is never one sort partition; BOTH the count
-    // and the summary stats then ride the CHECKPOINTED rank output, so
-    // the per-user lag window runs exactly once. (gap, user, event) is
+    // type's gap population is never one sort partition above the dial;
+    // BOTH the median and the summary stats then read the rank's counted
+    // cut, so the per-user lag window runs exactly once. (gap, user, event) is
     // total → the row_number fast path (no tie-class aggregate/join)
     val rk = Ranks.groupRowNumber(gaps, "rn",
-      Seq($"event_type"), Seq($"gap", $"user_id", $"event_id"))
+      Seq($"event_type"), Seq($"gap", $"user_id", $"event_id"),
+      sizeCol = Some("n"))
     val stats = rk.groupBy($"event_type")
       .agg(count(lit(1)).as("n_gaps"),
         (sum($"gap").cast("double") / count(lit(1))).as("mean_gap_us"),
         max($"gap").as("max_gap_us"))
+    // the rank's size column is the per-type n: no count join
     val med = rk
-      .join(broadcast(stats.select($"event_type", $"n_gaps".as("n"))),
-        "event_type")
       .filter($"rn" === expr("(n + 1) div 2") || $"rn" === expr("(n + 2) div 2"))
       .groupBy($"event_type")
       .agg((sum($"gap").cast("double") / count(lit(1))).as("median_gap_us"))
@@ -941,9 +938,8 @@ object Windowed {
     * Scale: the per-user aggregate is the big reduction (fact volume →
     * |purchasing users| with map-side combine); the three quartile
     * metrics UNPIVOT into one (metric, v) stream ranked by ONE
-    * `Ranks.groupRowNumber` machine (metric = group key, two-phase
-    * range-partition rank — no single-partition sort anywhere), then
-    * pivot back onto the unique user key.
+    * `Ranks.globalRank` machine (no single-partition sort above the
+    * dial), then fold back onto the unique user key in one aggregate.
     */
   def rfmSegments(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
@@ -953,29 +949,32 @@ object Windowed {
     val u = p.groupBy($"user_id").agg(max($"dy").as("last_dy"),
       count(lit(1)).as("frequency"), sum($"cents").as("monetary_c"))
     val mx = p.agg(max($"dy").as("mx"))
-    // one pinned per-user base; the three quartile metrics UNPIVOT into
-    // one (metric, v) stream ranked by ONE groupRowNumber machine
-    // (metric is a group key — one rank machine instead of three, no
-    // chains), then pivot back onto the unique user key; the purchase
-    // aggregate runs exactly once
+    // one pinned per-user base; its count n is a driver scalar, so the
+    // quartile divisor is a plan literal (no count aggregate + broadcast)
     val pin = Ranks.pinBase(u.crossJoin(broadcast(mx))
       .select($"user_id", ($"mx" - $"last_dy").as("recency_days"),
         $"frequency", $"monetary_c"))
-    val base = pin.df
-    val stacked = base.select($"user_id", expr(
-      """stack(3, 'rn_r', recency_days, 'rn_f', frequency,
-        |  'rn_m', monetary_c) AS (metric, v)""".stripMargin))
-    val ranks = Ranks.groupRowNumberPinned(stacked, 3L * pin.rows, "rn",
-        Seq($"metric"), Seq($"v", $"user_id"))
-      .groupBy($"user_id").pivot("metric", Seq("rn_r", "rn_f", "rn_m"))
-      .agg(first($"rn"))
-    val ranked = base.join(ranks, "user_id")
+    val n = pin.rows
+    // the three metrics UNPIVOT into one (metric, v) stream ranked under
+    // (metric, v, user_id). Each metric contributes EXACTLY n rows, so
+    // each owns one contiguous block of n global ranks (the q174 trick):
+    // its row number is (gr − 1) mod n + 1, with no offset aggregate
+    // or join
+    val stacked = pin.df.select($"user_id", expr(
+      """stack(3, 'r', recency_days, 'f', frequency,
+        |  'm', monetary_c) AS (metric, v)""".stripMargin))
+    val ranked = Ranks.globalRankPinned(stacked, 3L * n, "gr",
+      $"metric", $"v", $"user_id")
+    // ONE aggregate folds the ranks back onto the user key and reads
+    // each metric's value off its own rank row (no join with the base);
+    // quartile = (rownum − 1)·4 div n
+    val q = expr(s"(gr - 1L) % ${n}L * 4L div ${n}L")
+    def pick(m: String, c: Column) = max(when($"metric" === m, c))
     ranked
-      .crossJoin(broadcast(base.agg(count(lit(1)).as("n_all"))))
-      .withColumn("r_q", expr("(rn_r - 1L) * 4L div n_all"))
-      .withColumn("f_q", expr("(rn_f - 1L) * 4L div n_all"))
-      .withColumn("m_q", expr("(rn_m - 1L) * 4L div n_all"))
-      .drop("n_all", "rn_r", "rn_f", "rn_m")
+      .groupBy($"user_id")
+      .agg(pick("r", $"v").as("recency_days"), pick("f", $"v").as("frequency"),
+        pick("m", $"v").as("monetary_c"), pick("r", q).as("r_q"),
+        pick("f", q).as("f_q"), pick("m", q).as("m_q"))
       .withColumn("segment", concat(lit("R"), $"r_q".cast("string"),
         lit("F"), $"f_q".cast("string"), lit("M"), $"m_q".cast("string")))
   }

@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
 /** Regenerates PLANSTATS.md — a one-row-per-query audit of physical-plan
   * shape across the ENTIRE query surface: shuffle count, scans, parquet
   * re-scans, join strategies, nested-loop/cartesian occurrences,
-  * SortAggregates, and the Spark jobs construction runs.
+  * SortAggregates, the Spark jobs construction runs, and the classes
+  * Spark's code generator compiles to build and collect the query.
   * The grep-able complement to PLANS.md's full dumps: a regression that
   * turns a broadcast join into a nested loop, or doubles a query's
   * exchanges, shows up as a diff in this table.
@@ -77,18 +78,31 @@ object PlanStats {
     out.println("array-buffered aggregate falls back to, sorting its whole input.")
     out.println("`cjobs` counts the Spark jobs run while `SparkEntry.queries(q)` builds")
     out.println("the frame, in this table's order on one session: a memo build is")
-    out.println("charged to the first query that touches it.")
+    out.println("charged to the first query that touches it. Each row's query is")
+    out.println("collected after its plan is read, so a memo its action builds is not")
+    out.println("charged to a later row's construction. `cgen` counts the classes")
+    out.println("Spark's code generator compiles while the query is built and collected")
+    out.println("(`CodegenMetrics` compilations — misses of its 100-entry class cache,")
+    out.println("so a class an earlier row compiled and the cache still holds is free).")
     out.println()
-    out.println("| query | shuffles | scans | rescans | bhj | smj | bnlj | sortagg | cjobs |")
-    out.println("|---|---|---|---|---|---|---|---|---|")
+    out.println("| query | shuffles | scans | rescans | bhj | smj | bnlj | sortagg | cjobs | cgen |")
+    out.println("|---|---|---|---|---|---|---|---|---|---|")
     // the file each parquet scan reads, from its Location metadata
     val scanFile = "Scan parquet [^\\n]*?/(\\w+)\\.parquet".r
     var totalCjobs = 0
+    var totalCgen = 0L
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
+        val cgen0 = compiles
         val (df, cjobs) = jobsRun(spark)(fn(spark, d))
         totalCjobs += cjobs
+        // the initial plan's shape, read before the collect finalizes it
         val p = df.queryExecution.executedPlan.toString
+        df.collect()
+        val cgen = compiles - cgen0
+        totalCgen += cgen
         def c(pat: String) = pat.r.findAllIn(p).length
         val shuffles = c("(?m)^\\s*[+:]*-? ?Exchange hashpartitioning") +
           c("(?m)Exchange rangepartitioning") + c("Exchange SinglePartition")
@@ -97,16 +111,18 @@ object PlanStats {
         out.println(s"| $name | $shuffles | ${c("Scan parquet")} | $rescans | " +
           s"${c("BroadcastHashJoin")} | ${c("SortMergeJoin")} | " +
           s"${c("BroadcastNestedLoopJoin") + c("CartesianProduct")} | " +
-          s"${c("SortAggregate")} | $cjobs |")
+          s"${c("SortAggregate")} | $cjobs | $cgen |")
       } catch {
         case e: Throwable =>
-          out.println(s"| $name | ERR ${e.getClass.getSimpleName} | | | | | | | |")
+          out.println(s"| $name | ERR ${e.getClass.getSimpleName} | | | | | | | | |")
       }
     }
     out.println()
     out.println(s"Construction jobs over the catalog: $totalCjobs.")
+    out.println(s"Generated classes compiled over the catalog: $totalCgen.")
     out.close()
-    println(s"wrote PLANSTATS.md (construction jobs: $totalCjobs)")
+    println(s"wrote PLANSTATS.md (construction jobs: $totalCjobs, " +
+      s"generated classes: $totalCgen)")
     spark.stop()
   }
 }

@@ -146,11 +146,21 @@ class CurationOpsSpec extends AnyFunSuite {
       .as[(String, Long, Long, Long, Long, Long, Long)].collect().toSet
     assert(dec == win,
       "distributed running-max/rank decomposition drifted from the per-type windows")
-    val plan = graft.operators.Windowed.watermarkAdvisor(spark, sf)
-      .queryExecution.optimizedPlan.toString
+    // at spec scale the rank dial's window arm legitimately runs the
+    // per-type windows over the pinned events (no type can exceed the
+    // counted bound); forcing windowMaxRows=0 must re-engage the
+    // decomposition, with the same values and no per-type sequential
+    // window (one sort partition per type at scale)
+    spark.conf.set("spark.graft.rank.windowMaxRows", "0")
+    val (forced, plan) = try {
+      val df = graft.operators.Windowed.watermarkAdvisor(spark, sf)
+      (df.as[(String, Long, Long, Long, Long, Long, Long)].collect().toSet,
+        df.queryExecution.optimizedPlan.toString)
+    } finally spark.conf.unset("spark.graft.rank.windowMaxRows")
+    assert(forced == win, "machinery arm drifted from the per-type windows")
     val sig = """windowspecdefinition\(event_type#\d+, (event_id|late_us)#\d+L? ASC""".r
     assert(sig.findFirstIn(plan).isEmpty,
-      s"default plan still runs a per-type sequential window:\n$plan")
+      s"machinery arm still runs a per-type sequential window:\n$plan")
     assert(plan.contains("LogicalRDD"),
       s"expected the pinned decomposition base in the plan:\n$plan")
   }

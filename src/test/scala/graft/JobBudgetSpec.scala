@@ -4,8 +4,8 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Tables
-import graft.operators.{Graph, Ranks, Similarity}
+import graft.core.{Lineage, Tables}
+import graft.operators.{Graph, Ranks, Relational, Similarity, Windowed}
 
 /** Job budgets for DataFrame construction: the calls below hold
   * everything they need before they are asked, so building their frames
@@ -65,6 +65,24 @@ class JobBudgetSpec extends AnyFunSuite {
     assert(jobs(Ranks.globalRankPinned(pin.df, pin.rows, "r", $"v", $"id")) == 0)
     assert(jobs(Ranks.groupRowNumberPinned(pin.df, pin.rows, "rn",
       Seq($"g"), Seq($"v", $"id"))) == 0)
+  }
+
+  test("a counted cut of a frame with no partitions runs no job") {
+    val empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType.fromDDL("a LONG"))
+    val (pin, n) = graft.tools.PlanStats.jobsRun(spark)(Lineage.counted(empty))
+    assert(n == 0, s"counted ran $n jobs over a 0-partition frame")
+    assert(pin.rows == 0L)
+  }
+
+  test("rank consumers: q177 construction runs one job, q167 none") {
+    Windowed.watermarkAdvisor(spark, sf) // table schemas warm
+    Relational.joinSkewAdvisor(spark, sf)
+    // q177: one counted cut of the events projection serves both scans
+    assert(jobs(Windowed.watermarkAdvisor(spark, sf)) == 1)
+    // q167: the histogram has one consumer, so nothing is pinned
+    assert(jobs(Relational.joinSkewAdvisor(spark, sf)) == 0)
   }
 
   test("randomWalks: construction jobs do not grow with the step count") {

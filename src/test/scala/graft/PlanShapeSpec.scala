@@ -71,14 +71,15 @@ class PlanShapeSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.rank.windowMaxRows")
   }
 
-  test("rank dial: the single-partition windows appear only within windowMaxRows") {
-    import spark.implicits._
+  /** Plans `build` and counts the "No Partition Defined for Window" WARN
+    * lines Spark logs meanwhile: the witness that a single-partition
+    * window was planned.
+    */
+  private def singlePartitionWarns(build: => org.apache.spark.sql.DataFrame): Int = {
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
     import org.apache.logging.log4j.core.appender.AbstractAppender
     import org.apache.logging.log4j.core.config.Property
-    // Spark warns when it plans a Window with no partition spec: the
-    // witness that a single-partition window was planned
     val seen = new java.util.concurrent.atomic.AtomicInteger(0)
     val appender = new AbstractAppender("graft-window-warn", null, null,
         true, Property.EMPTY_ARRAY) {
@@ -90,27 +91,47 @@ class PlanShapeSpec extends AnyFunSuite {
     val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
     ctx.getConfiguration.getRootLogger.addAppender(appender, Level.WARN, null)
     ctx.updateLoggers()
+    try {
+      plan(build)
+      seen.get
+    } finally {
+      ctx.getConfiguration.getRootLogger.removeAppender("graft-window-warn")
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
+
+  test("rank dial: the single-partition windows appear only within windowMaxRows") {
+    import spark.implicits._
     // 100 rows; 30 (g, b) classes feed groupRank's prefix sum
     val df = spark.range(100).select($"id".as("v"), ($"id" % 10).as("g"),
       ($"id" % 3).as("b"))
     def windowWarns(bound: Long)(build: => org.apache.spark.sql.DataFrame): Int = {
       spark.conf.set("spark.graft.rank.windowMaxRows", bound.toString)
-      try {
-        seen.set(0)
-        plan(build)
-        seen.get
-      } finally spark.conf.unset("spark.graft.rank.windowMaxRows")
+      try singlePartitionWarns(build)
+      finally spark.conf.unset("spark.graft.rank.windowMaxRows")
     }
-    try {
-      assert(windowWarns(100)(graft.operators.Ranks.globalRank(df, "r", $"v".asc)) > 0)
-      assert(windowWarns(99)(graft.operators.Ranks.globalRank(df, "r", $"v".asc)) == 0)
-      def classRank = graft.operators.Ranks.groupRank(df, "rk", Seq($"g"), Seq($"b"))
-      assert(windowWarns(30)(classRank) > 0)
-      assert(windowWarns(29)(classRank) == 0)
-    } finally {
-      ctx.getConfiguration.getRootLogger.removeAppender("graft-window-warn")
-      ctx.updateLoggers()
-      appender.stop()
+    assert(windowWarns(100)(graft.operators.Ranks.globalRank(df, "r", $"v".asc)) > 0)
+    assert(windowWarns(99)(graft.operators.Ranks.globalRank(df, "r", $"v".asc)) == 0)
+    def classRank = graft.operators.Ranks.groupRank(df, "rk", Seq($"g"), Seq($"b"))
+    assert(windowWarns(30)(classRank) > 0)
+    assert(windowWarns(29)(classRank) == 0)
+  }
+
+  test("groupRowNumber window arm: one Window partitioned by the groups, no join") {
+    import spark.implicits._
+    val df = spark.range(100).select($"id".as("v"), ($"id" % 10).as("g"))
+    for (size <- Seq(None, Some("n"))) {
+      def rank = graft.operators.Ranks.groupRowNumber(df, "r", Seq($"g"),
+        Seq($"v"), sizeCol = size)
+      assert(singlePartitionWarns(rank) == 0,
+        s"size=$size: groupRowNumber planned a single-partition window")
+      val p = plan(rank)
+      val windows = "(?m)^\\W*Window \\[".r.findAllIn(p).length
+      assert(windows == 1, s"size=$size: want one Window, found $windows:\n$p")
+      assert("""Window \[.*\[g#\d+L?\], \[v#\d+L? ASC""".r.findFirstIn(p).nonEmpty,
+        s"size=$size: the Window must partition by the groups:\n$p")
+      assert(!p.contains("BroadcastHashJoin"), s"size=$size: no offset join:\n$p")
     }
   }
 

@@ -256,6 +256,66 @@ class RanksSpec extends AnyFunSuite {
     }
   }
 
+  test("groupRowNumber arms agree with and without the size column: null keys, hot group, empty") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    // a hot group, a NULL group key and NULL order keys, plus the empty
+    // input: the window arm (default dial) and the machinery arm
+    // (windowMaxRows=0) must give the same rows, and the size column
+    // must equal the group's row count
+    val hot = spark.range(2000).select(
+      when($"id" % 10 === 0L, lit(null).cast("int"))
+        .otherwise((pmod(hash($"id"), lit(10L)) < 8L).cast("int")).as("g"),
+      when($"id" % 7 === 0L, lit(null).cast("long"))
+        .otherwise(pmod(hash($"id", lit(1)), lit(97L))).as("v"),
+      $"id".as("rid"))
+    val empty = hot.filter(lit(false))
+    def arms(in: DataFrame, size: Option[String]): (Array[org.apache.spark.sql.Row],
+        Array[org.apache.spark.sql.Row]) = {
+      def run() = Ranks.groupRowNumber(in, "r", Seq($"g"), Seq($"v", $"rid"),
+        sizeCol = size).orderBy($"rid").collect()
+      val window = run()
+      spark.conf.set("spark.graft.rank.windowMaxRows", "0")
+      val machinery = try run() finally spark.conf.unset("spark.graft.rank.windowMaxRows")
+      (window, machinery)
+    }
+    for (in <- Seq(hot, empty); size <- Seq(None, Some("n"))) {
+      val (window, machinery) = arms(in, size)
+      assert(window.sameElements(machinery),
+        s"size=$size: arms diverge — ${window.take(3).mkString(";")} vs " +
+          machinery.take(3).mkString(";"))
+      assert(window.length.toLong == in.count())
+    }
+    val (sized, _) = arms(hot, Some("n"))
+    val want = hot.groupBy($"g").agg(count(lit(1)).as("n")).collect()
+      .map(r => Option(r.get(0)) -> r.getLong(1)).toMap
+    val cols = Ranks.groupRowNumber(hot, "r", Seq($"g"), Seq($"v", $"rid"),
+      sizeCol = Some("n")).columns.toSeq
+    assert(cols == Seq("g", "v", "rid", "n", "r"))
+    assert(sized.forall(r => r.getLong(3) == want(Option(r.get(0)))),
+      "size column must be the group's row count, NULL group included")
+    assert(want.size == 3, "fixture must carry the NULL group")
+  }
+
+  test("groupRunningMaxExclPinned equals the counting form on both arms") {
+    import spark.implicits._
+    val df = fixture.withColumn("w", ($"id" * 7919L) % 501L)
+    val pin = Ranks.pinBase(df)
+    def both() = (
+      Ranks.groupRunningMaxExclPinned(pin.df, pin.rows, "m", Seq($"g"),
+        Seq($"v", $"id"), $"w").orderBy($"id").collect(),
+      Ranks.groupRunningMaxExcl(df, "m", Seq($"g"), Seq($"v", $"id"), $"w")
+        .orderBy($"id").collect())
+    val (a, b) = both()
+    assert(a.sameElements(b), "window arm: pinned form diverges")
+    spark.conf.set("spark.graft.rank.windowMaxRows", "0")
+    val (c, e) = try both() finally spark.conf.unset("spark.graft.rank.windowMaxRows")
+    assert(c.sameElements(e), "machinery arm: pinned form diverges")
+    assert(a.sameElements(c), "arms diverge")
+    // the caller's pin survives the machinery arm: it is not released
+    assert(pin.df.count() === 500L)
+  }
+
   test("machinery arm releases its input pin once the range table is cut") {
     import spark.implicits._
     // the counted input cut is needed only until `parted` is cut; after
@@ -268,6 +328,8 @@ class RanksSpec extends AnyFunSuite {
       "globalRank" -> (in => Ranks.globalRank(in, "r", $"v".asc, $"rid".asc)),
       "groupRowNumber" -> (in => Ranks.groupRowNumber(in, "r",
         Seq($"g"), Seq($"v", $"rid"))),
+      "groupRowNumber sized" -> (in => Ranks.groupRowNumber(in, "r",
+        Seq($"g"), Seq($"v", $"rid"), sizeCol = Some("n"))),
       "groupRunningSum" -> (in => Ranks.groupRunningSum(in, "r",
         Seq($"g"), Seq($"v", $"rid"), $"v")),
       "groupRunningMaxExcl" -> (in => Ranks.groupRunningMaxExcl(in, "r",
