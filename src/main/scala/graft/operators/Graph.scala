@@ -749,7 +749,7 @@ object Graph {
     // releases as soon as its own checkpoint materializes, so nDf and
     // cands each re-ran the union+distinct lineage (measured: three
     // identical 64-task stages ≈ 42 of the query's 49 task-s)
-    val pin = Ranks.pinBase(edges.select($"p1".as("v"))
+    val pin = Lineage.counted(edges.select($"p1".as("v"))
       .union(edges.select($"p2".as("v"))).distinct())
     val verts = pin.df
     val ranked = Ranks.globalRankPinned(verts, pin.rows, "r", $"v".asc)

@@ -34,10 +34,12 @@ import graft.core.Lineage.CutOps
   * the range shuffle/checkpoint and the offsets fold (~0.5–1.5 s at
   * sf0.1, amortizing constants at 100×). Queries that rank the SAME
   * base several times (three RFM quartiles, a signal committee) should
-  * `pinBase` once and call the `*Pinned` forms with the pin's row count
-  * (k × rows for an unpivot of k metrics): the input cut is then paid
-  * once, and a pinned rank on the window arm runs no job at
-  * construction.
+  * pin it once with `Lineage.counted` and call the `*Pinned` forms with
+  * the pin's row count (k × rows for an unpivot of k metrics): the
+  * counted cut computes the base NOW and every consumer — the range
+  * sampler, the shuffle, a sibling aggregate — re-reads the pinned
+  * partitions, so the input cut is paid once, and a pinned rank on the
+  * window arm runs no job at construction.
   *
   * Window arm (n ≤ windowMaxRows): each form plans the window it
   * decomposes over the counted input — `globalRank` one global-order
@@ -51,15 +53,6 @@ import graft.core.Lineage.CutOps
   * of a separate count aggregate and join.
   */
 object Ranks {
-
-  /** Eagerly materialize a base that several rank calls (or a rank
-    * call plus sibling aggregates over the same rows) will share. The
-    * counted cut both computes the lineage NOW and pins the result, so
-    * every consumer — the range sampler, the shuffle, an aggregate —
-    * re-reads pinned partitions instead of re-running the upstream
-    * plan; its `rows` is what the `*Pinned` forms take as their n.
-    */
-  def pinBase(df: DataFrame): Lineage.Pin = Lineage.counted(df)
 
   /** Covering-class spans over a CLASS HISTOGRAM (`cnt` rows per
     * (groups, value) class): appends the inclusive prefix count `hi`,
@@ -146,7 +139,7 @@ object Ranks {
       values: Seq[Column]): DataFrame =
     groupRankImpl(df, rankCol, groups, values, prePinned = false)
 
-  /** `groupRank` over a base already materialized via `pinBase` (or a
+  /** `groupRank` over a base already pinned by `Lineage.counted` (or a
     * prior rank's checkpointed output) — skips the per-call pin.
     */
   def groupRankPinned(df: DataFrame, rankCol: String, groups: Seq[Column],
@@ -158,7 +151,7 @@ object Ranks {
       prePinned: Boolean): DataFrame = {
     // the base feeds two consumers (the histogram and the final join) —
     // pin it so the upstream lineage runs once
-    val base = if (prePinned) df else pinBase(df).df
+    val base = if (prePinned) df else Lineage.counted(df).df
     val classes = base.groupBy(groups ++ values: _*)
       .agg(count(lit(1)).as("__cnt"))
     val classNames = classes.columns.dropRight(1).toSeq
@@ -275,8 +268,8 @@ object Ranks {
       order: Seq[Column], sizeCol: Option[String] = None): DataFrame =
     groupRowNumberImpl(df, rankCol, groups, order, pinnedRows = None, sizeCol)
 
-  /** `groupRowNumber` over a `pinBase`-materialized input of `rows` rows,
-    * or a frame cheap to recompute from one: a narrow projection (k ×
+  /** `groupRowNumber` over a `Lineage.counted` pin of `rows` rows, or a
+    * frame cheap to recompute from one: a narrow projection (k ×
     * the pin's rows for an unpivot of k metrics) or a pinned scan's
     * output. Above the dial the range sampler and the shuffle each
     * re-read it.
@@ -348,9 +341,9 @@ object Ranks {
     groupScanImpl(df, outCol, groups, order, value, isMax = true,
       exclusive = true, pinnedRows = None)
 
-  /** `groupRunningMaxExcl` over a `pinBase`-materialized input of `rows`
-    * rows — skips the per-call counted cut, so a caller that scans and
-    * then ranks the same rows pays one cut for both.
+  /** `groupRunningMaxExcl` over a `Lineage.counted` pin of `rows` rows
+    * — skips the per-call counted cut, so a caller that scans and then
+    * ranks the same rows pays one cut for both.
     */
   def groupRunningMaxExclPinned(df: DataFrame, rows: Long, outCol: String,
       groups: Seq[Column], order: Seq[Column], value: Column): DataFrame =
@@ -445,7 +438,7 @@ object Ranks {
   def globalRank(df: DataFrame, rankCol: String, order: Column*): DataFrame =
     rankImpl(df, rankCol, order, pinnedRows = None)
 
-  /** `globalRank` over a base already materialized via `pinBase` (or a
+  /** `globalRank` over a base already pinned by `Lineage.counted` (or a
     * narrow projection of one) holding `rows` rows — skips the per-call
     * cut (the range sampler and the shuffle both re-read the pinned
     * partitions directly) and, on the window arm, runs no job.

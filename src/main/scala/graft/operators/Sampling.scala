@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Lineage
 import graft.core.Lineage.CutOps
 import graft.core.Tables._
 import graft.plans.LexExtreme.{lexMax, lexMin}
@@ -564,7 +565,7 @@ object Sampling {
     */
   def splitDriftAudit(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val hist = Ranks.pinBase(hashSplit(spark, d)
+    val hist = Lineage.counted(hashSplit(spark, d)
       .join(documents(spark, d).select($"doc_id", $"n_chars"), "doc_id")
       .groupBy($"split", $"n_chars").agg(count(lit(1)).as("cnt"))).df
     val counts = hist.groupBy($"split")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Lineage
 import graft.core.Tables._
 import graft.functions.VectorFunctions._
 import graft.plans.LexExtreme.{lexMax, lexMin}
@@ -683,7 +684,7 @@ object Similarity {
         cosineFromParts(dotPreQ($"q_qemb", $"qemb"), $"q_n2", $"n2").as("cos"))
     // pinned: the top-k heap aggregate AND the candidate-volume count
     // both read the scored union without re-running the two joins
-    val all = Ranks.pinBase(brute.unionByName(leveled)).df
+    val all = Lineage.counted(brute.unionByName(leveled)).df
     // per-(budget, query) top-k via the native bounded-heap aggregate
     // (map-side partial heaps, shuffle carries ≤ partitions·k rows per
     // group) — replaces a full rank of every scored candidate. The

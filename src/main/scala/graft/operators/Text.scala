@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Lineage
 import graft.core.Lineage.CutOps
 import graft.core.Tables._
 import graft.functions.TextFunctions._
@@ -1549,7 +1550,7 @@ object Text {
     // rows. The row-level form this replaced ranked the full table twice
     // (two range shuffles + a row join); here the raw rows are never
     // shuffled again after the first combine.
-    val hist = graft.operators.Ranks.pinBase(
+    val hist = Lineage.counted(
       documents(spark, d).groupBy($"source", $"n_chars".as("x"))
         .agg(count(lit(1)).as("cnt"))).df
     // weighted median over a class histogram: inclusive prefix counts
@@ -1576,7 +1577,7 @@ object Text {
     val med = medianOfHist(hist, "x", "median_chars")
     // deviation classes derive from the VALUE histogram, not the rows:
     // |x − median| collapses at most two value classes per dev class
-    val devHist = graft.operators.Ranks.pinBase(
+    val devHist = Lineage.counted(
       hist.join(broadcast(med), "source")
         .withColumn("dev", abs($"x".cast("double") - $"median_chars"))
         .groupBy($"source", $"dev").agg(sum($"cnt").as("cnt"))).df
@@ -2114,7 +2115,7 @@ object Text {
     // the unique doc key. The double cast of entropy_q is exact (the
     // 1e6-quantized entropies are far below 2^53) and order-preserving,
     // so per-signal ranks are unchanged.
-    val sig = graft.operators.Ranks.pinBase(qualityScore(spark, d)
+    val sig = Lineage.counted(qualityScore(spark, d)
       .select($"doc_id", $"stop_ratio", $"alpha_ratio")
       .join(tokenEntropy(spark, d).select($"doc_id", $"entropy_q"), "doc_id")
       .join(documents(spark, d).select($"doc_id", $"lang"), "doc_id")).df

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Lineage
 import graft.core.Lineage.CutOps
 import graft.plans.LexExtreme.lexMax
 
@@ -183,15 +184,15 @@ object Windowed {
     * gaps.
     *
     * Scale: rides q113's three chained min-aggregates; the converted-
-    * user table is `pinBase`-pinned once, the three metrics UNPIVOT
-    * into one (metric, dur) stream, and ONE `Ranks.groupRowNumber`
+    * user table is pinned once by `Lineage.counted`, the three metrics
+    * UNPIVOT into one (metric, dur) stream, and ONE `Ranks.groupRowNumber`
     * machine ranks all three (metric is a group key) — no metric is
     * ever one sort partition, one rank machine instead of three, and
     * the funnel lineage runs exactly once.
     */
   def funnelLatency(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val pin = Ranks.pinBase(funnelStages(spark, d).filter($"stage" === 3L)
+    val pin = Lineage.counted(funnelStages(spark, d).filter($"stage" === 3L)
       .select($"user_id", ($"t2" - $"t1").as("d_vc"),
         ($"t3" - $"t2").as("d_cp"), ($"t3" - $"t1").as("d_vp")))
     val conv = pin.df
@@ -231,9 +232,9 @@ object Windowed {
     * global ranks minus a KNOWN offset — no per-group offset join),
     * then a single global aggregate computes counts, sums, bounce and
     * the three percentile picks (`max(when(gr = target))`) in one
-    * map-side-combined exchange. The session table is `pinBase`-pinned
-    * ONCE, so the sessionize lineage (events scan + user window) runs
-    * exactly once.
+    * map-side-combined exchange. The session table is pinned by
+    * `Lineage.counted` ONCE, so the sessionize lineage (events scan +
+    * user window) runs exactly once.
     */
   /** q234: inter-arrival burstiness per event type — Goh & Barabási's
     * B = (σ−μ)/(σ+μ) over every user's consecutive same-type event
@@ -423,7 +424,7 @@ object Windowed {
 
   def sessionStats(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val pin = Ranks.pinBase(sessionize(spark, d))
+    val pin = Lineage.counted(sessionize(spark, d))
     val s = pin.df
     // n as a driver scalar, counted by the pin's own job (the same A3
     // closed-over-scalar shape the rank machine uses for its offsets):
@@ -495,7 +496,7 @@ object Windowed {
     import spark.implicits._
     // ONE counted cut of the events projection serves both scans: the
     // running max and the lateness rank both take its row count
-    val pin = Ranks.pinBase(events(spark, d)
+    val pin = Lineage.counted(events(spark, d)
       .select($"event_type", $"event_id", unix_micros($"ts").as("tsu")))
     val late = Ranks.groupRunningMaxExclPinned(pin.df, pin.rows, "__rmax",
         Seq($"event_type"), Seq($"event_id"), $"tsu")
@@ -951,7 +952,7 @@ object Windowed {
     val mx = p.agg(max($"dy").as("mx"))
     // one pinned per-user base; its count n is a driver scalar, so the
     // quartile divisor is a plan literal (no count aggregate + broadcast)
-    val pin = Ranks.pinBase(u.crossJoin(broadcast(mx))
+    val pin = Lineage.counted(u.crossJoin(broadcast(mx))
       .select($"user_id", ($"mx" - $"last_dy").as("recency_days"),
         $"frequency", $"monetary_c"))
     val n = pin.rows

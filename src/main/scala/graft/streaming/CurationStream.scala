@@ -105,49 +105,8 @@ object CurationStream {
   case class PackAssign(doc_id: Long, source: String, n_toks: Long,
     pack_id: Long, pack_offset: Long)
 
-  /** q57's STREAMING twin: contiguous sequence packing as the corpus
-    * streams in — the per-source cumulative token count lives in keyed
-    * state (one long per source), and each arriving doc's
-    * (pack_id, pack_offset) is the batch layout's pure function of the
-    * prefix sum before it: pack = start div budget, offset = start mod
-    * budget. Micro-batches sort per source by doc_id (the
-    * budgetAdmission discipline), so under per-source monotone arrival
-    * — the ingest contract the batch layout's doc_id order encodes —
-    * the output is ROW-IDENTICAL to batch `Sampling.packSequences` at
-    * ANY micro-batch boundary placement (CurationStreamSpec asserts the
-    * state≡batch law on the real corpus). The token count is the exact
-    * Scala mirror of the batch `tokenSum(tokens(text), bpePieces)`
-    * column: Σ ⌊(len+3)/4⌋ over whitespace-split lowercase tokens.
-    *
-    * Docs are projected to (doc_id, token count) BEFORE grouping —
-    * 24-byte tuples, never text, buffer through the per-batch sort.
-    */
-  def packStream(docs: Dataset[StreamDoc], budget: Long = 2048L): Dataset[PackAssign] = {
-    import docs.sparkSession.implicits._
-    docs
-      .map(d0 => (d0.doc_id, d0.source,
-        d0.text.toLowerCase.split("\\s+")
-          .map(w => ((w.length + 3) / 4).toLong).sum))
-      .groupByKey(_._2)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (source: String, batch: Iterator[(Long, String, Long)],
-         state: GroupState[Long]) =>
-          var cum = state.getOption.getOrElse(0L)
-          val out = batch.toSeq.sortBy(_._1).map { case (id, _, n) =>
-            val start = cum
-            cum += n
-            PackAssign(id, source, n, start / budget, start % budget)
-          }
-          state.update(cum)
-          out.iterator
-      }
-  }
-
-  /** `packStream`'s processor on the Spark 4 `transformWithState`
-    * surface — same state (one cumulative-token long per source), same
-    * per-batch doc_id sort, same layout function; the runtime-parity
-    * twin (the HLL/histogram discipline: every stateful batch twin runs
-    * on BOTH stateful runtimes where applicable).
+  /** `packStream`'s processor: one cumulative-token long per source in
+    * a named ValueState, folded over each batch in doc_id order.
     */
   class PackProcessor(budget: Long) extends
       org.apache.spark.sql.streaming.StatefulProcessor[
@@ -175,11 +134,24 @@ object CurationStream {
     }
   }
 
-  /** `packStream` on the transformWithState runtime (see PackProcessor).
-    * Needs the RocksDB state store provider, like every
-    * transformWithState operator here.
+  /** q57's STREAMING twin: contiguous sequence packing as the corpus
+    * streams in — the per-source cumulative token count lives in keyed
+    * state (one long per source, `PackProcessor`), and each arriving
+    * doc's (pack_id, pack_offset) is the batch layout's pure function of
+    * the prefix sum before it: pack = start div budget, offset = start
+    * mod budget. Micro-batches sort per source by doc_id (the
+    * budgetAdmission discipline), so under per-source monotone arrival
+    * — the ingest contract the batch layout's doc_id order encodes —
+    * the output is ROW-IDENTICAL to batch `Sampling.packSequences` at
+    * ANY micro-batch boundary placement (CurationStreamSpec asserts the
+    * state≡batch law on the real corpus). The token count is the exact
+    * Scala mirror of the batch `tokenSum(tokens(text), bpePieces)`
+    * column: Σ ⌊(len+3)/4⌋ over whitespace-split lowercase tokens.
+    *
+    * Docs are projected to (doc_id, token count) BEFORE grouping —
+    * 24-byte tuples, never text, buffer through the per-batch sort.
     */
-  def packStreamTws(docs: Dataset[StreamDoc], budget: Long = 2048L): Dataset[PackAssign] = {
+  def packStream(docs: Dataset[StreamDoc], budget: Long = 2048L): Dataset[PackAssign] = {
     import docs.sparkSession.implicits._
     docs
       .map(d0 => (d0.doc_id, d0.source,
@@ -204,48 +176,9 @@ object CurationStream {
   case class AspectAssign(doc_id: Long, bucket: Long, batch_id: Long,
     slot: Long, w: Long, h: Long)
 
-  /** q207's STREAMING twin: aspect-bucketed batch assignment as assets
-    * stream in. The batch layout's within-bucket row_number is a pure
-    * function of the count of assets before it, so state is ONE LONG
-    * per aspect bucket (≤ ~11 buckets — the smallest state in the
-    * file); batch_id = cnt div B, slot = cnt mod B. Micro-batches sort
-    * per bucket by doc_id (the packStream discipline), so under
-    * per-bucket monotone arrival the assignments are ROW-IDENTICAL to
-    * the batch `Multimodal.aspectBatching` layout at any micro-batch
-    * boundary placement (CurationStreamSpec asserts the aggregated
-    * state≡batch law). Geometry is the shared q170 metadata derivation
-    * (w = n_chars%64+1, h = ⌈bytes/w⌉ clamped ≥ 1, bucket =
-    * ⌊log₂(16w/h)⌋).
-    */
-  def aspectBatchStream(assets: Dataset[AssetIn], batch: Int = 32): Dataset[AspectAssign] = {
-    import assets.sparkSession.implicits._
-    assets
-      .map { a =>
-        val w = a.n_chars % 64 + 1
-        val h = math.max((a.n_bytes + w - 1) / w, 1L)
-        val b = (63 - java.lang.Long.numberOfLeadingZeros(
-          math.max(w * 16 / h, 1L))).toLong
-        (a.doc_id, b, w, h)
-      }
-      .groupByKey(_._2)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (bucket: Long, rows: Iterator[(Long, Long, Long, Long)],
-         state: GroupState[Long]) =>
-          var cnt = state.getOption.getOrElse(0L)
-          val out = rows.toSeq.sortBy(_._1).map { case (id, _, w, h) =>
-            val asg = AspectAssign(id, bucket, cnt / batch, cnt % batch, w, h)
-            cnt += 1
-            asg
-          }
-          state.update(cnt)
-          out.iterator
-      }
-  }
-
-  /** `aspectBatchStream`'s processor on the Spark 4 `transformWithState`
-    * surface — same one-long-per-bucket state, same per-batch doc_id
-    * sort, same layout function (the PackProcessor runtime-parity
-    * discipline).
+  /** `aspectBatchStream`'s processor: one asset-count long per aspect
+    * bucket in a named ValueState, folded over each batch in doc_id
+    * order.
     */
   class AspectProcessor(batch: Int) extends
       org.apache.spark.sql.streaming.StatefulProcessor[
@@ -273,8 +206,20 @@ object CurationStream {
     }
   }
 
-  /** `aspectBatchStream` on the transformWithState runtime. */
-  def aspectBatchStreamTws(assets: Dataset[AssetIn], batch: Int = 32): Dataset[AspectAssign] = {
+  /** q207's STREAMING twin: aspect-bucketed batch assignment as assets
+    * stream in. The batch layout's within-bucket row_number is a pure
+    * function of the count of assets before it, so state is ONE LONG
+    * per aspect bucket (`AspectProcessor`; ≤ ~11 buckets — the smallest
+    * state in the file); batch_id = cnt div B, slot = cnt mod B.
+    * Micro-batches sort per bucket by doc_id (the packStream
+    * discipline), so under per-bucket monotone arrival the assignments
+    * are ROW-IDENTICAL to the batch `Multimodal.aspectBatching` layout
+    * at any micro-batch boundary placement (CurationStreamSpec asserts
+    * the aggregated state≡batch law). Geometry is the shared q170
+    * metadata derivation (w = n_chars%64+1, h = ⌈bytes/w⌉ clamped ≥ 1,
+    * bucket = ⌊log₂(16w/h)⌋).
+    */
+  def aspectBatchStream(assets: Dataset[AssetIn], batch: Int = 32): Dataset[AspectAssign] = {
     import assets.sparkSession.implicits._
     assets
       .map { a =>

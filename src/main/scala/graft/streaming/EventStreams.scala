@@ -14,6 +14,20 @@ import graft.functions.StableNum._
   * source/watermark differ). Batch-mode results of these transforms are
   * what the driver's q10/q11 oracles check; the streaming tests assert
   * watermark-driven firing on the same logic.
+  *
+  * One runtime per keyed-state program: every stateful family in
+  * `EventStreams`, `CurationStream` and `TaxiStreams` has exactly one
+  * implementation. It runs on Spark 4's `transformWithState` (named,
+  * typed state handles, TTL, timers; multi-column-family state, so the
+  * RocksDB state store provider) — one keyed-state abstraction and one
+  * snapshot layout for checkpoint recovery and a state-source reader.
+  * The legacy `(flat)mapGroupsWithState` API remains in four
+  * single-implementation folds: `TaxiStreams.travelTimePrediction` and
+  * `StreamProjections.predictionSlopesBatch`, whose callers run them on
+  * bounded Datasets (a bounded `transformWithState` fails with
+  * CANNOT_LOAD_STATE_STORE until the session has touched
+  * `spark.streams`), and `runningUserTotals` and
+  * `CurationStream.budgetAdmission`.
   */
 object EventStreams {
 
@@ -105,24 +119,6 @@ object EventStreams {
   case class HllRow(event_type: String, v_zero: Long, hll_raw: Long,
       hll_est: Long)
 
-  /** q127's HyperLogLog under streaming state: per event_type, the
-    * 256-register vector lives in `mapGroupsWithState` and each
-    * micro-batch folds its rows in by register max — which IS the HLL
-    * merge operation, so the final state is bit-identical to the batch
-    * sketch no matter how the stream is micro-batched (EventStreamsSpec
-    * asserts exactly that against `Relational.hllDistinct` across an
-    * arbitrary 3-batch split). Update mode re-emits a group's summary
-    * whenever new rows arrive; state is 256 longs per group, forever.
-    *
-    * The hash, rank rule, raw-estimate expression, and linear-counting
-    * table are the SAME code paths/constants as the batch query
-    * (md5 first-8-hex-chars; 25 − bitlength; the shared `HllLcTable`) —
-    * one sketch definition, three runtimes (batch, DuckDB oracle,
-    * streaming state).
-    */
-  /** Fold a batch of events into the 256-register HLL state — register
-    * max IS the HLL merge, shared by both stateful runtimes.
-    */
   /** One HLL event: MD5 the id, bucket on the low byte, register-max
     * the rank — the SINGLE definition of the sketch-defining constants
     * ("hll:" prefix, first-8-hex parse, 256 buckets, 25 − bitlength
@@ -144,6 +140,9 @@ object EventStreams {
     if (rank > regs(b)) regs(b) = rank
   }
 
+  /** Fold a batch of events into the 256-register HLL state — register
+    * max IS the HLL merge.
+    */
   private def hllFold(regs: Array[Long], evs: Iterator[Event]): Unit = {
     val md = java.security.MessageDigest.getInstance("MD5")
     evs.foreach(e => hllFoldOne(md, regs, e.user_id))
@@ -162,30 +161,11 @@ object EventStreams {
     HllRow(t, vZero, raw, est)
   }
 
-  def hllSketchStream(events: Dataset[Event]): Dataset[HllRow] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (t: String, evs: Iterator[Event], state: GroupState[Array[Long]]) =>
-          val regs = state.getOption.getOrElse(Array.fill(256)(0L))
-          hllFold(regs, evs)
-          state.update(regs)
-          hllSummary(t, regs)
-      }
-  }
-
   /** Register-vector state wrapper (product encoder for the state store). */
   case class HllRegs(regs: Array[Long])
 
-  /** q127's HLL on the Spark 4 `transformWithState` surface — the same
-    * register fold/merge as hllSketchStream held in a named ValueState
-    * (the production arbitrary-state API: typed handles, TTL,
-    * multi-column-family state under RocksDB). Completing the W4
-    * migration the travel-time predictor started
-    * (TaxiStreams.PredictionProcessor) so state-store evolution is
-    * uniform across the sketch family; EventStreamsSpec runs the
-    * state≡batch merge law on BOTH runtimes.
+  /** `hllSketchStream`'s processor: the register fold/merge held in a
+    * named ValueState.
     */
   class HllProcessor extends
       org.apache.spark.sql.streaming.StatefulProcessor[String, Event, HllRow] {
@@ -208,7 +188,23 @@ object EventStreams {
     }
   }
 
-  def hllSketchStreamTws(events: Dataset[Event]): Dataset[HllRow] = {
+  /** q127's HyperLogLog under streaming state: per event_type, the
+    * 256-register vector lives in keyed ValueState (`HllProcessor`) and
+    * each micro-batch folds its rows in by register max — which IS the
+    * HLL merge operation, so the final state is bit-identical to the
+    * batch sketch no matter how the stream is micro-batched
+    * (EventStreamsSpec asserts exactly that against
+    * `Relational.hllDistinct` across an arbitrary 3-batch split).
+    * Update mode re-emits a group's summary whenever new rows arrive;
+    * state is 256 longs per group, forever.
+    *
+    * The hash, rank rule, raw-estimate expression, and linear-counting
+    * table are the SAME code paths/constants as the batch query
+    * (md5 first-8-hex-chars; 25 − bitlength; the shared `HllLcTable`) —
+    * one sketch definition, three runtimes (batch, DuckDB oracle,
+    * streaming state).
+    */
+  def hllSketchStream(events: Dataset[Event]): Dataset[HllRow] = {
     import events.sparkSession.implicits._
     events
       .groupByKey(_.event_type)
@@ -219,33 +215,7 @@ object EventStreams {
   case class HistRow(event_type: String, n: Long, filled_bins: Long,
       max_bin_cnt: Long)
 
-  /** q129's histogram under streaming state: per event_type the 64 bin
-    * counts accumulate in `mapGroupsWithState` — bin-count ADDITION is
-    * the histogram merge, so state equals the batch bins over the same
-    * rows regardless of micro-batching (EventStreamsSpec asserts the
-    * bin-vector equality against a batch recompute). Range is fixed a
-    * priori (the streaming deployment of the q129 scaladoc: one pass,
-    * no min/max pre-scan) — bins outside clamp to the edges.
-    */
-  def histogramStream(events: Dataset[Event], lo: Double, hi: Double,
-      nBins: Int = 64): Dataset[HistRow] = {
-    // a degenerate range would make the bin expression NaN, which .toInt
-    // silently maps to bin 0 — the batch q129 special-cases mx == mn;
-    // here the range is caller-fixed, so reject it loudly (round-9 advice)
-    require(hi > lo, s"histogramStream needs hi > lo (got lo=$lo, hi=$hi)")
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (t: String, evs: Iterator[Event], state: GroupState[Array[Long]]) =>
-          val bins = state.getOption.getOrElse(Array.fill(nBins)(0L))
-          histFold(bins, lo, hi, nBins, evs)
-          state.update(bins)
-          HistRow(t, bins.sum, bins.count(_ > 0L).toLong, bins.max)
-      }
-  }
-
-  /** Bin-count addition IS the histogram merge — shared by both runtimes. */
+  /** Bin-count addition IS the histogram merge. */
   private def histFold(bins: Array[Long], lo: Double, hi: Double,
       nBins: Int, evs: Iterator[Event]): Unit =
     evs.foreach { e =>
@@ -257,9 +227,8 @@ object EventStreams {
   /** Bin-vector state wrapper (product encoder for the state store). */
   case class HistBins(bins: Array[Long])
 
-  /** q129's histogram on the `transformWithState` surface — same bin
-    * fold as histogramStream in a named ValueState (see HllProcessor for
-    * why the whole sketch family rides the modern API).
+  /** `histogramStream`'s processor: the bin fold held in a named
+    * ValueState.
     */
   class HistProcessor(lo: Double, hi: Double, nBins: Int) extends
       org.apache.spark.sql.streaming.StatefulProcessor[String, Event, HistRow] {
@@ -282,9 +251,22 @@ object EventStreams {
     }
   }
 
-  def histogramStreamTws(events: Dataset[Event], lo: Double, hi: Double,
+  /** q129's histogram under streaming state: per event_type the 64 bin
+    * counts accumulate in keyed ValueState (`HistProcessor`) — bin-count
+    * ADDITION is the histogram merge, so state equals the batch bins
+    * over the same rows regardless of micro-batching (EventStreamsSpec
+    * asserts the bin-vector equality against a batch recompute, and a
+    * killed-and-resumed query's final bins against the whole feed).
+    * Range is fixed a priori (the streaming deployment of the q129
+    * scaladoc: one pass, no min/max pre-scan) — bins outside clamp to
+    * the edges. State is nBins longs per group, forever.
+    */
+  def histogramStream(events: Dataset[Event], lo: Double, hi: Double,
       nBins: Int = 64): Dataset[HistRow] = {
-    require(hi > lo, s"histogramStreamTws needs hi > lo (got lo=$lo, hi=$hi)")
+    // a degenerate range would make the bin expression NaN, which .toInt
+    // silently maps to bin 0 — the batch q129 special-cases mx == mn;
+    // here the range is caller-fixed, so reject it loudly
+    require(hi > lo, s"histogramStream needs hi > lo (got lo=$lo, hi=$hi)")
     import events.sparkSession.implicits._
     events
       .groupByKey(_.event_type)
@@ -326,8 +308,8 @@ object EventStreams {
   }
 
   /** q153's daily-volume anomaly monitor in streaming form, on the
-    * Spark 4 `transformWithState` surface (the whole monitoring family
-    * rides the modern API — see HllProcessor): per event type the state
+    * Spark 4 `transformWithState` surface (the one keyed-state runtime —
+    * see the object doc): per event type the state
     * is the (day → count) vector, and each micro-batch folds its rows in
     * by count ADDITION — which IS the daily-histogram merge, so the
     * final state is independent of how the stream is micro-batched
@@ -386,11 +368,11 @@ object EventStreams {
   /** Flattened d×w register vector (product encoder for the state store). */
   case class CmsRegs(regs: Array[Long])
 
-  /** Count ADDITION is the CMS merge — shared by both stateful runtimes.
-    * The hash is the q162 md5 primitive ("cms:<row>:<user_id>", first 8
-    * hex chars), so the stream state is exactly the batch register table
-    * over the same rows, independent of micro-batching. Returns the
-    * number of rows folded.
+  /** Count ADDITION is the CMS merge. The hash is the q162 md5
+    * primitive ("cms:<row>:<user_id>", first 8 hex chars), so the
+    * stream state is exactly the batch register table over the same
+    * rows, independent of micro-batching. Returns the number of rows
+    * folded.
     */
   private def cmsFold(regs: Array[Long], dRows: Int, w: Int,
       evs: Iterator[Event]): Long = {
@@ -418,32 +400,8 @@ object EventStreams {
     CmsRow(t, regs.take(w).sum, regs.count(_ > 0L).toLong, regs.max, f2)
   }
 
-  /** q162's Count–Min sketch under streaming state (mapGroupsWithState
-    * runtime): per event_type the flattened 4×256 register vector
-    * accumulates by count addition — the CMS merge — so the final state
-    * equals a batch fold over the same rows no matter how the stream is
-    * micro-batched (EventStreamsSpec asserts it on both runtimes).
-    * State is d·w longs per key, forever; the emitted summary carries
-    * the q163 F₂ fingerprint (min over rows of Σ bucket²), which is
-    * collision-sensitive enough to pin the whole register table.
-    */
-  def cmsStream(events: Dataset[Event], dRows: Int = 4,
-      w: Int = 256): Dataset[CmsRow] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (t: String, evs: Iterator[Event], state: GroupState[Array[Long]]) =>
-          val regs = state.getOption.getOrElse(Array.fill(dRows * w)(0L))
-          cmsFold(regs, dRows, w, evs)
-          state.update(regs)
-          cmsSummary(t, regs, dRows, w)
-      }
-  }
-
-  /** q162's CMS on the `transformWithState` surface — same fold in a
-    * named ValueState (see HllProcessor for why the sketch family rides
-    * the modern API too).
+  /** `cmsStream`'s processor: the register fold held in a named
+    * ValueState.
     */
   class CmsProcessor(dRows: Int, w: Int) extends
       org.apache.spark.sql.streaming.StatefulProcessor[String, Event, CmsRow] {
@@ -466,7 +424,17 @@ object EventStreams {
     }
   }
 
-  def cmsStreamTws(events: Dataset[Event], dRows: Int = 4,
+  /** q162's Count–Min sketch under streaming state: per event_type the
+    * flattened 4×256 register vector accumulates in keyed ValueState
+    * (`CmsProcessor`) by count addition — the CMS merge — so the final
+    * state equals a batch fold over the same rows no matter how the
+    * stream is micro-batched (EventStreamsSpec asserts it, and that the
+    * salted partials add-merge to these rows). State is d·w longs per
+    * key, forever; the emitted summary carries the q163 F₂ fingerprint
+    * (min over rows of Σ bucket²), which is collision-sensitive enough
+    * to pin the whole register table.
+    */
+  def cmsStream(events: Dataset[Event], dRows: Int = 4,
       w: Int = 256): Dataset[CmsRow] = {
     import events.sparkSession.implicits._
     events
@@ -635,7 +603,7 @@ object EventStreams {
 
   /** Stateless downstream assembly for CMS: per (type, salt) keep the
     * max-n (final) emission, then element-wise ADD across salts — the
-    * CMS merge — and summarize. Bit-identical to cmsStreamTws's final
+    * CMS merge — and summarize. Bit-identical to cmsStream's final
     * rows and the batch register table over the same rows.
     */
   def mergeCmsPartials(partials: Dataset[CmsPartialRow], dRows: Int = 4,
@@ -1114,8 +1082,10 @@ object EventStreams {
     * the fold is deliberate, not a shortcut: next-fit is order-
     * dependent, so a late row for an EARLIER day legitimately revises
     * the packing of every later day — same revision semantics as the
-    * anomaly monitor and the reach curve. The q57 packStream state shape
-    * (running (file, load) next-fit state) applies per day-ordered fold;
+    * anomaly monitor and the reach curve. Unlike q57's
+    * `CurationStream.packStream`, which carries its running offset
+    * across batches, the (file, load) next-fit state lives only inside
+    * one day-ordered fold;
     * `state_n` (rows folded) stamps emissions for the final-row law.
     */
   class CompactionProcessor(capacity: Long) extends
@@ -1186,7 +1156,7 @@ object EventStreams {
 
   /** Stage 1 of streaming q196: the q127 register merge, emitting the
     * REGISTERS (not the summary) so a downstream stage can do set
-    * algebra on them. Same fold as hllSketchStreamTws; `state_n` stamps
+    * algebra on them. Same fold as hllSketchStream; `state_n` stamps
     * the emission.
     */
   class HllRegsProcessor extends

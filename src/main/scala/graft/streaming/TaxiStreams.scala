@@ -101,52 +101,14 @@ object TaxiStreams {
     }
   }
 
-  /** TravelTimePrediction on the Spark 4 `transformWithState` API (the
-    * modern arbitrary-state surface SURVEY §2.6 W4 points to): same
-    * per-cell regression state as travelTimePrediction, expressed as a
-    * StatefulProcessor with a named ValueState handle — the
-    * production-grade form (typed state handles, TTL support, timers).
-    */
-  class PredictionProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Int, TaxiRide, Prediction] {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{TTLConfig, TimeMode, ValueState}
-
-    @transient private var state: ValueState[PredictionState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[PredictionState](
-        "regressionModel", Encoders.product[PredictionState], TTLConfig.NONE)
-
-    override def handleInputRows(key: Int, rows: Iterator[TaxiRide],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[Prediction] = {
-      var s = if (state.exists()) state.get() else PredictionState.empty
-      val out = Seq.newBuilder[Prediction]
-      rows.toSeq.sortBy(_.eventTime.getTime).foreach { r =>
-        val (s2, p) = applyRide(s, r)
-        s = s2
-        p.foreach(out += _)
-      }
-      state.update(s)
-      out.result().iterator
-    }
-  }
-
-  def travelTimePredictionTws(rides: Dataset[TaxiRide]): Dataset[Prediction] = {
-    import rides.sparkSession.implicits._
-    rides
-      .filter(r => Geo.isInNYC(r.startLon, r.startLat) && Geo.isInNYC(r.endLon, r.endLat))
-      .groupByKey(r => Geo.mapToGridCell(r.endLon, r.endLat))
-      .transformWithState(new PredictionProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-  }
-
   /** TravelTimePrediction as flatMapGroupsWithState keyed by destination
     * cell (GridCellMatcher state variant, TravelTimePrediction.java:106-114).
     * Within a micro-batch, events are applied in event-time order (the
     * reference relies on arrival order; event-time order is the
-    * deterministic equivalent under replay). Works identically on bounded
-    * Datasets (batch mode) for testing.
+    * deterministic equivalent under replay). Runs on streaming and on
+    * bounded Datasets: `apps.TravelTimePrediction` feeds it the bounded
+    * `TaxiSource.readRides`, which is why this family stays on
+    * `flatMapGroupsWithState` (see the `EventStreams` object doc).
     */
   def travelTimePrediction(rides: Dataset[TaxiRide]): Dataset[Prediction] = {
     import rides.sparkSession.implicits._

@@ -18,9 +18,10 @@ import org.apache.spark.sql.streaming.Trigger
   *   - sliding_counts     — watermarked sliding-window agg (q10 twin)
   *   - dedup_watermark    — dropDuplicatesWithinWatermark (q09 twin)
   *   - session_window     — merging session-window agg (q41 twin)
-  *   - hll_tws            — transformWithState HLL sketch (q127 twin,
-  *                          RocksDB state store)
-  *   - cms_tws            — transformWithState CMS sketch (q162 twin)
+  *   - hll_tws            — `hllSketchStream`, the transformWithState
+  *                          HLL sketch (q127 twin, RocksDB state store)
+  *   - cms_tws            — `cmsStream`, the transformWithState CMS
+  *                          sketch (q162 twin)
   *   - transition_tws     — transformWithState Markov transitions
   *                          (q128 twin; keyed by user — the high-
   *                          cardinality state shape)
@@ -128,11 +129,11 @@ object StreamBench {
     run("dedup_watermark", "append")(df => EventStreams.dedupStream(df))
     run("session_window", "append")(df => EventStreams.sessionStream(df))
     run("hll_tws", "update")(df =>
-      EventStreams.hllSketchStreamTws(df.as[Event]).toDF())
+      EventStreams.hllSketchStream(df.as[Event]).toDF())
     run("hll_partials", "update")(df =>
       EventStreams.hllSketchStreamPartials(df.as[Event]).toDF())
     run("cms_tws", "update")(df =>
-      EventStreams.cmsStreamTws(df.as[Event]).toDF())
+      EventStreams.cmsStream(df.as[Event]).toDF())
     run("cms_partials", "update")(df =>
       EventStreams.cmsStreamPartials(df.as[Event]).toDF())
     run("transition_tws", "update")(df =>

@@ -69,53 +69,26 @@ class CurationStreamSpec extends AnyFunSuite {
       .map { case (id, text, src) =>
         StreamDoc(id, ts("2024-01-01 00:00:00"), text, src)
       }
-    val input = MemoryStream[StreamDoc]
-    val query = CurationStream.packStream(input.toDS())
-      .writeStream.format("memory").queryName("pack_stream")
-      .outputMode("append").start()
-    try {
-      docs.grouped(137).foreach { chunk =>
-        input.addData(chunk.toIndexedSeq: _*)
-        query.processAllAvailable()
-      }
-      val got = spark.table("pack_stream")
-        .as[CurationStream.PackAssign].collect()
-        .map(p => (p.doc_id, p.source, p.n_toks, p.pack_id, p.pack_offset))
-        .toSet
-      val want = graft.operators.Sampling.packSequences(spark, sf)
-        .as[(Long, String, Long, Long, Long)].collect().toSet
-      assert(got == want,
-        "streaming pack assignment must be row-identical to the batch layout")
-    } finally query.stop()
-
-    // runtime parity: the transformWithState twin produces the same set
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input2 = MemoryStream[StreamDoc]
-    val query2 = CurationStream.packStreamTws(input2.toDS())
-      .writeStream.format("memory").queryName("pack_stream_tws")
-      .outputMode("append").start()
-    try {
-      docs.grouped(311).foreach { chunk =>
-        input2.addData(chunk.toIndexedSeq: _*)
-        query2.processAllAvailable()
-      }
-      val gotTws = spark.table("pack_stream_tws")
-        .as[CurationStream.PackAssign].collect()
-        .map(p => (p.doc_id, p.source, p.n_toks, p.pack_id, p.pack_offset))
-        .toSet
-      val want = graft.operators.Sampling.packSequences(spark, sf)
-        .as[(Long, String, Long, Long, Long)].collect().toSet
-      assert(gotTws == want, "transformWithState twin must match the batch layout")
-      assert(TestSpark.streamingPlan(query2).contains("TransformWithState"))
-    } finally {
-      query2.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
+    TestSpark.withRocksDb {
+      val input = MemoryStream[StreamDoc]
+      val query = CurationStream.packStream(input.toDS())
+        .writeStream.format("memory").queryName("pack_stream")
+        .outputMode("append").start()
+      try {
+        docs.grouped(137).foreach { chunk =>
+          input.addData(chunk.toIndexedSeq: _*)
+          query.processAllAvailable()
+        }
+        val got = spark.table("pack_stream")
+          .as[CurationStream.PackAssign].collect()
+          .map(p => (p.doc_id, p.source, p.n_toks, p.pack_id, p.pack_offset))
+          .toSet
+        val want = graft.operators.Sampling.packSequences(spark, sf)
+          .as[(Long, String, Long, Long, Long)].collect().toSet
+        assert(got == want,
+          "streaming pack assignment must be row-identical to the batch layout")
+        assert(TestSpark.streamingPlan(query).contains("TransformWithState"))
+      } finally query.stop()
     }
   }
 
@@ -124,56 +97,48 @@ class CurationStreamSpec extends AnyFunSuite {
     implicit val ctx = spark.sqlContext
     // value + list state + timers = multiple column families → RocksDB
     // provider (the production choice for transformWithState anyway)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[StreamDoc]
-    val query = CurationStream
-      .budgetAdmissionOrdered(input.toDS(), budget = 20L, watermark = "1 minute")
-      .writeStream.format("memory").queryName("cur_ordered")
-      .outputMode("append").start()
-    try {
-      val base = ts("2024-01-01 00:00:00").getTime
-      // one hot source floods a single micro-batch, arriving in REVERSE
-      // doc order — rows buffer into list state one at a time and the
-      // admission fold must still run in (ts, doc_id) order
-      val hot = (500 to 1 by -1).map { i =>
-        StreamDoc(i.toLong, new Timestamp(base + i * 1000L), "tok tok tok", "web")
-      }
-      input.addData(hot: _*)
-      query.processAllAvailable()
-      // the first watermark advance (maxTs − 1 min) already matures docs
-      // 1..440 and the timer batch flushes them: the budget prefix is out
-      assert(spark.table("cur_ordered").count() == 7)
-      input.addData(StreamDoc(9999, new Timestamp(base + 3600 * 1000L),
-        "probe probe probe probe", "other"))
-      query.processAllAvailable()
-      val rows = spark.table("cur_ordered").as[Admitted].collect()
-        .filter(_.source == "web").sortBy(_.doc_id)
-      // 3 tokens per doc, budget 20: docs 1..7 admitted (used 3,6,…,21),
-      // doc 8 onward rejected — the event-time prefix, not arrival order
-      assert(rows.map(_.doc_id).toSeq == (1L to 7L), rows.mkString(", "))
-      assert(rows.map(_.budget_used).toSeq == (1 to 7).map(_ * 3L))
-      val plan = TestSpark.streamingPlan(query)
-      assert(plan.contains("TransformWithState"), plan)
-      // the BATCH projection (q92's fold) must reproduce the live
-      // operator's admitted set row-for-row on the same skewed fixture
-      val batch = graft.operators.StreamProjections.orderedAdmissionFold(
-          hot.toSeq.toDF("doc_id", "ts", "text", "source")
-            .select($"doc_id", $"source",
-              lit(3L).as("n_tokens"), $"ts".cast("long").as("ts_s")),
-          budget = 20L)
-        .as[Admitted].collect().sortBy(_.doc_id)
-      assert(batch.map(r => (r.doc_id, r.n_tokens, r.budget_used)).toSeq ==
-        rows.map(r => (r.doc_id, r.n_tokens, r.budget_used)).toSeq,
-        "batch fold must equal the streaming admission")
-    } finally {
-      query.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
+    TestSpark.withRocksDb {
+      val input = MemoryStream[StreamDoc]
+      val query = CurationStream
+        .budgetAdmissionOrdered(input.toDS(), budget = 20L, watermark = "1 minute")
+        .writeStream.format("memory").queryName("cur_ordered")
+        .outputMode("append").start()
+      try {
+        val base = ts("2024-01-01 00:00:00").getTime
+        // one hot source floods a single micro-batch, arriving in REVERSE
+        // doc order — rows buffer into list state one at a time and the
+        // admission fold must still run in (ts, doc_id) order
+        val hot = (500 to 1 by -1).map { i =>
+          StreamDoc(i.toLong, new Timestamp(base + i * 1000L), "tok tok tok", "web")
+        }
+        input.addData(hot: _*)
+        query.processAllAvailable()
+        // the first watermark advance (maxTs − 1 min) already matures docs
+        // 1..440 and the timer batch flushes them: the budget prefix is out
+        assert(spark.table("cur_ordered").count() == 7)
+        input.addData(StreamDoc(9999, new Timestamp(base + 3600 * 1000L),
+          "probe probe probe probe", "other"))
+        query.processAllAvailable()
+        val rows = spark.table("cur_ordered").as[Admitted].collect()
+          .filter(_.source == "web").sortBy(_.doc_id)
+        // 3 tokens per doc, budget 20: docs 1..7 admitted (used 3,6,…,21),
+        // doc 8 onward rejected — the event-time prefix, not arrival order
+        assert(rows.map(_.doc_id).toSeq == (1L to 7L), rows.mkString(", "))
+        assert(rows.map(_.budget_used).toSeq == (1 to 7).map(_ * 3L))
+        val plan = TestSpark.streamingPlan(query)
+        assert(plan.contains("TransformWithState"), plan)
+        // the BATCH projection (q92's fold) must reproduce the live
+        // operator's admitted set row-for-row on the same skewed fixture
+        val batch = graft.operators.StreamProjections.orderedAdmissionFold(
+            hot.toSeq.toDF("doc_id", "ts", "text", "source")
+              .select($"doc_id", $"source",
+                lit(3L).as("n_tokens"), $"ts".cast("long").as("ts_s")),
+            budget = 20L)
+          .as[Admitted].collect().sortBy(_.doc_id)
+        assert(batch.map(r => (r.doc_id, r.n_tokens, r.budget_used)).toSeq ==
+          rows.map(r => (r.doc_id, r.n_tokens, r.budget_used)).toSeq,
+          "batch fold must equal the streaming admission")
+      } finally query.stop()
     }
   }
 
@@ -205,36 +170,28 @@ class CurationStreamSpec extends AnyFunSuite {
       .as[(Long, String, String, Long)].collect()
       .map { case (id, l, s, n) =>
         DocArrival(id, ts("2024-01-01 00:00:00"), l, s, n) }
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[DocArrival]
-    val query = CurationStream.incrementalManifest(input.toDS(), snapshot)
-      .writeStream.format("memory").queryName("incr_manifest")
-      .outputMode("append").start()
-    try {
-      // arbitrary micro-batching must not matter: state is read-only per key
-      arrivals.grouped(math.max(1, arrivals.length / 3 + 1)).foreach { chunk =>
-        input.addData(chunk.toIndexedSeq: _*)
-        query.processAllAvailable()
-      }
-      val streamed = spark.table("incr_manifest").as[ManifestRow].collect().toSet
-      val batch = graft.operators.Pipeline.incrementalManifestBatch(spark, sf)
-        .as[ManifestRow].collect().toSet
-      assert(streamed == batch, "streamed manifest drifted from the batch projection")
-      assert(batch.exists(_.is_new) && batch.exists(!_.is_new),
-        "fixture must exercise both the state-hit and fallback paths")
-    } finally {
-      query.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
+    TestSpark.withRocksDb {
+      val input = MemoryStream[DocArrival]
+      val query = CurationStream.incrementalManifest(input.toDS(), snapshot)
+        .writeStream.format("memory").queryName("incr_manifest")
+        .outputMode("append").start()
+      try {
+        // arbitrary micro-batching must not matter: state is read-only per key
+        arrivals.grouped(math.max(1, arrivals.length / 3 + 1)).foreach { chunk =>
+          input.addData(chunk.toIndexedSeq: _*)
+          query.processAllAvailable()
+        }
+        val streamed = spark.table("incr_manifest").as[ManifestRow].collect().toSet
+        val batch = graft.operators.Pipeline.incrementalManifestBatch(spark, sf)
+          .as[ManifestRow].collect().toSet
+        assert(streamed == batch, "streamed manifest drifted from the batch projection")
+        assert(batch.exists(_.is_new) && batch.exists(!_.is_new),
+          "fixture must exercise both the state-hit and fallback paths")
+      } finally query.stop()
     }
   }
 
-  test("aspectBatchStream: aggregated assignments == batch q207 on both runtimes") {
+  test("aspectBatchStream: aggregated assignments == batch q207") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val sf = "/root/testdata/sf0.001"
@@ -264,41 +221,20 @@ class CurationStreamSpec extends AnyFunSuite {
         }.toSet
     }
 
-    val input = MemoryStream[CurationStream.AssetIn]
-    val query = CurationStream.aspectBatchStream(input.toDS())
-      .writeStream.format("memory").queryName("aspect_stream")
-      .outputMode("append").start()
-    try {
-      assets.grouped(89).foreach { chunk =>
-        input.addData(chunk.toIndexedSeq: _*)
-        query.processAllAvailable()
-      }
-      assert(aggregated("aspect_stream") == want,
-        "stream assignments must aggregate to the batch plan")
-    } finally query.stop()
-
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input2 = MemoryStream[CurationStream.AssetIn]
-    val query2 = CurationStream.aspectBatchStreamTws(input2.toDS())
-      .writeStream.format("memory").queryName("aspect_stream_tws")
-      .outputMode("append").start()
-    try {
-      assets.grouped(211).foreach { chunk =>
-        input2.addData(chunk.toIndexedSeq: _*)
-        query2.processAllAvailable()
-      }
-      assert(aggregated("aspect_stream_tws") == want,
-        "transformWithState twin must aggregate to the batch plan")
-      assert(TestSpark.streamingPlan(query2).contains("TransformWithState"))
-    } finally {
-      query2.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
+    TestSpark.withRocksDb {
+      val input = MemoryStream[CurationStream.AssetIn]
+      val query = CurationStream.aspectBatchStream(input.toDS())
+        .writeStream.format("memory").queryName("aspect_stream")
+        .outputMode("append").start()
+      try {
+        assets.grouped(89).foreach { chunk =>
+          input.addData(chunk.toIndexedSeq: _*)
+          query.processAllAvailable()
+        }
+        assert(aggregated("aspect_stream") == want,
+          "stream assignments must aggregate to the batch plan")
+        assert(TestSpark.streamingPlan(query).contains("TransformWithState"))
+      } finally query.stop()
     }
   }
 
@@ -312,35 +248,27 @@ class CurationStreamSpec extends AnyFunSuite {
       .map { case (id, text, src) =>
         CurationStream.StreamDoc(id, ts("2024-01-01 00:00:00"), text, src)
       }
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[CurationStream.StreamDoc]
-    val query = CurationStream.shardDiversityStream(input.toDS())
-      .writeStream.format("memory").queryName("shard_div_stream")
-      .outputMode("update").start()
-    try {
-      docs.grouped(127).foreach { chunk =>
-        input.addData(chunk.toIndexedSeq: _*)
-        query.processAllAvailable()
-      }
-      val rows = spark.table("shard_div_stream")
-        .as[CurationStream.ShardDivRow].collect()
-      val fin = rows.groupBy(_.shard).toSeq.map { case (_, rs) =>
-        val last = rs.maxBy(_.state_n)
-        (last.shard, last.n_docs, last.n_sources, last.entropy_q12)
-      }.toSet
-      val batch = graft.operators.Sharding.shardDiversity(spark, sf)
-        .as[(Long, Long, Long, Long)].collect().toSet
-      assert(fin == batch,
-        "final shard-mix emissions must equal the batch diversity audit")
-    } finally {
-      query.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
+    TestSpark.withRocksDb {
+      val input = MemoryStream[CurationStream.StreamDoc]
+      val query = CurationStream.shardDiversityStream(input.toDS())
+        .writeStream.format("memory").queryName("shard_div_stream")
+        .outputMode("update").start()
+      try {
+        docs.grouped(127).foreach { chunk =>
+          input.addData(chunk.toIndexedSeq: _*)
+          query.processAllAvailable()
+        }
+        val rows = spark.table("shard_div_stream")
+          .as[CurationStream.ShardDivRow].collect()
+        val fin = rows.groupBy(_.shard).toSeq.map { case (_, rs) =>
+          val last = rs.maxBy(_.state_n)
+          (last.shard, last.n_docs, last.n_sources, last.entropy_q12)
+        }.toSet
+        val batch = graft.operators.Sharding.shardDiversity(spark, sf)
+          .as[(Long, Long, Long, Long)].collect().toSet
+        assert(fin == batch,
+          "final shard-mix emissions must equal the batch diversity audit")
+      } finally query.stop()
     }
   }
 
@@ -354,38 +282,30 @@ class CurationStreamSpec extends AnyFunSuite {
       .map { case (id, text, src) =>
         CurationStream.StreamDoc(id, ts("2024-01-01 00:00:00"), text, src)
       }
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[CurationStream.StreamDoc]
-    val query = CurationStream.ruleMatrixStream(input.toDS())
-      .writeStream.format("memory").queryName("rule_matrix_stream")
-      .outputMode("update").start()
-    try {
-      docs.grouped(113).foreach { chunk =>
-        input.addData(chunk.toIndexedSeq: _*)
-        query.processAllAvailable()
-      }
-      val rows = spark.table("rule_matrix_stream")
-        .as[CurationStream.RuleMatrixRow].collect()
-      val fin = rows.groupBy(_.source).toSeq.map { case (_, rs) =>
-        val last = rs.maxBy(_.n_docs)
-        (last.source, last.n_docs, last.fail_words, last.fail_mean,
-          last.fail_alpha, last.fail_sym, last.fail_req, last.n_pass,
-          last.pass_rate_q6)
-      }.toSet
-      val batch = graft.operators.Text.sourceRuleMatrix(spark, sf)
-        .as[(String, Long, Long, Long, Long, Long, Long, Long, Long)]
-        .collect().toSet
-      assert(fin == batch,
-        "final rule-matrix emissions must equal the q222 batch audit")
-    } finally {
-      query.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
+    TestSpark.withRocksDb {
+      val input = MemoryStream[CurationStream.StreamDoc]
+      val query = CurationStream.ruleMatrixStream(input.toDS())
+        .writeStream.format("memory").queryName("rule_matrix_stream")
+        .outputMode("update").start()
+      try {
+        docs.grouped(113).foreach { chunk =>
+          input.addData(chunk.toIndexedSeq: _*)
+          query.processAllAvailable()
+        }
+        val rows = spark.table("rule_matrix_stream")
+          .as[CurationStream.RuleMatrixRow].collect()
+        val fin = rows.groupBy(_.source).toSeq.map { case (_, rs) =>
+          val last = rs.maxBy(_.n_docs)
+          (last.source, last.n_docs, last.fail_words, last.fail_mean,
+            last.fail_alpha, last.fail_sym, last.fail_req, last.n_pass,
+            last.pass_rate_q6)
+        }.toSet
+        val batch = graft.operators.Text.sourceRuleMatrix(spark, sf)
+          .as[(String, Long, Long, Long, Long, Long, Long, Long, Long)]
+          .collect().toSet
+        assert(fin == batch,
+          "final rule-matrix emissions must equal the q222 batch audit")
+      } finally query.stop()
     }
   }
 
@@ -399,45 +319,37 @@ class CurationStreamSpec extends AnyFunSuite {
       .map { case (id, text, src) =>
         CurationStream.StreamDoc(id, ts("2024-01-01 00:00:00"), text, src)
       }
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[CurationStream.StreamDoc]
-    val query = CurationStream.ruleAblationStream(input.toDS())
-      .writeStream.format("memory").queryName("rule_ablation_stream")
-      .outputMode("update").start()
-    try {
-      docs.grouped(97).foreach { chunk =>
-        input.addData(chunk.toIndexedSeq: _*)
-        query.processAllAvailable()
-      }
-      val fin = spark.table("rule_ablation_stream")
-        .as[CurationStream.AblationRow].collect()
-        .groupBy(_.source).values.map(_.maxBy(_.n_docs)).toSeq
-      val nDocs = fin.map(_.n_docs).sum
-      // the additive counters assemble the corpus-level 5-row ablation
-      val assembled = Seq(
-        ("words", fin.map(_.fail_words).sum, fin.map(_.uniq_words).sum),
-        ("mean", fin.map(_.fail_mean).sum, fin.map(_.uniq_mean).sum),
-        ("alpha", fin.map(_.fail_alpha).sum, fin.map(_.uniq_alpha).sum),
-        ("sym", fin.map(_.fail_sym).sum, fin.map(_.uniq_sym).sum),
-        ("req", fin.map(_.fail_req).sum, fin.map(_.uniq_req).sum)
-      ).map { case (r, f, u) =>
-        (r, f, u, f - u,
-          BigDecimal(u.toDouble / nDocs * 1000000.0)
-            .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong)
-      }.toSet
-      val batch = graft.operators.Text.ruleAblation(spark, sf)
-        .as[(String, Long, Long, Long, Long)].collect().toSet
-      assert(assembled == batch,
-        "summed ablation emissions must equal the q228 batch table")
-    } finally {
-      query.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
+    TestSpark.withRocksDb {
+      val input = MemoryStream[CurationStream.StreamDoc]
+      val query = CurationStream.ruleAblationStream(input.toDS())
+        .writeStream.format("memory").queryName("rule_ablation_stream")
+        .outputMode("update").start()
+      try {
+        docs.grouped(97).foreach { chunk =>
+          input.addData(chunk.toIndexedSeq: _*)
+          query.processAllAvailable()
+        }
+        val fin = spark.table("rule_ablation_stream")
+          .as[CurationStream.AblationRow].collect()
+          .groupBy(_.source).values.map(_.maxBy(_.n_docs)).toSeq
+        val nDocs = fin.map(_.n_docs).sum
+        // the additive counters assemble the corpus-level 5-row ablation
+        val assembled = Seq(
+          ("words", fin.map(_.fail_words).sum, fin.map(_.uniq_words).sum),
+          ("mean", fin.map(_.fail_mean).sum, fin.map(_.uniq_mean).sum),
+          ("alpha", fin.map(_.fail_alpha).sum, fin.map(_.uniq_alpha).sum),
+          ("sym", fin.map(_.fail_sym).sum, fin.map(_.uniq_sym).sum),
+          ("req", fin.map(_.fail_req).sum, fin.map(_.uniq_req).sum)
+        ).map { case (r, f, u) =>
+          (r, f, u, f - u,
+            BigDecimal(u.toDouble / nDocs * 1000000.0)
+              .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong)
+        }.toSet
+        val batch = graft.operators.Text.ruleAblation(spark, sf)
+          .as[(String, Long, Long, Long, Long)].collect().toSet
+        assert(assembled == batch,
+          "summed ablation emissions must equal the q228 batch table")
+      } finally query.stop()
     }
   }
 
@@ -451,35 +363,27 @@ class CurationStreamSpec extends AnyFunSuite {
       .map { case (id, text, src) =>
         CurationStream.StreamDoc(id, ts("2024-01-01 00:00:00"), text, src)
       }
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[CurationStream.StreamDoc]
-    val query = CurationStream.posEntropyStream(input.toDS())
-      .writeStream.format("memory").queryName("pos_entropy_stream")
-      .outputMode("update").start()
-    try {
-      docs.grouped(131).foreach { chunk =>
-        input.addData(chunk.toIndexedSeq: _*)
-        query.processAllAvailable()
-      }
-      val fin = spark.table("pos_entropy_stream")
-        .as[CurationStream.PosEntropyRow].collect()
-        .groupBy(_.pos).values.map(_.maxBy(_.n_docs)).map { r =>
-          (r.pos, r.n_docs, r.n_types, r.entropy_q6, r.top_token,
-            r.top_count, r.top_frac_q6)
-        }.toSet
-      val batch = graft.operators.Text.positionalEntropy(spark, sf)
-        .as[(Long, Long, Long, Long, String, Long, Long)].collect().toSet
-      assert(fin == batch,
-        "final positional-entropy emissions must equal the q233 batch rows")
-    } finally {
-      query.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
+    TestSpark.withRocksDb {
+      val input = MemoryStream[CurationStream.StreamDoc]
+      val query = CurationStream.posEntropyStream(input.toDS())
+        .writeStream.format("memory").queryName("pos_entropy_stream")
+        .outputMode("update").start()
+      try {
+        docs.grouped(131).foreach { chunk =>
+          input.addData(chunk.toIndexedSeq: _*)
+          query.processAllAvailable()
+        }
+        val fin = spark.table("pos_entropy_stream")
+          .as[CurationStream.PosEntropyRow].collect()
+          .groupBy(_.pos).values.map(_.maxBy(_.n_docs)).map { r =>
+            (r.pos, r.n_docs, r.n_types, r.entropy_q6, r.top_token,
+              r.top_count, r.top_frac_q6)
+          }.toSet
+        val batch = graft.operators.Text.positionalEntropy(spark, sf)
+          .as[(Long, Long, Long, Long, String, Long, Long)].collect().toSet
+        assert(fin == batch,
+          "final positional-entropy emissions must equal the q233 batch rows")
+      } finally query.stop()
     }
   }
 
@@ -491,48 +395,40 @@ class CurationStreamSpec extends AnyFunSuite {
     val docRows = CurationStream.qualityDocRows(
         graft.core.Tables.documents(spark, sf))
       .collect().sortBy(_.doc_id)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[CurationStream.QualityDocIn]
-    val query = CurationStream.sourceQualityStream(input.toDS())
-      .writeStream.format("memory").queryName("source_quality_stream")
-      .outputMode("update").start()
-    try {
-      docRows.grouped(docRows.length / 3 + 1).foreach { chunk =>
-        input.addData(chunk.toIndexedSeq: _*)
-        query.processAllAvailable()
-      }
-      val rows = spark.table("source_quality_stream")
-        .as[CurationStream.QualityPanelRow].collect()
-      // final emission per language = the one with that lang's max n
-      val fin = rows.groupBy(_.lang).values.flatMap { rs =>
-        val lastN = rs.map(_.state_n).max
-        rs.filter(_.state_n == lastN)
-      }.toSeq
-      // the stateless cross-lang assembly the batch panel ends with
-      val got = fin.groupBy(_.source).map { case (src, a) =>
-        val nd = a.map(_.n_docs).sum
-        val sp = a.map(_.sum_prq).sum
-        val nt = a.map(_.n_top_decile).sum
-        val mean = BigDecimal(sp.toDouble / nd.toDouble)
-          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-        val share = BigDecimal(nt.toDouble / nd.toDouble * 1000000.0)
-          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-        (src, nd, mean, nt, share)
-      }.toSet
-      val batch = graft.operators.Text.sourceQualityPanel(spark, sf)
-        .as[(String, Long, Long, Long, Long)].collect().toSet
-      assert(got == batch,
-        "assembled final emissions must equal the q249 batch panel")
-      assert(batch.nonEmpty)
-    } finally {
-      query.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
+    TestSpark.withRocksDb {
+      val input = MemoryStream[CurationStream.QualityDocIn]
+      val query = CurationStream.sourceQualityStream(input.toDS())
+        .writeStream.format("memory").queryName("source_quality_stream")
+        .outputMode("update").start()
+      try {
+        docRows.grouped(docRows.length / 3 + 1).foreach { chunk =>
+          input.addData(chunk.toIndexedSeq: _*)
+          query.processAllAvailable()
+        }
+        val rows = spark.table("source_quality_stream")
+          .as[CurationStream.QualityPanelRow].collect()
+        // final emission per language = the one with that lang's max n
+        val fin = rows.groupBy(_.lang).values.flatMap { rs =>
+          val lastN = rs.map(_.state_n).max
+          rs.filter(_.state_n == lastN)
+        }.toSeq
+        // the stateless cross-lang assembly the batch panel ends with
+        val got = fin.groupBy(_.source).map { case (src, a) =>
+          val nd = a.map(_.n_docs).sum
+          val sp = a.map(_.sum_prq).sum
+          val nt = a.map(_.n_top_decile).sum
+          val mean = BigDecimal(sp.toDouble / nd.toDouble)
+            .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+          val share = BigDecimal(nt.toDouble / nd.toDouble * 1000000.0)
+            .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+          (src, nd, mean, nt, share)
+        }.toSet
+        val batch = graft.operators.Text.sourceQualityPanel(spark, sf)
+          .as[(String, Long, Long, Long, Long)].collect().toSet
+        assert(got == batch,
+          "assembled final emissions must equal the q249 batch panel")
+        assert(batch.nonEmpty)
+      } finally query.stop()
     }
   }
 
@@ -544,39 +440,31 @@ class CurationStreamSpec extends AnyFunSuite {
     val docRows = CurationStream.piiDocRows(
         graft.core.Tables.documents(spark, sf))
       .collect().sortBy(_.doc_id)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[CurationStream.PiiDocIn]
-    val query = CurationStream.piiStream(input.toDS())
-      .writeStream.format("memory").queryName("pii_stream")
-      .outputMode("update").start()
-    try {
-      docRows.grouped(docRows.length / 3 + 1).foreach { chunk =>
-        input.addData(chunk.toIndexedSeq: _*)
-        query.processAllAvailable()
-      }
-      val rows = spark.table("pii_stream")
-        .as[CurationStream.PiiPanelRow].collect()
-      // final emission per source = the one with that source's max n_docs
-      val got = rows.groupBy(_.source).values.map { rs =>
-        val f = rs.maxBy(_.n_docs)
-        (f.source, f.n_docs, f.n_flagged, f.sum_email, f.sum_phone,
-          f.sum_ssn, f.sum_ip, f.exposure_q6)
-      }.toSet
-      val batch = graft.operators.Text.piiBySource(spark, sf)
-        .as[(String, Long, Long, Long, Long, Long, Long, Long)]
-        .collect().toSet
-      assert(got == batch,
-        "final piiStream emissions must equal the q244 batch panel")
-      assert(batch.nonEmpty)
-    } finally {
-      query.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
+    TestSpark.withRocksDb {
+      val input = MemoryStream[CurationStream.PiiDocIn]
+      val query = CurationStream.piiStream(input.toDS())
+        .writeStream.format("memory").queryName("pii_stream")
+        .outputMode("update").start()
+      try {
+        docRows.grouped(docRows.length / 3 + 1).foreach { chunk =>
+          input.addData(chunk.toIndexedSeq: _*)
+          query.processAllAvailable()
+        }
+        val rows = spark.table("pii_stream")
+          .as[CurationStream.PiiPanelRow].collect()
+        // final emission per source = the one with that source's max n_docs
+        val got = rows.groupBy(_.source).values.map { rs =>
+          val f = rs.maxBy(_.n_docs)
+          (f.source, f.n_docs, f.n_flagged, f.sum_email, f.sum_phone,
+            f.sum_ssn, f.sum_ip, f.exposure_q6)
+        }.toSet
+        val batch = graft.operators.Text.piiBySource(spark, sf)
+          .as[(String, Long, Long, Long, Long, Long, Long, Long)]
+          .collect().toSet
+        assert(got == batch,
+          "final piiStream emissions must equal the q244 batch panel")
+        assert(batch.nonEmpty)
+      } finally query.stop()
     }
   }
 
@@ -587,49 +475,41 @@ class CurationStreamSpec extends AnyFunSuite {
     val massRows = graft.core.Tables.documents(spark, sf)
       .select($"source", $"n_chars").as[CurationStream.MassIn]
       .collect().sortBy(_.source)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[CurationStream.MassIn]
-    val query = CurationStream.sourceMassStream(input.toDS())
-      .writeStream.format("memory").queryName("mass_stream")
-      .outputMode("update").start()
-    try {
-      massRows.grouped(massRows.length / 3 + 1).foreach { chunk =>
-        input.addData(chunk.toIndexedSeq: _*)
-        query.processAllAvailable()
-      }
-      val fin = spark.table("mass_stream")
-        .as[CurationStream.MassPartialRow].collect()
-        .groupBy(_.source).values.map(_.maxBy(_.n_docs)).toSeq
-      // the stateless cross-source assembly the batch query ends with
-      val ord = fin.sortBy(p => (-p.mass, p.source))
-      val tot = ord.map(_.mass).sum
-      val sq = ord.map(p => BigInt(p.mass) * BigInt(p.mass)).sum
-      val cums = ord.scanLeft(0L)(_ + _.mass).tail
-      def minRank(pred: Long => Boolean): Long =
-        (cums.indexWhere(pred) + 1).toLong
-      val hhi = BigDecimal(sq.toDouble / (tot.toDouble * tot.toDouble)
-          * 1000000000.0)
-        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-      val topShare = BigDecimal(ord.head.mass.toDouble / tot.toDouble
-          * 1000000.0)
-        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-      val got = (ord.length.toLong, tot, hhi,
-        minRank(c => c * 2 >= tot), minRank(c => c * 10 >= 9 * tot),
-        ord.head.source, topShare)
-      val batch = graft.operators.Sampling.sourceConcentration(spark, sf)
-        .as[(Long, Long, Long, Long, Long, String, Long)]
-        .collect().head
-      assert(got == batch,
-        "assembled final sourceMassStream partials must equal the q241 row")
-    } finally {
-      query.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
+    TestSpark.withRocksDb {
+      val input = MemoryStream[CurationStream.MassIn]
+      val query = CurationStream.sourceMassStream(input.toDS())
+        .writeStream.format("memory").queryName("mass_stream")
+        .outputMode("update").start()
+      try {
+        massRows.grouped(massRows.length / 3 + 1).foreach { chunk =>
+          input.addData(chunk.toIndexedSeq: _*)
+          query.processAllAvailable()
+        }
+        val fin = spark.table("mass_stream")
+          .as[CurationStream.MassPartialRow].collect()
+          .groupBy(_.source).values.map(_.maxBy(_.n_docs)).toSeq
+        // the stateless cross-source assembly the batch query ends with
+        val ord = fin.sortBy(p => (-p.mass, p.source))
+        val tot = ord.map(_.mass).sum
+        val sq = ord.map(p => BigInt(p.mass) * BigInt(p.mass)).sum
+        val cums = ord.scanLeft(0L)(_ + _.mass).tail
+        def minRank(pred: Long => Boolean): Long =
+          (cums.indexWhere(pred) + 1).toLong
+        val hhi = BigDecimal(sq.toDouble / (tot.toDouble * tot.toDouble)
+            * 1000000000.0)
+          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+        val topShare = BigDecimal(ord.head.mass.toDouble / tot.toDouble
+            * 1000000.0)
+          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+        val got = (ord.length.toLong, tot, hhi,
+          minRank(c => c * 2 >= tot), minRank(c => c * 10 >= 9 * tot),
+          ord.head.source, topShare)
+        val batch = graft.operators.Sampling.sourceConcentration(spark, sf)
+          .as[(Long, Long, Long, Long, Long, String, Long)]
+          .collect().head
+        assert(got == batch,
+          "assembled final sourceMassStream partials must equal the q241 row")
+      } finally query.stop()
     }
   }
 
@@ -640,46 +520,42 @@ class CurationStreamSpec extends AnyFunSuite {
     // (the q129 sketch-twin restart's sibling): file source + RocksDB
     // checkpoint, killed after half the feed, resumed over the same
     // checkpointLocation — the resumed panel must carry pre-kill counts
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val base = java.nio.file.Files.createTempDirectory("graft_q244_restart_").toString
-    val (inDir, ckpt) = (s"$base/in", s"$base/ckpt")
-    new java.io.File(inDir).mkdirs()
-    val rnd = new scala.util.Random(23)
-    val all = Seq.tabulate(240) { i =>
-      PiiDocIn(i.toLong, s"s${i % 4}",
-        if (rnd.nextInt(5) == 0) rnd.nextInt(3).toLong + 1L else 0L,
-        if (rnd.nextInt(7) == 0) 1L else 0L,
-        if (rnd.nextInt(11) == 0) 1L else 0L,
-        if (rnd.nextInt(3) == 0) rnd.nextInt(2).toLong else 0L)
-    }
-    def addFile(n: Int, rows: Seq[PiiDocIn]): Unit = {
-      val stage = s"$base/stage$n"
-      rows.toDS().coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(s"$inDir/batch$n.parquet"))
-    }
-    // foreachBatch: the recoverable sink (memory sink refuses checkpoint
-    // recovery); each leg collects its own emissions
-    val buf = new java.util.concurrent.ConcurrentLinkedQueue[
-      CurationStream.PiiPanelRow]()
-    def start() = CurationStream.piiStream(
-        spark.readStream
-          .schema(org.apache.spark.sql.Encoders.product[PiiDocIn].schema)
-          .parquet(inDir).as[PiiDocIn])
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .outputMode("update")
-      .foreachBatch {
-        (ds: org.apache.spark.sql.Dataset[CurationStream.PiiPanelRow],
-            _: Long) => ds.collect().foreach(buf.add)
+    TestSpark.withRocksDb {
+      val base = java.nio.file.Files.createTempDirectory("graft_q244_restart_").toString
+      val (inDir, ckpt) = (s"$base/in", s"$base/ckpt")
+      new java.io.File(inDir).mkdirs()
+      val rnd = new scala.util.Random(23)
+      val all = Seq.tabulate(240) { i =>
+        PiiDocIn(i.toLong, s"s${i % 4}",
+          if (rnd.nextInt(5) == 0) rnd.nextInt(3).toLong + 1L else 0L,
+          if (rnd.nextInt(7) == 0) 1L else 0L,
+          if (rnd.nextInt(11) == 0) 1L else 0L,
+          if (rnd.nextInt(3) == 0) rnd.nextInt(2).toLong else 0L)
       }
-      .start()
-    try {
+      def addFile(n: Int, rows: Seq[PiiDocIn]): Unit = {
+        val stage = s"$base/stage$n"
+        rows.toDS().coalesce(1).write.mode("overwrite").parquet(stage)
+        val part = new java.io.File(stage).listFiles()
+          .find(_.getName.endsWith(".parquet")).get
+        java.nio.file.Files.move(part.toPath,
+          java.nio.file.Paths.get(s"$inDir/batch$n.parquet"))
+      }
+      // foreachBatch: the recoverable sink (memory sink refuses checkpoint
+      // recovery); each leg collects its own emissions
+      val buf = new java.util.concurrent.ConcurrentLinkedQueue[
+        CurationStream.PiiPanelRow]()
+      def start() = CurationStream.piiStream(
+          spark.readStream
+            .schema(org.apache.spark.sql.Encoders.product[PiiDocIn].schema)
+            .parquet(inDir).as[PiiDocIn])
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .outputMode("update")
+        .foreachBatch {
+          (ds: org.apache.spark.sql.Dataset[CurationStream.PiiPanelRow],
+              _: Long) => ds.collect().foreach(buf.add)
+        }
+        .start()
       addFile(1, all.take(150))
       val q1 = start()
       q1.processAllAvailable(); q1.stop() // the kill
@@ -710,11 +586,6 @@ class CurationStreamSpec extends AnyFunSuite {
             s"$s: resumed n_docs $n must include pre-kill rows")
         }
       } finally q2.stop()
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
     }
   }
 }

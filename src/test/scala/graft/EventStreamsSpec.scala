@@ -145,36 +145,17 @@ class EventStreamsSpec extends AnyFunSuite {
     } finally query.stop()
   }
 
-  // the sketch twins run the state≡batch merge law on BOTH stateful
-  // runtimes — the legacy mapGroupsWithState form and the Spark 4
-  // transformWithState form (named ValueState, RocksDB column families)
-  private val sketchRuntimes = Seq(
-    ("mapGroupsWithState", false),
-    ("transformWithState", true))
-
-  private def withRuntime[A](tws: Boolean)(body: => A): A =
-    if (!tws) body
-    else {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try body
-      finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-
-  for ((label, tws) <- sketchRuntimes)
-  test(s"hll stream [$label] state equals the batch sketch across an arbitrary batch split") {
+  test("hll stream [transformWithState] state equals the batch sketch across an arbitrary batch split") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val sf = "/root/testdata/sf0.001"
     val all = graft.core.Tables.events(spark, sf)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[Event].collect()
-    withRuntime(tws) {
+    TestSpark.withRocksDb {
       val input = MemoryStream[Event]
-      val name = s"hll_stream_$label"
-      val src = if (tws) EventStreams.hllSketchStreamTws(input.toDS())
-        else EventStreams.hllSketchStream(input.toDS())
-      val query = src.writeStream.format("memory").queryName(name)
+      val query = EventStreams.hllSketchStream(input.toDS())
+        .writeStream.format("memory").queryName("hll_stream")
         .outputMode("update").start()
       try {
         // three arbitrary micro-batches: register max-merge is the HLL merge
@@ -183,7 +164,7 @@ class EventStreamsSpec extends AnyFunSuite {
           input.addData(chunk.toIndexedSeq: _*)
           query.processAllAvailable()
         }
-        val rows = spark.table(name)
+        val rows = spark.table("hll_stream")
           .as[(String, Long, Long, Long)].collect()
         // raw estimate grows monotonically with register state: the final
         // per-key row is the max-raw one
@@ -206,7 +187,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val all = graft.core.Tables.events(spark, sf)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[Event].collect()
-    withRuntime(tws = true) {
+    TestSpark.withRocksDb {
       // HLL: merge takes ALL update-mode emissions (register max is
       // monotone-idempotent, no final-row selection needed)
       val hIn = MemoryStream[Event]
@@ -237,7 +218,7 @@ class EventStreamsSpec extends AnyFunSuite {
             spark.table("cms_partials").as[EventStreams.CmsPartialRow])
           .as[(String, Long, Long, Long, Long)].collect().toSet
         val cmsIn2 = MemoryStream[Event]
-        val cq2 = EventStreams.cmsStreamTws(cmsIn2.toDS())
+        val cq2 = EventStreams.cmsStream(cmsIn2.toDS())
           .writeStream.format("memory").queryName("cms_unsalted")
           .outputMode("update").start()
         try {
@@ -269,7 +250,7 @@ class EventStreamsSpec extends AnyFunSuite {
           .as[(String, Int)].collect().toSet
       } finally q.stop()
     }
-    withRuntime(tws = true) {
+    TestSpark.withRocksDb {
       // dial respected: keys fan out over salts in [0, 4)
       spark.conf.set("spark.graft.sketch.salts", "4")
       try {
@@ -302,7 +283,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val all = graft.core.Tables.events(spark, sf)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[Event].collect()
-    withRuntime(tws = true) {
+    TestSpark.withRocksDb {
       val input = MemoryStream[Event]
       val query = EventStreams.anomalyStream(input.toDS())
         .writeStream.format("memory").queryName("anomaly_stream")
@@ -333,8 +314,7 @@ class EventStreamsSpec extends AnyFunSuite {
     }
   }
 
-  for ((label, tws) <- sketchRuntimes)
-  test(s"histogram stream [$label] bins equal a batch recompute across a batch split") {
+  test("histogram stream [transformWithState] bins equal a batch recompute across a batch split") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val sf = "/root/testdata/sf0.001"
@@ -342,19 +322,17 @@ class EventStreamsSpec extends AnyFunSuite {
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[Event].collect()
     val (lo, hi) = (0.0, 600.0)
-    withRuntime(tws) {
+    TestSpark.withRocksDb {
       val input = MemoryStream[Event]
-      val name = s"hist_stream_$label"
-      val src = if (tws) EventStreams.histogramStreamTws(input.toDS(), lo, hi)
-        else EventStreams.histogramStream(input.toDS(), lo, hi)
-      val query = src.writeStream.format("memory").queryName(name)
+      val query = EventStreams.histogramStream(input.toDS(), lo, hi)
+        .writeStream.format("memory").queryName("hist_stream")
         .outputMode("update").start()
       try {
         all.grouped(math.max(1, all.length / 4 + 1)).foreach { chunk =>
           input.addData(chunk.toIndexedSeq: _*)
           query.processAllAvailable()
         }
-        val rows = spark.table(name)
+        val rows = spark.table("hist_stream")
           .as[(String, Long, Long, Long)].collect()
         // n grows monotonically: final row per key = max n
         val fin = rows.groupBy(_._1).map { case (_, rs) => rs.maxBy(_._2) }
@@ -373,20 +351,17 @@ class EventStreamsSpec extends AnyFunSuite {
     }
   }
 
-  for ((label, tws) <- sketchRuntimes)
-  test(s"cms stream [$label] registers equal a batch fold across a batch split") {
+  test("cms stream [transformWithState] registers equal a batch fold across a batch split") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val sf = "/root/testdata/sf0.001"
     val all = graft.core.Tables.events(spark, sf)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[Event].collect()
-    withRuntime(tws) {
+    TestSpark.withRocksDb {
       val input = MemoryStream[Event]
-      val name = s"cms_stream_$label"
-      val src = if (tws) EventStreams.cmsStreamTws(input.toDS())
-        else EventStreams.cmsStream(input.toDS())
-      val query = src.writeStream.format("memory").queryName(name)
+      val query = EventStreams.cmsStream(input.toDS())
+        .writeStream.format("memory").queryName("cms_stream")
         .outputMode("update").start()
       try {
         // count addition is the CMS merge: the final state must not
@@ -395,7 +370,7 @@ class EventStreamsSpec extends AnyFunSuite {
           input.addData(chunk.toIndexedSeq: _*)
           query.processAllAvailable()
         }
-        val rows = spark.table(name)
+        val rows = spark.table("cms_stream")
           .as[(String, Long, Long, Long, Long)].collect()
         val fin = rows.groupBy(_._1).map { case (_, rs) => rs.maxBy(_._2) }
         // batch recompute with the same md5 hash
@@ -430,7 +405,7 @@ class EventStreamsSpec extends AnyFunSuite {
       .as[Event].collect()
       .sortBy(e => (e.ts.getTime, e.event_id))
     val k = 8
-    withRuntime(tws = true) {
+    TestSpark.withRocksDb {
       val input = MemoryStream[Event]
       val query = EventStreams.mgStream(input.toDS(), k)
         .writeStream.format("memory").queryName("mg_stream")
@@ -472,7 +447,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val all = graft.core.Tables.events(spark, sf)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[Event].collect()
-    withRuntime(tws = true) {
+    TestSpark.withRocksDb {
       val input = MemoryStream[Event]
       val query = EventStreams.reachStream(input.toDS())
         .writeStream.format("memory").queryName("reach_stream")
@@ -508,7 +483,7 @@ class EventStreamsSpec extends AnyFunSuite {
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[Event].collect()
       .sortBy(e => (e.ts.getTime, e.event_id))
-    withRuntime(tws = true) {
+    TestSpark.withRocksDb {
       val input = MemoryStream[Event]
       val query = EventStreams.transitionStream(input.toDS())
         .writeStream.format("memory").queryName("trans_stream")
@@ -545,7 +520,7 @@ class EventStreamsSpec extends AnyFunSuite {
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[Event].collect()
       .sortBy(_.event_id)
-    withRuntime(tws = true) {
+    TestSpark.withRocksDb {
       val input = MemoryStream[Event]
       val query = EventStreams.latenessStream(input.toDS())
         .writeStream.format("memory").queryName("late_stream")
@@ -582,7 +557,7 @@ class EventStreamsSpec extends AnyFunSuite {
       EventStreams.histogramStream(input.toDS(), 5.0, 5.0)
     }
     intercept[IllegalArgumentException] {
-      EventStreams.histogramStreamTws(input.toDS(), 7.0, 2.0)
+      EventStreams.histogramStream(input.toDS(), 7.0, 2.0)
     }
   }
 
@@ -602,7 +577,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val s1 = latest(all.filter(micros(_) <= t1))
     val tail = all.filter(micros(_) > t1)
     assert(tail.nonEmpty, "fixture has a post-T1 tail")
-    withRuntime(tws = true) {
+    TestSpark.withRocksDb {
       val input = MemoryStream[Event]
       val snap = s1.toSeq.map { case ((u, tp), v) =>
         EventStreams.SnapInit(u, tp, v) }.toDS()
@@ -647,7 +622,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val all = graft.core.Tables.events(spark, sf)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[Event].collect()
-    withRuntime(tws = true) {
+    TestSpark.withRocksDb {
       val input = MemoryStream[Event]
       val query = EventStreams.equiDepthStream(input.toDS())
         .writeStream.format("memory").queryName("depth_stream")
@@ -682,7 +657,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val all = graft.core.Tables.events(spark, sf)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[Event].collect()
-    withRuntime(tws = true) {
+    TestSpark.withRocksDb {
       val input = MemoryStream[Event]
       val query = EventStreams.compactionStream(input.toDS())
         .writeStream.format("memory").queryName("compact_stream")
@@ -717,7 +692,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val all = graft.core.Tables.events(spark, sf)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[Event].collect()
-    withRuntime(tws = true) {
+    TestSpark.withRocksDb {
       // stage 1: the per-type register merge, emitting registers
       val input = MemoryStream[Event]
       val q1 = EventStreams.hllRegisterStream(input.toDS())
@@ -762,7 +737,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val all = graft.core.Tables.events(spark, sf)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[Event].collect()
-    withRuntime(tws = true) {
+    TestSpark.withRocksDb {
       val input = MemoryStream[Event]
       val query = EventStreams.slidingActivesStream(input.toDS())
         .writeStream.format("memory").queryName("sliding_stream")
@@ -801,7 +776,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val sentinel = Event(-1L,
       new java.sql.Timestamp(all.last.ts.getTime + 3L * 3600 * 1000),
       -1L, "zz_sentinel", 0.0)
-    withRuntime(tws = true) {
+    TestSpark.withRocksDb {
       val input = MemoryStream[Event]
       val q1 = EventStreams.hourlyTypeCounts(input.toDS())
         .writeStream.format("memory").queryName("hourly_counts")
@@ -844,7 +819,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val all = graft.core.Tables.events(spark, sf)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[Event].collect()
-    withRuntime(tws = true) {
+    TestSpark.withRocksDb {
       val input = MemoryStream[Event]
       val query = EventStreams.cusumStream(input.toDS())
         .writeStream.format("memory").queryName("cusum_stream")
@@ -882,7 +857,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val all = graft.core.Tables.events(spark, sf)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[Event].collect().sortBy(e => (micros(e), e.event_id))
-    withRuntime(tws = true) {
+    TestSpark.withRocksDb {
       val input = MemoryStream[Event]
       val query = EventStreams.burstinessStream(input.toDS())
         .writeStream.format("memory").queryName("burst_stream")
@@ -929,7 +904,7 @@ class EventStreamsSpec extends AnyFunSuite {
     val sentinel = Event(-1L,
       new java.sql.Timestamp(all.last.ts.getTime + 3L * 86400 * 1000),
       -1L, "zz_sentinel", 0.0)
-    withRuntime(tws = true) {
+    TestSpark.withRocksDb {
       val input = MemoryStream[Event]
       val q1 = EventStreams.dailyTypeCounts(input.toDS())
         .writeStream.format("memory").queryName("daily_counts")
@@ -981,7 +956,7 @@ class EventStreamsSpec extends AnyFunSuite {
     // which derives the same bounds from its own pre-scan
     val lo = wv.map(_.value).min
     val hi = wv.map(_.value).max
-    withRuntime(tws = true) {
+    TestSpark.withRocksDb {
       val input = MemoryStream[EventStreams.WeekValue]
       val query = EventStreams.valueDriftStream(input.toDS(), lo, hi, nBins)
         .writeStream.format("memory").queryName("drift_stream")
@@ -1031,82 +1006,74 @@ class EventStreamsSpec extends AnyFunSuite {
     // after half the feed, resumed as a new query over the same
     // checkpointLocation — the resumed emissions must already carry the
     // pre-kill state (a reset state would emit part-2-only counts)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val changelogKey =
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(changelogKey, changelog.toString)
-    val base = java.nio.file.Files.createTempDirectory("graft_q129_restart_").toString
-    val (inDir, ckpt) = (s"$base/in", s"$base/ckpt")
-    new java.io.File(inDir).mkdirs()
-    val (lo, hi) = (0.0, 100.0)
-    val rnd = new scala.util.Random(17)
-    val all = Seq.tabulate(300) { i =>
-      Event(i.toLong, new Timestamp(1700000000000L + i * 1000L),
-        (i % 7).toLong, s"t${i % 3}", rnd.nextDouble() * 120.0 - 10.0)
-    }
-    def addFile(n: Int, rows: Seq[Event]): Unit = {
-      val stage = s"$base/stage$n"
-      rows.toDS().coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(s"$inDir/batch$n.parquet"))
-    }
-    // foreachBatch: the recoverable sink (memory sink refuses checkpoint
-    // recovery); each leg collects its own emissions
-    val buf = new java.util.concurrent.ConcurrentLinkedQueue[
-      (String, Long, Long, Long)]()
-    def start() = EventStreams.histogramStreamTws(
-        spark.readStream
-          .schema(org.apache.spark.sql.Encoders.product[Event].schema)
-          .parquet(inDir).as[Event], lo, hi)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .outputMode("update")
-      .foreachBatch {
-        (ds: org.apache.spark.sql.Dataset[EventStreams.HistRow], _: Long) =>
-          ds.collect().foreach(r =>
-            buf.add((r.event_type, r.n, r.filled_bins, r.max_bin_cnt)))
+    TestSpark.withRocksDb {
+      spark.conf.set(changelogKey, changelog.toString)
+      val base = java.nio.file.Files.createTempDirectory("graft_q129_restart_").toString
+      val (inDir, ckpt) = (s"$base/in", s"$base/ckpt")
+      new java.io.File(inDir).mkdirs()
+      val (lo, hi) = (0.0, 100.0)
+      val rnd = new scala.util.Random(17)
+      val all = Seq.tabulate(300) { i =>
+        Event(i.toLong, new Timestamp(1700000000000L + i * 1000L),
+          (i % 7).toLong, s"t${i % 3}", rnd.nextDouble() * 120.0 - 10.0)
       }
-      .start()
-    try {
-      addFile(1, all.take(180))
-      val q1 = start()
-      q1.processAllAvailable(); q1.stop() // the kill
-      buf.clear() // only resumed emissions count
-      addFile(2, all.drop(180)) // round-robin types: every key re-emits
-      val q2 = start()
-      try {
-        q2.processAllAvailable()
-        import scala.jdk.CollectionConverters._
-        val fin = buf.asScala.toSeq
-          .groupBy(_._1).map { case (_, rs) => rs.maxBy(_._2) }.toSet
-        val expected = all.groupBy(_.event_type).map { case (t, es) =>
-          val bins = Array.fill(64)(0L)
-          es.foreach { e =>
-            val b = math.min(63, math.max(0,
-              math.floor((e.value - lo) / (hi - lo) * 64).toInt))
-            bins(b) += 1
-          }
-          (t, es.length.toLong, bins.count(_ > 0L).toLong, bins.max)
-        }.toSet
-        assert(fin == expected,
-          "resumed-final histograms must equal the batch fold over the WHOLE feed")
-        // and each resumed n covers part 1 — state recovered, not reset
-        fin.foreach { case (t, n, _, _) =>
-          assert(n > all.drop(180).count(_.event_type == t).toLong,
-            s"$t: resumed count $n must include pre-kill rows")
+      def addFile(n: Int, rows: Seq[Event]): Unit = {
+        val stage = s"$base/stage$n"
+        rows.toDS().coalesce(1).write.mode("overwrite").parquet(stage)
+        val part = new java.io.File(stage).listFiles()
+          .find(_.getName.endsWith(".parquet")).get
+        java.nio.file.Files.move(part.toPath,
+          java.nio.file.Paths.get(s"$inDir/batch$n.parquet"))
+      }
+      // foreachBatch: the recoverable sink (memory sink refuses checkpoint
+      // recovery); each leg collects its own emissions
+      val buf = new java.util.concurrent.ConcurrentLinkedQueue[
+        (String, Long, Long, Long)]()
+      def start() = EventStreams.histogramStream(
+          spark.readStream
+            .schema(org.apache.spark.sql.Encoders.product[Event].schema)
+            .parquet(inDir).as[Event], lo, hi)
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .outputMode("update")
+        .foreachBatch {
+          (ds: org.apache.spark.sql.Dataset[EventStreams.HistRow], _: Long) =>
+            ds.collect().foreach(r =>
+              buf.add((r.event_type, r.n, r.filled_bins, r.max_bin_cnt)))
         }
-      } finally q2.stop()
-    } finally {
-      spark.conf.unset(changelogKey)
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
+        .start()
+      try {
+        addFile(1, all.take(180))
+        val q1 = start()
+        q1.processAllAvailable(); q1.stop() // the kill
+        buf.clear() // only resumed emissions count
+        addFile(2, all.drop(180)) // round-robin types: every key re-emits
+        val q2 = start()
+        try {
+          q2.processAllAvailable()
+          import scala.jdk.CollectionConverters._
+          val fin = buf.asScala.toSeq
+            .groupBy(_._1).map { case (_, rs) => rs.maxBy(_._2) }.toSet
+          val expected = all.groupBy(_.event_type).map { case (t, es) =>
+            val bins = Array.fill(64)(0L)
+            es.foreach { e =>
+              val b = math.min(63, math.max(0,
+                math.floor((e.value - lo) / (hi - lo) * 64).toInt))
+              bins(b) += 1
+            }
+            (t, es.length.toLong, bins.count(_ > 0L).toLong, bins.max)
+          }.toSet
+          assert(fin == expected,
+            "resumed-final histograms must equal the batch fold over the WHOLE feed")
+          // and each resumed n covers part 1 — state recovered, not reset
+          fin.foreach { case (t, n, _, _) =>
+            assert(n > all.drop(180).count(_.event_type == t).toLong,
+              s"$t: resumed count $n must include pre-kill rows")
+          }
+        } finally q2.stop()
+      } finally spark.conf.unset(changelogKey)
     }
   }
 
@@ -1142,32 +1109,24 @@ class EventStreamsSpec extends AnyFunSuite {
       t.setNanos((((ms % 1000L) * 1000000L) + us * 1000L).toInt)
       Event(id, t, 7L, tpe, 0.0)
     }
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[Event]
-    val query = EventStreams.transitionStream(input.toDS())
-      .writeStream.format("memory").queryName("ev_trans_us")
-      .outputMode("update").start()
-    try {
-      // A at micros .456 (event_id 9), B at micros .999 (event_id 3):
-      // full-resolution order is A -> B; a millis sort would emit B -> A
-      input.addData(
-        mk(1700000000123L, 456, 9L, "A"),
-        mk(1700000000123L, 999, 3L, "B"))
-      query.processAllAvailable()
-      val rows = spark.table("ev_trans_us")
-        .select($"from_type", $"to_type", $"cnt")
-        .as[(String, String, Long)].collect().toSet
-      assert(rows == Set(("A", "B", 1L)),
-        s"same-millisecond events must order by micros then id: $rows")
-    } finally {
-      query.stop()
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
+    TestSpark.withRocksDb {
+      val input = MemoryStream[Event]
+      val query = EventStreams.transitionStream(input.toDS())
+        .writeStream.format("memory").queryName("ev_trans_us")
+        .outputMode("update").start()
+      try {
+        // A at micros .456 (event_id 9), B at micros .999 (event_id 3):
+        // full-resolution order is A -> B; a millis sort would emit B -> A
+        input.addData(
+          mk(1700000000123L, 456, 9L, "A"),
+          mk(1700000000123L, 999, 3L, "B"))
+        query.processAllAvailable()
+        val rows = spark.table("ev_trans_us")
+          .select($"from_type", $"to_type", $"cnt")
+          .as[(String, String, Long)].collect().toSet
+        assert(rows == Set(("A", "B", 1L)),
+          s"same-millisecond events must order by micros then id: $rows")
+      } finally query.stop()
     }
   }
 
@@ -1182,67 +1141,59 @@ class EventStreamsSpec extends AnyFunSuite {
     // state (q129), ValueState (q244), and now stream-stream join
     // buffers — the three state classes the engine ships. Run under
     // both RocksDB checkpoint modes (see the q129 rehearsal's note).
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val changelogKey =
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(changelogKey, changelog.toString)
-    val base = java.nio.file.Files.createTempDirectory("graft_q97_restart_").toString
-    val (cDir, pDir, ckpt) = (s"$base/clicks", s"$base/purch", s"$base/ckpt")
-    new java.io.File(cDir).mkdirs(); new java.io.File(pDir).mkdirs()
-    def addFile(dir: String, n: Int, rows: Seq[Event]): Unit = {
-      val stage = s"$base/stage_${new java.io.File(dir).getName}_$n"
-      rows.toDS().coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(s"$dir/batch$n.parquet"))
-    }
-    val schema = org.apache.spark.sql.Encoders.product[Event].schema
-    val buf = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Double)]()
-    def start() = EventStreams.attributionJoin(
-        spark.readStream.schema(schema).parquet(cDir),
-        spark.readStream.schema(schema).parquet(pDir))
-      .select($"purchase_id", $"click_value")
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .foreachBatch { (ds: org.apache.spark.sql.DataFrame, _: Long) =>
-        ds.as[(Long, Double)].collect().foreach(buf.add)
+    TestSpark.withRocksDb {
+      spark.conf.set(changelogKey, changelog.toString)
+      val base = java.nio.file.Files.createTempDirectory("graft_q97_restart_").toString
+      val (cDir, pDir, ckpt) = (s"$base/clicks", s"$base/purch", s"$base/ckpt")
+      new java.io.File(cDir).mkdirs(); new java.io.File(pDir).mkdirs()
+      def addFile(dir: String, n: Int, rows: Seq[Event]): Unit = {
+        val stage = s"$base/stage_${new java.io.File(dir).getName}_$n"
+        rows.toDS().coalesce(1).write.mode("overwrite").parquet(stage)
+        val part = new java.io.File(stage).listFiles()
+          .find(_.getName.endsWith(".parquet")).get
+        java.nio.file.Files.move(part.toPath,
+          java.nio.file.Paths.get(s"$dir/batch$n.parquet"))
       }
-      .start()
-    try {
-      // part 1: the user-7 click, an unrelated early purchase (gives the
-      // purchase side a file), and NO match yet
-      addFile(cDir, 1, Seq(Event(1, ts("2024-01-01 09:30:00"), 7, "click", 1.0)))
-      addFile(pDir, 1, Seq(Event(5, ts("2024-01-01 08:00:00"), 99, "purchase", 9.0)))
-      val q1 = start()
-      q1.processAllAvailable(); q1.stop() // the kill
-      buf.clear()
-      // part 2 (post-resume): the matching purchase inside the 1 h
-      // window, plus watermark pushers on both sides
-      addFile(pDir, 2, Seq(
-        Event(10, ts("2024-01-01 10:00:00"), 7, "purchase", 50.0),
-        Event(99, ts("2024-01-01 12:00:00"), 9, "purchase", 0.0)))
-      addFile(cDir, 2, Seq(Event(98, ts("2024-01-01 12:00:00"), 9, "click", 0.0)))
-      val q2 = start()
+      val schema = org.apache.spark.sql.Encoders.product[Event].schema
+      val buf = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Double)]()
+      def start() = EventStreams.attributionJoin(
+          spark.readStream.schema(schema).parquet(cDir),
+          spark.readStream.schema(schema).parquet(pDir))
+        .select($"purchase_id", $"click_value")
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .foreachBatch { (ds: org.apache.spark.sql.DataFrame, _: Long) =>
+          ds.as[(Long, Double)].collect().foreach(buf.add)
+        }
+        .start()
       try {
-        q2.processAllAvailable()
-        import scala.jdk.CollectionConverters._
-        val rows = buf.asScala.toSet
-        assert(rows.contains((10L, 1.0)),
-          s"purchase 10 must join the PRE-KILL click — join buffer not recovered: $rows")
-        assert(!rows.exists(_._2 == 9.0),
-          "the out-of-window early purchase must not join anything")
-      } finally q2.stop()
-    } finally {
-      spark.conf.unset(changelogKey)
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
+        // part 1: the user-7 click, an unrelated early purchase (gives the
+        // purchase side a file), and NO match yet
+        addFile(cDir, 1, Seq(Event(1, ts("2024-01-01 09:30:00"), 7, "click", 1.0)))
+        addFile(pDir, 1, Seq(Event(5, ts("2024-01-01 08:00:00"), 99, "purchase", 9.0)))
+        val q1 = start()
+        q1.processAllAvailable(); q1.stop() // the kill
+        buf.clear()
+        // part 2 (post-resume): the matching purchase inside the 1 h
+        // window, plus watermark pushers on both sides
+        addFile(pDir, 2, Seq(
+          Event(10, ts("2024-01-01 10:00:00"), 7, "purchase", 50.0),
+          Event(99, ts("2024-01-01 12:00:00"), 9, "purchase", 0.0)))
+        addFile(cDir, 2, Seq(Event(98, ts("2024-01-01 12:00:00"), 9, "click", 0.0)))
+        val q2 = start()
+        try {
+          q2.processAllAvailable()
+          import scala.jdk.CollectionConverters._
+          val rows = buf.asScala.toSet
+          assert(rows.contains((10L, 1.0)),
+            s"purchase 10 must join the PRE-KILL click — join buffer not recovered: $rows")
+          assert(!rows.exists(_._2 == 9.0),
+            "the out-of-window early purchase must not join anything")
+        } finally q2.stop()
+      } finally spark.conf.unset(changelogKey)
     }
   }
 }

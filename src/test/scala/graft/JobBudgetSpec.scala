@@ -61,7 +61,7 @@ class JobBudgetSpec extends AnyFunSuite {
     import spark.implicits._
     val df = (0 until 500).map(i => (s"g${i % 3}", (i % 7).toLong, i.toLong))
       .toDF("g", "v", "id")
-    val pin = Ranks.pinBase(df)
+    val pin = Lineage.counted(df)
     assert(jobs(Ranks.globalRankPinned(pin.df, pin.rows, "r", $"v", $"id")) == 0)
     assert(jobs(Ranks.groupRowNumberPinned(pin.df, pin.rows, "rn",
       Seq($"g"), Seq($"v", $"id"))) == 0)

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Lineage
 import graft.operators.Ranks
 
 /** Laws for the two-phase distributed rank family — each form must be
@@ -138,7 +139,7 @@ class RanksSpec extends AnyFunSuite {
   test("pinned forms are value-identical to the unpinned forms") {
     import spark.implicits._
     val df = fixture
-    val pin = Ranks.pinBase(df)
+    val pin = Lineage.counted(df)
     assert(pin.rows === 500L)
     val base = pin.df
     val a = Ranks.globalRankPinned(base, pin.rows, "r", $"v", $"id")
@@ -300,7 +301,7 @@ class RanksSpec extends AnyFunSuite {
   test("groupRunningMaxExclPinned equals the counting form on both arms") {
     import spark.implicits._
     val df = fixture.withColumn("w", ($"id" * 7919L) % 501L)
-    val pin = Ranks.pinBase(df)
+    val pin = Lineage.counted(df)
     def both() = (
       Ranks.groupRunningMaxExclPinned(pin.df, pin.rows, "m", Seq($"g"),
         Seq($"v", $"id"), $"w").orderBy($"id").collect(),

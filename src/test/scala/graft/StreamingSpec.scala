@@ -99,7 +99,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(out(2L) == 10)
   }
 
-  test("transformWithState variant produces the same predictions (streaming)") {
+  test("TravelTimePrediction streaming: same predictions from a MemoryStream") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val rides = Seq(
@@ -109,21 +109,17 @@ class StreamingSpec extends AnyFunSuite {
         -73.98f, 40.75f, -73.90f, 40.80f, 1),
       TaxiRide(2, isStart = true, ts("2013-01-01 00:15:00"), placeholder,
         -73.98f, 40.75f, -73.90f, 40.80f, 1))
-    // transformWithState needs the RocksDB provider (column families)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val input = MemoryStream[TaxiRide]
-    val query = TaxiStreams.travelTimePredictionTws(input.toDS())
-      .writeStream.format("memory").queryName("tws_pred").outputMode("append").start()
+    val query = TaxiStreams.travelTimePrediction(input.toDS())
+      .writeStream.format("memory").queryName("stream_pred").outputMode("append").start()
     try {
       input.addData(rides: _*)
       query.processAllAvailable()
-      val out = spark.table("tws_pred").as[(Long, Int)].collect().toMap
+      val out = spark.table("stream_pred").as[(Long, Int)].collect().toMap
       assert(out(1L) == -1 && out(2L) == 10)
-    } finally {
-      query.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+      val plan = TestSpark.streamingPlan(query)
+      assert(plan.contains("FlatMapGroupsWithState"), plan)
+    } finally query.stop()
   }
 
   test("RegSums == commons-math SimpleRegression(false) (oracle, SURVEY §5.1)") {

@@ -29,6 +29,22 @@ object TestSpark {
     s
   }
 
+  /** Run `body` under the RocksDB state store provider — the one every
+    * `transformWithState` operator needs (multi-column-family state) —
+    * and restore the session's previous provider afterwards.
+    */
+  def withRocksDb[A](body: => A): A = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally prev match {
+      case Some(p) => spark.conf.set(key, p)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   /** The physical plan of a streaming query's latest micro-batch, as a
     * string — for plan-shape assertions on the streaming RUNTIME (state
     * store operators, watermark plumbing) that batch projections can't
