@@ -19,7 +19,9 @@ import org.apache.spark.sql.streaming.Trigger
   *   - dedup_watermark    — dropDuplicatesWithinWatermark (q09 twin)
   *   - session_window     — merging session-window agg (q41 twin)
   *   - hll_tws            — `hllSketchStream`, the transformWithState
-  *                          HLL sketch (q127 twin, RocksDB state store)
+  *                          HLL sketch (q127 twin, RocksDB state store;
+  *                          the `_tws` labels stay so recorded results
+  *                          remain comparable)
   *   - cms_tws            — `cmsStream`, the transformWithState CMS
   *                          sketch (q162 twin)
   *   - transition_tws     — transformWithState Markov transitions
