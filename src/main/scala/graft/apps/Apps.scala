@@ -3,8 +3,8 @@ package graft.apps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Lineage.CutOps
 import graft.batch.MailPrograms
+import graft.operators.{Graph, Ranks}
 import graft.sources.{MailSource, Sinks, TaxiSource}
 import graft.streaming.TaxiStreams
 
@@ -162,26 +162,21 @@ object PageRankWithEdgeWeights {
   }
 
   /** PageRank over an arbitrary weighted edge DataFrame (string vertex
-    * ids) — the Gelly pipeline of SURVEY §2.9 on file input; the
-    * testdata-backed variant lives in graft.operators.Graph.
+    * ids) — the Gelly pipeline of SURVEY §2.9 on file input, run by the
+    * engine's loop (`Graph.pageRankEdges`, the one q13 runs). Names map
+    * to long ids by their rank in name order, which a recomputation
+    * cannot renumber, and map back on the way out.
     */
   def pageRankOnEdges(edges: DataFrame, iterations: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val outSums = edges.groupBy($"src").agg(sum($"weight").as("sumOut"))
-    val prob = edges.join(outSums, "src")
-      .select($"src", $"dst", ($"weight" / $"sumOut").as("p")).cache()
-    val vertices = edges.select($"src".as("id"))
-      .union(edges.select($"dst".as("id"))).distinct().cache()
-    val n = vertices.count().toDouble
-    var ranks = vertices.select($"id", lit(1.0).as("rank"))
-    for (_ <- 1 to iterations) {
-      val contribs = ranks.join(prob, $"id" === $"src")
-        .groupBy($"dst").agg(sum($"rank" * $"p").as("s"))
-      ranks = vertices.join(contribs, $"id" === $"dst", "left")
-        .select($"id", (lit(0.85) * coalesce($"s", lit(0.0)) + lit(0.15 / n)).as("rank"))
-        .cutLineage()
-    }
-    ranks
+    val ids = Ranks.globalRank(edges.select($"src".as("name"))
+      .union(edges.select($"dst".as("name"))).distinct(), "id", $"name".asc)
+    val byId = edges
+      .join(ids.select($"name".as("src"), $"id".as("s")), "src")
+      .join(ids.select($"name".as("dst"), $"id".as("t")), "dst")
+      .select($"s".as("src"), $"t".as("dst"), $"weight".as("w"))
+    Graph.pageRankEdges(spark, byId, iterations)
+      .join(ids, "id").select($"name".as("id"), $"rank")
   }
 }

@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.ContextBridge
 import org.apache.spark.storage.StorageLevel
 
 /** The engine's single lineage-cut / pin primitive, behind the
@@ -99,12 +100,13 @@ object Lineage {
   /** Drop the blocks of every local checkpoint under `df`'s plan (they
     * live on the RDD, not in the cache manager, so `unpersist` alone
     * would leave them until GC). Reliable checkpoints hold no blocks;
-    * for them this is a no-op.
+    * for them this is a no-op. No `RDD.unpersist`: it would log a
+    * "cannot be recomputed" WARN per checkpoint, the point of releasing it.
     */
   def release(df: DataFrame): Unit =
     df.queryExecution.logical.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false): Unit
+        ContextBridge.unpersistRDD(lr.rdd.sparkContext, lr.rdd.id)
       case _ =>
     }
 

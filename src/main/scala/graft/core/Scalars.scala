@@ -24,9 +24,6 @@ object Scalars {
   def longAt(r: Row, i: Int, orElse: Long = 0L): Long =
     if (r.isNullAt(i)) orElse else r.getLong(i)
 
-  def intAt(r: Row, i: Int, orElse: Int = 0): Int =
-    if (r.isNullAt(i)) orElse else r.getInt(i)
-
   def doubleAt(r: Row, i: Int, orElse: Double = 0.0): Double =
     if (r.isNullAt(i)) orElse else r.getDouble(i)
 

@@ -35,12 +35,6 @@ object VectorFunctions {
   def dotPreQ(a: Column, b: Column): Column =
     graft.plans.QuantizedDot.quantizedDot(a, b)
 
-  /** Exact quantized dot product of two float arrays, as long. */
-  def dotQ(a: Column, b: Column): Column = dotPreQ(quantize(a), quantize(b))
-
-  /** Exact quantized squared L2 norm, as long. */
-  def norm2Q(a: Column): Column = dotQ(a, a)
-
   /** Cosine similarity from quantized parts: dot / (sqrt(n2a) * sqrt(n2b)).
     * All three inputs are exact integers ≤ 2^53, so every FP step is a
     * single correctly-rounded IEEE op — the exact parenthesization is part

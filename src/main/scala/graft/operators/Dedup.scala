@@ -464,40 +464,61 @@ object Dedup {
   private def dedupLabelsUncached(spark: SparkSession, d: String,
       threshold: Double, iterations: Int,
       pairGen: (SparkSession, String, Double) => DataFrame): DataFrame = {
+    val loop = new LabelLoop(spark, d, threshold, pairGen)
+    var labels = loop.initial
+    for (_ <- 1 to iterations) labels = loop.step(labels)
+    loop.finish(labels)
+  }
+
+  /** What both min-label propagations share: the pinned edges, the
+    * initial labels, the superstep and the singleton union. Only their
+    * stop rules differ.
+    */
+  private final class LabelLoop(spark: SparkSession, d: String,
+      threshold: Double, pairGen: (SparkSession, String, Double) => DataFrame) {
     import spark.implicits._
-    val pairs = pairGen(spark, d, threshold).select($"x", $"y")
+    private val pairs = pairGen(spark, d, threshold).select($"x", $"y")
     // undirected edges, both directions — partitioned ONCE on the
     // superstep join key (the pageRank `prob` discipline, guide §2.4):
     // the cached HashPartitioning(y) is reused by every round's
     // edges⋈labels join, so the static side never re-shuffles; without
     // it each superstep exchanges the whole edge table again
     // (iterations × |edges| shuffle bytes at corpus scale)
-    val edges = pairs.union(pairs.select($"y".as("x"), $"x".as("y")))
+    private val edges = pairs.union(pairs.select($"y".as("x"), $"x".as("y")))
       .repartition($"y").cache()
     // the subgraph's nodes: every doc that appears in some near-dup pair
-    var labels = edges.select($"x".as("doc_id")).distinct()
+    val initial: DataFrame = edges.select($"x".as("doc_id")).distinct()
       .select($"doc_id", $"doc_id".as("label"))
     // shrink the iteration-state partitioning (see Graph.pageRank): the
     // label table is |dup docs| rows, far below one row per shuffle
     // partition at test scale
-    val nNodes = labels.count()
-    val statePartitions = math.max(1, math.min(
-      spark.sparkContext.defaultParallelism, (nNodes / 10000L).toInt + 1))
-    for (_ <- 1 to iterations) {
+    private val statePartitions = math.max(1, math.min(
+      spark.sparkContext.defaultParallelism, (initial.count() / 10000L).toInt + 1))
+
+    /** Every node takes the least label among its own and its neighbors'. */
+    def step(labels: DataFrame): DataFrame = {
       val neighborMin = edges.join(labels, $"y" === $"doc_id")
         .groupBy($"x").agg(min($"label").as("nlabel"))
-      labels = labels.join(neighborMin, $"doc_id" === $"x", "left")
+      labels.join(neighborMin, $"doc_id" === $"x", "left")
         .select($"doc_id",
           least($"label", coalesce($"nlabel", $"label")).as("label"))
         .coalesce(statePartitions)
         .cutLineage()
     }
-    edges.unpersist() // labels are localCheckpointed — lineage is cut
-    // singletons: docs untouched by any pair — one anti-join, no iteration
-    val singletons = documents(spark, d).select($"doc_id")
+
+    def finish(labels: DataFrame): DataFrame = {
+      edges.unpersist() // labels are localCheckpointed — lineage is cut
+      withSingletons(spark, d, labels)
+    }
+  }
+
+  // singletons: docs untouched by any pair — one anti-join, no iteration
+  private def withSingletons(spark: SparkSession, d: String,
+      labels: DataFrame): DataFrame = {
+    import spark.implicits._
+    labels.union(documents(spark, d).select($"doc_id")
       .join(labels.select($"doc_id"), Seq("doc_id"), "left_anti")
-      .select($"doc_id", $"doc_id".as("label"))
-    labels.union(singletons)
+      .select($"doc_id", $"doc_id".as("label")))
   }
 
   /** Dedup SURVIVORSHIP: one canonical document per near-dup cluster —
@@ -552,36 +573,19 @@ object Dedup {
       threshold: Double, maxIterations: Int,
       pairGen: (SparkSession, String, Double) => DataFrame): DataFrame = {
     import spark.implicits._
-    val pairs = pairGen(spark, d, threshold).select($"x", $"y")
-    // same static-side partitioning pin as dedupLabelsUncached above
-    val edges = pairs.union(pairs.select($"y".as("x"), $"x".as("y")))
-      .repartition($"y").cache()
-    var labels = edges.select($"x".as("doc_id")).distinct()
-      .select($"doc_id", $"doc_id".as("label"))
-    val nNodes = labels.count()
-    val statePartitions = math.max(1, math.min(
-      spark.sparkContext.defaultParallelism, (nNodes / 10000L).toInt + 1))
+    val loop = new LabelLoop(spark, d, threshold, pairGen)
+    var labels = loop.initial
     var changed = 1L
     var it = 0
     while (changed > 0 && it < maxIterations) {
-      val neighborMin = edges.join(labels, $"y" === $"doc_id")
-        .groupBy($"x").agg(min($"label").as("nlabel"))
-      val next = labels.join(neighborMin, $"doc_id" === $"x", "left")
-        .select($"doc_id",
-          least($"label", coalesce($"nlabel", $"label")).as("label"))
-        .coalesce(statePartitions)
-        .cutLineage()
+      val next = loop.step(labels)
       changed = next.select($"doc_id", $"label".as("next_label"))
         .join(labels.select($"doc_id", $"label".as("prev_label")), "doc_id")
         .filter($"next_label" =!= $"prev_label").count()
       labels = next
       it += 1
     }
-    edges.unpersist()
-    val singletons = documents(spark, d).select($"doc_id")
-      .join(labels.select($"doc_id"), Seq("doc_id"), "left_anti")
-      .select($"doc_id", $"doc_id".as("label"))
-    labels.union(singletons)
+    loop.finish(labels)
   }
 
   /** `dedupClusters` on the converged propagation — true connected
@@ -623,13 +627,9 @@ object Dedup {
       threshold: Double,
       pairGen: (SparkSession, String, Double) => DataFrame): DataFrame = {
     import spark.implicits._
-    val labels = Graph.connectedComponentsStar(
+    withSingletons(spark, d, Graph.connectedComponentsStar(
         pairGen(spark, d, threshold).select($"x", $"y"))
-      .select($"id".as("doc_id"), $"component".as("label"))
-    val singletons = documents(spark, d).select($"doc_id")
-      .join(labels.select($"doc_id"), Seq("doc_id"), "left_anti")
-      .select($"doc_id", $"doc_id".as("label"))
-    labels.union(singletons)
+      .select($"id".as("doc_id"), $"component".as("label")))
   }
 
   /** `dedupClusters` on the star labels — same output contract as

@@ -1,9 +1,8 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+
+import graft.core.Profile
 
 /** Constrained-memory rehearsal: the top-10 heavies on the 10× fixture
   * under a deliberately SMALL heap must degrade by SPILLING — never by
@@ -105,18 +104,6 @@ object MemSweep {
     spark.sparkContext.setLogLevel("ERROR")
     ScaleSweep.ensureFixture(spark, src, fixture, factor)
 
-    val spillMem = new AtomicLong(0L)
-    val spillDisk = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          spillMem.addAndGet(m.memoryBytesSpilled): Unit
-          spillDisk.addAndGet(m.diskBytesSpilled): Unit
-        }
-      }
-    })
-
     // warm the declared builds like the bench/scale legs — under the
     // constrained heap the builds themselves are part of the rehearsal
     graft.Builds.all.foreach { case (name, fn) =>
@@ -127,19 +114,20 @@ object MemSweep {
     println(s"| query | secs | rows | spillMemMiB | spillDiskMiB | digest |")
     println(s"|---|---|---|---|---|---|")
     val results = queries.map { name =>
-      spillMem.set(0L); spillDisk.set(0L)
-      val t0 = System.nanoTime()
-      val r = try {
-        val rows = InvarianceSweep.canon(
-          graft.SparkEntry.queries(name)(spark, fixture))
-        Right((rows.size, digest(rows)))
-      } catch { case scala.util.control.NonFatal(e) =>
-        Left(e.getClass.getSimpleName + ": " +
-          String.valueOf(e.getMessage).linesIterator.take(2).mkString(" | "))
+      val ((r, secs), work) = Profile.span(spark) {
+        val t0 = System.nanoTime()
+        val r = try {
+          val rows = InvarianceSweep.canon(
+            graft.SparkEntry.queries(name)(spark, fixture))
+          Right((rows.size, digest(rows)))
+        } catch { case scala.util.control.NonFatal(e) =>
+          Left(e.getClass.getSimpleName + ": " +
+            String.valueOf(e.getMessage).linesIterator.take(2).mkString(" | "))
+        }
+        (r, (System.nanoTime() - t0) / 1e9)
       }
-      val secs = (System.nanoTime() - t0) / 1e9
-      ScaleSweep.drainBus(spark) // deterministic: all task-end events landed
-      val (sm, sd) = (spillMem.get() / (1024 * 1024), spillDisk.get() / (1024 * 1024))
+      val sm = work.stages.map(_.memorySpill).sum / (1024 * 1024)
+      val sd = work.stages.map(_.diskSpill).sum / (1024 * 1024)
       r match {
         case Right((n, dg)) =>
           println(f"| $name | $secs%.2f | $n%d | $sm%d | $sd%d | ${dg.take(12)} |")

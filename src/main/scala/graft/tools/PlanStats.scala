@@ -18,32 +18,6 @@ import org.apache.spark.sql.SparkSession
   * joins to broadcast at run time, so the table is conservative).
   */
 object PlanStats {
-  /** Run `body` and count the Spark jobs it starts on this thread (and on
-    * the threads Spark starts for it), by a job tag read back through a
-    * listener once the bus has drained.
-    */
-  private[graft] def jobsRun[T](spark: SparkSession)(body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val tag = s"graft-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-            .exists(_.split(",").contains(tag))) jobs.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(listener)
-    sc.addJobTag(tag)
-    try {
-      val r = body
-      ScaleSweep.drainBus(spark)
-      (r, jobs.get)
-    } finally {
-      sc.removeJobTag(tag)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val d = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val spark = SparkSession.builder()
@@ -96,8 +70,8 @@ object PlanStats {
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val cgen0 = compiles
-        val (df, cjobs) = jobsRun(spark)(fn(spark, d))
-        totalCjobs += cjobs
+        val (df, work) = graft.core.Profile.span(spark)(fn(spark, d))
+        totalCjobs += work.jobs
         // the initial plan's shape, read before the collect finalizes it
         val p = df.queryExecution.executedPlan.toString
         df.collect()
@@ -111,7 +85,7 @@ object PlanStats {
         out.println(s"| $name | $shuffles | ${c("Scan parquet")} | $rescans | " +
           s"${c("BroadcastHashJoin")} | ${c("SortMergeJoin")} | " +
           s"${c("BroadcastNestedLoopJoin") + c("CartesianProduct")} | " +
-          s"${c("SortAggregate")} | $cjobs | $cgen |")
+          s"${c("SortAggregate")} | ${work.jobs} | $cgen |")
       } catch {
         case e: Throwable =>
           out.println(s"| $name | ERR ${e.getClass.getSimpleName} | | | | | | | | |")

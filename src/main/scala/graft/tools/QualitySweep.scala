@@ -305,7 +305,7 @@ object QualitySweep {
       factors.foreach { f =>
         val spark = session(cpus, cpus * f)
         try curve(spark, s"/tmp/graft_scale$f", f, truthBase, nT)
-        finally { ScaleSweep.drainBus(spark); spark.stop() }
+        finally { graft.core.Profile.drain(spark); spark.stop() }
       }
       return
     }
@@ -321,7 +321,7 @@ object QualitySweep {
       val spark = session(cpus, cpus * f)
       val (r253, nTruth, nCross, rDense, bmEq) =
         try leg(spark, dir, f, truthBase)
-        finally { ScaleSweep.drainBus(spark); spark.stop() }
+        finally { graft.core.Profile.drain(spark); spark.stop() }
       val ok =
         if (f == 1) { floor253 = r253; floorDense = rDense; bmEq }
         else r253 >= 0.9 * floor253 && rDense >= 0.9 * floorDense && bmEq

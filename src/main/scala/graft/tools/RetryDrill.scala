@@ -265,7 +265,7 @@ object RetryDrill {
     val secs = (System.nanoTime() - t0) / 1e9
     legDone.set(true)
     watchdog.foreach(_.join(5000))
-    ScaleSweep.drainBus(spark)
+    graft.core.Profile.drain(spark)
     val out = (r, secs, failed.get(), speculative.get(), removed.get(),
       tasksEnded.get())
     spark.stop()

@@ -1,10 +1,9 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.core.Profile
 
 /** The measured-at-scale evidence the plan audits argue from (round-14
   * verdict item 1): generate a throwaway ~`factor`× fixture from sf0.1,
@@ -108,24 +107,6 @@ object ScaleSweep {
     "q254_hard_negatives_scaled", "q255_rrf_fusion_scaled")
 
   private[tools] val STRIDE = 100000000L // key offset per copy, beyond any base key
-
-  /** Deterministic listener-bus drain: LiveListenerBus.waitUntilEmpty
-    * instead of a fixed sleep, so every task-end event has landed
-    * before per-query counters are read (a fixed sleep misattributes
-    * late events to the NEXT query under a loaded bus — round-15
-    * ADVICE). The method is `private[spark]`, which compiles to a
-    * public JVM method, so plain reflection reaches it; if the API
-    * ever moves, fall back to the old sleep rather than fail the sweep.
-    */
-  private[graft] def drainBus(spark: SparkSession,
-      timeoutMs: Long = 10000L): Unit = {
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
-        .invoke(bus, java.lang.Long.valueOf(timeoutMs)): Unit
-    } catch { case scala.util.control.NonFatal(_) => Thread.sleep(300) }
-  }
 
   private def session(cpus: Int, shufflePartitions: Int): SparkSession = {
     val s = SparkSession.builder()
@@ -252,17 +233,6 @@ object ScaleSweep {
       queries: Seq[String], twice: Boolean)
       : (Double, Seq[(String, Double, Double, Long)]) = {
     val spark = session(cpus, shufflePartitions)
-    val maxRead = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          val r = m.shuffleReadMetrics.totalBytesRead
-          var cur = maxRead.get()
-          while (r > cur && !maxRead.compareAndSet(cur, r)) cur = maxRead.get()
-        }
-      }
-    })
     try graft.SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     val tb0 = System.nanoTime()
     graft.Builds.all.foreach { case (_, fn) =>
@@ -278,13 +248,13 @@ object ScaleSweep {
     // the same ballpark, in which case the min is the plan's cost
     val rows = queries.map { name =>
       val legs = (1 to (if (twice) 2 else 1)).map { _ =>
-        maxRead.set(0L)
-        val t0 = System.nanoTime()
-        try graft.SparkEntry.queries(name)(spark, dir).count()
-        catch { case e: Throwable => println(s"QUERY FAIL $name: ${e.getMessage}") }
-        val secs = (System.nanoTime() - t0) / 1e9
-        drainBus(spark) // deterministic: all task-end events landed
-        (secs, maxRead.get())
+        val (secs, work) = Profile.span(spark) {
+          val t0 = System.nanoTime()
+          try graft.SparkEntry.queries(name)(spark, dir).count()
+          catch { case e: Throwable => println(s"QUERY FAIL $name: ${e.getMessage}") }
+          (System.nanoTime() - t0) / 1e9
+        }
+        (secs, work.stages.map(_.maxTaskShuffleRead).maxOption.getOrElse(0L))
       }
       (name, legs(0)._1, legs.last._1, legs(0)._2)
     }

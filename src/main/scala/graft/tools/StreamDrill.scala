@@ -129,7 +129,7 @@ object StreamDrill {
         done.set(true)
         watchdog.foreach(_.join(5000))
         val digest = InvarianceSweep.canon(spark.read.parquet(out))
-        ScaleSweep.drainBus(spark)
+        graft.core.Profile.drain(spark)
         val res = (digest, tasksEnded.get(), removed.get(), secs)
         spark.stop()
         res

@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
+import graft.core.Profile
 import graft.operators.Graph
 
 /** Round-13 verdict item 3: skew/scale rehearsal for the ITERATIVE
@@ -18,7 +18,7 @@ import graft.operators.Graph
   *
   * What this pins, per the verdict's (a)/(b)/(c):
   *  (a) no single task absorbs the hub — measured DIRECTLY off
-  *      per-task shuffle-read bytes via a SparkListener during a real
+  *      per-task shuffle-read bytes via `Profile.span` during a real
   *      pageRank run, plus AQE `skewed`-marker plan evidence on the
   *      superstep join shape (test-scaled thresholds; the production
   *      defaults fire the same OptimizeSkewedJoin rule);
@@ -177,45 +177,28 @@ class GraphScaleSpec extends AnyFunSuite {
   }
 
   test("pageRank on a hub graph: no task absorbs the hub; volume bounded") {
-    import scala.collection.concurrent.TrieMap
-    // per-stage (max, sum) of task shuffle-read bytes, live off the bus
-    val perStage = TrieMap[Int, (Long, Long)]()
-    val listener = new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          val r = m.shuffleReadMetrics.totalBytesRead
-          if (r > 0) {
-            val (mx, sm) = perStage.getOrElse(te.stageId, (0L, 0L))
-            perStage.put(te.stageId, (math.max(mx, r), sm + r))
-          }
-        }
-      }
-    }
     withSkewConfs {
       val balanced = prEdges(hub = false)
       val hub = prEdges(hub = true)
-      Graph.pageRankEdges(spark, balanced, iterations = 3).count()
-      Thread.sleep(500)
-      val balancedVolume = perStage.values.map(_._2).sum
-      perStage.clear()
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        Graph.pageRankEdges(spark, hub, iterations = 3).count()
-        Thread.sleep(500) // listener bus is async; let task events drain
-      } finally spark.sparkContext.removeSparkListener(listener)
+      // one span per run: each sees the stages of its own loop only
+      def stages(edges: DataFrame) = Profile.span(spark)(
+        Graph.pageRankEdges(spark, edges, iterations = 3).count())._2.stages
+      val balancedStages = stages(balanced)
+      val hubStages = stages(hub)
       // (a) the hub's adjacency never collapses into one task: in every
       // stage that moved real data, the largest task read a bounded
       // share (an unsplit hub partition measures ~0.9 here)
-      val big = perStage.values.filter(_._2 > 512 * 1024)
+      val big = hubStages.filter(_.shuffleRead > 512 * 1024)
       assert(big.nonEmpty, "expected at least one data-bearing shuffle stage")
-      for ((mx, sm) <- big)
-        assert(mx.toDouble / sm < 0.7,
-          s"one task read $mx of $sm shuffle bytes — hub not spread")
+      for (s <- big)
+        assert(s.maxTaskShuffleRead.toDouble / s.shuffleRead < 0.7,
+          s"one task read ${s.maxTaskShuffleRead} of ${s.shuffleRead} " +
+            "shuffle bytes — hub not spread")
       // (b) total shuffle volume tracks the balanced run (no round
       // amplifies the hub's adjacency; 3× absorbs plan variance)
-      val hubVolume = perStage.values.map(_._2).sum
-      assert(balancedVolume == 0L || hubVolume < balancedVolume * 3 + (1 << 20),
+      val balancedVolume = balancedStages.map(_.shuffleRead).sum
+      val hubVolume = hubStages.map(_.shuffleRead).sum
+      assert(hubVolume < balancedVolume * 3 + (1 << 20),
         s"hub shuffle volume $hubVolume vs balanced $balancedVolume")
     }
   }

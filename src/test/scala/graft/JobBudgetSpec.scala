@@ -4,48 +4,23 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{Lineage, Tables}
+import graft.core.{Lineage, Profile, Tables}
 import graft.operators.{Graph, Ranks, Relational, Similarity, Windowed}
 
 /** Job budgets for DataFrame construction: the calls below hold
   * everything they need before they are asked, so building their frames
   * must not start Spark jobs for it. Jobs are counted per call by a job
-  * tag and a drained listener bus (`PlanStats.jobsRun`).
+  * tag and a drained listener bus (`Profile.span`).
   */
 class JobBudgetSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val sf = "/root/testdata/sf0.001"
 
-  private def jobs[T](body: => T): Int =
-    graft.tools.PlanStats.jobsRun(spark)(body)._2
+  private def jobs[T](body: => T): Int = Profile.span(spark)(body)._2.jobs
 
-  /** Shuffle-map tasks run while `body` runs (stages found by a job tag). */
-  private def shuffleTasks[T](body: => T): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted,
-      SparkListenerTaskEnd}
-    val sc = spark.sparkContext
-    val tag = s"graft-shuffles-${java.util.UUID.randomUUID()}"
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-            .exists(_.split(",").contains(tag))) stages.add(e.stageInfo.stageId): Unit
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId) && e.taskType == "ShuffleMapTask")
-          n.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(listener)
-    sc.addJobTag(tag)
-    try {
-      body
-      graft.tools.ScaleSweep.drainBus(spark)
-      n.get
-    } finally {
-      sc.removeJobTag(tag)
-      sc.removeSparkListener(listener)
-    }
-  }
+  /** Shuffle-map tasks run while `body` runs. */
+  private def shuffleTasks[T](body: => T): Int =
+    Profile.span(spark)(body)._2.stages.map(_.shuffleMapTasks).sum
 
   test("a second Tables.table read of an unchanged file runs no job") {
     val dir = Files.createTempDirectory("graft_jobs_tables").toString
@@ -71,8 +46,8 @@ class JobBudgetSpec extends AnyFunSuite {
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType.fromDDL("a LONG"))
-    val (pin, n) = graft.tools.PlanStats.jobsRun(spark)(Lineage.counted(empty))
-    assert(n == 0, s"counted ran $n jobs over a 0-partition frame")
+    val (pin, work) = Profile.span(spark)(Lineage.counted(empty))
+    assert(work.jobs == 0, s"counted ran ${work.jobs} jobs over a 0-partition frame")
     assert(pin.rows == 0L)
   }
 

@@ -75,31 +75,9 @@ class PlanShapeSpec extends AnyFunSuite {
     * lines Spark logs meanwhile: the witness that a single-partition
     * window was planned.
     */
-  private def singlePartitionWarns(build: => org.apache.spark.sql.DataFrame): Int = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    val seen = new java.util.concurrent.atomic.AtomicInteger(0)
-    val appender = new AbstractAppender("graft-window-warn", null, null,
-        true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        if (e.getMessage.getFormattedMessage.contains("No Partition Defined for Window"))
-          seen.incrementAndGet(): Unit
-    }
-    appender.start()
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    ctx.getConfiguration.getRootLogger.addAppender(appender, Level.WARN, null)
-    ctx.updateLoggers()
-    try {
-      plan(build)
-      seen.get
-    } finally {
-      ctx.getConfiguration.getRootLogger.removeAppender("graft-window-warn")
-      ctx.updateLoggers()
-      appender.stop()
-    }
-  }
+  private def singlePartitionWarns(build: => org.apache.spark.sql.DataFrame): Int =
+    graft.core.Profile.span(spark)(plan(build))._2.warns
+      .count(_.contains("No Partition Defined for Window"))
 
   test("rank dial: the single-partition windows appear only within windowMaxRows") {
     import spark.implicits._
