@@ -36,17 +36,11 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
     val canaryFirst = canary()
-    // declared warm phase: materialize the shared memo lineages FIRST and
-    // time each as a build, so per-query times measure the query itself
-    // instead of whichever family member happens to pay a shared build
-    // (the round-11 q86/q32 attribution noise). A failed build is an
-    // error — the queries riding it still run (they rebuild on miss).
-    val builds = Builds.all.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir) }
-      catch { case _: Throwable => errors += s"build:$name" }
-      name -> (System.nanoTime() - t0) / 1e9
-    }
+    // declared warm phase: the shared lineages are timed as builds, so
+    // per-query times measure the query itself; a failed build is an error
+    val warmed = Builds.warm(spark, sfDir)
+    errors ++= warmed.failures.map("build:" + _._1)
+    val builds = warmed.secs
     val results = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (name, fn) =>

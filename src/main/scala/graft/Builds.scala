@@ -2,54 +2,38 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The shared memo-cached lineages ("builds") that multiple SparkEntry
-  * queries fold over — the tokenized corpus, the shingle table, the
-  * MinHash/SimHash/pHash sketches, the LSH pair set, the star labels,
-  * the Lloyd centroids, the BM25 postings/weights, the bigram LM, the
-  * vocabulary, the eval n-gram set, the packed sequences, the
-  * co-purchase edges and the quality ranks.
+/** The shared memo-cached lineages ("builds") that several SparkEntry
+  * queries fold over: every `Memo.Shared` the operator objects declare,
+  * owner by owner, each in declaration order (base before derived — a
+  * build may ride an earlier one, signatures ride the shingle table).
   *
-  * Bench materializes these in a DECLARED warm phase and reports the
-  * per-build seconds as a `builds` entry, so per-query times measure
-  * the query itself: previously a shared build landed on whichever
-  * family member ran first, and a provider switch (q132 → star labels
-  * in round 11) showed up as a phantom ±3 s swing on an unrelated
-  * query (q86). Each thunk calls the SAME operator entry point with
-  * the SAME (default) parameters the SparkEntry queries use, so the
-  * later query call is a memo hit by construction.
-  *
-  * Ordered base → derived: a build may itself ride an earlier one
-  * (signatures ride the shingle table, weights ride the postings), so
-  * attribution inside the warm phase is stable too. Each thunk returns
-  * the materialized row count (an action is what pins the cache).
+  * Bench (and PlanStats, MemSweep, ScaleSweep) materialize these in a
+  * declared warm phase first, so per-query times measure the query
+  * itself instead of whichever family member happens to pay a shared
+  * build. A build warms at the parameters its entry points default to,
+  * so the queries' later calls are memo hits by construction.
   */
 object Builds {
-  def all: Seq[(String, (SparkSession, String) => Long)] = Seq(
-    "tokenized"      -> ((s, d) => operators.Text.tokenized(s, d).count()),
-    "vocab_counts"   -> ((s, d) => operators.Text.vocabCounts(s, d).count()),
-    "bigram_lm"      -> ((s, d) => operators.Text.bigramCounts(s, d).count()),
-    "bigram_surprisal" -> ((s, d) => operators.Text.bigramSurprisal(s, d).count()),
-    "quality_rank"   -> ((s, d) => operators.Text.qualityRank(s, d).count()),
-    "lang_id"        -> ((s, d) => operators.Text.langId(s, d).count()),
-    "token_entropy"  -> ((s, d) => operators.Text.tokenEntropy(s, d).count()),
-    "shingle_arrays" -> ((s, d) => operators.Dedup.docShingleArrays(s, d).count()),
-    "shingle_index"  -> ((s, d) => operators.Dedup.docShingles(s, d).count()),
-    "minhash_sig"    -> ((s, d) => operators.Dedup.minhashSignatures(s, d).count()),
-    "lsh_pairs"      -> ((s, d) => operators.Dedup.minhashLsh(s, d).count()),
-    "jaccard_pairs"  -> ((s, d) => operators.Dedup.jaccardPairs(s, d).count()),
-    "labels_star"    -> ((s, d) => operators.Dedup.dedupLabelsStar(s, d).count()),
-    "effective_tokens" -> ((s, d) => operators.Dedup.effectiveTokens(s, d).count()),
-    "simhash_sketch" -> ((s, d) => operators.Dedup.simhashSketch(s, d).count()),
-    "simhash_pairs"  -> ((s, d) => operators.Dedup.simhashPairs(s, d).count()),
-    "phash_fp"       -> ((s, d) => multimodal.Multimodal.phashFpCached(s, d).count()),
-    "corpus_norm"    -> ((s, d) => operators.Similarity.corpusWithNorm(s, d).count()),
-    "centroids_8x2"  -> ((s, d) => operators.Similarity.lloydCentroids(s, d, 8, 2).length.toLong),
-    "bm25_postings"  -> ((s, d) => operators.Retrieval.bm25Tf(s, d).count()),
-    "bm25_weights"   -> ((s, d) => operators.Retrieval.bm25Weights(s, d).count()),
-    "eval_grams"     -> ((s, d) => operators.Contamination.evalGramSet(s, d, 5, 5).count()),
-    "pack_sequences" -> ((s, d) => operators.Sampling.packSequences(s, d).count()),
-    "copurchase"     -> ((s, d) => operators.Graph.copurchaseEdges(s, d).count()),
-    "lp_labels"      -> ((s, d) => operators.Graph.labelPropagation(s, d).count()),
-    "label_dim_sums" -> ((s, d) => operators.Similarity.labelDimSums(s, d).count())
-  )
+  def all: Seq[core.Memo.Shared[_]] = Seq(
+    operators.Text, operators.Dedup, multimodal.Multimodal,
+    operators.Similarity, operators.Retrieval, operators.Contamination,
+    operators.Sampling, operators.Graph).flatMap(_.declarations)
+
+  final case class Warmed(secs: Seq[(String, Double)],
+      failures: Seq[(String, Throwable)])
+
+  /** Materialize every build (an action is what pins the cache): the
+    * seconds each took, and the ones that threw. The queries riding a
+    * failed build still run — they rebuild on miss.
+    */
+  def warm(spark: SparkSession, d: String): Warmed = {
+    val runs = all.map { b =>
+      val t0 = System.nanoTime()
+      val failure =
+        try { b(spark, d).count(); None } catch { case e: Throwable => Some(e) }
+      (b.name, (System.nanoTime() - t0) / 1e9, failure)
+    }
+    Warmed(runs.map(r => r._1 -> r._2),
+      runs.flatMap(r => r._3.map(r._1 -> _)))
+  }
 }

@@ -1,98 +1,107 @@
 package graft.core
 
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, ExecutionException}
+
+import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-scoped memoization of shared DataFrame lineages.
+/** Session-scoped memoization of shared DataFrame lineages: one plan
+  * object, one `.cache()` and one materialization per (session, key), so
+  * every query after the first reuses the in-memory columnar form.
   *
-  * Several operators build the same intermediate (the shingle table, the
-  * MinHash signatures, the quantized-embedding corpus). Round 1 cached
-  * each privately, so a bench run re-cached identical plans per query
-  * ("Asked to cache already cached data" spam in BENCH_r01.json) and paid
-  * the build repeatedly. Memoizing the *DataFrame object* per
-  * (session, key) means one `.cache()` call and one materialization
-  * per lineage per session — warning-free, and every query after the
-  * first reuses the in-memory columnar form.
+  * A lineage two or more queries share is declared once, as a `Shared`
+  * value in the operator object (`Owner`) that owns it: memo name, cache
+  * flag, warm parameters and build in one place, which `graft.Builds`
+  * enumerates. A lineage one query alone reads, or one keyed by call-site
+  * values, calls `Memo(...)` directly and says so at its site.
   *
-  * Keys use a per-session UUID minted on first touch (weak identity map
-  * below) — unique per SparkSession INSTANCE even when two sessions share
-  * one SparkContext (`newSession()`); an applicationId key would hand
-  * session B a DataFrame bound to session A's state (confs, temp views),
-  * and `System.identityHashCode` is not guaranteed collision-free across
-  * live objects. Entries whose underlying context has stopped are swept
-  * on the next touch, so DataFrames of finished Verify/Bench sessions
-  * don't accumulate for the JVM lifetime.
-  *
-  * A session discarded mid-flight while its context stays alive remains
-  * pinned until `release(spark)` — unavoidable while the map holds
-  * DataFrames, because a Dataset strongly references its SparkSession
-  * (holding the session "weakly" next to its own DataFrames would never
-  * collect). Long-lived apps cycling `newSession()` should call
-  * `release` when done with a session; entries are small derived tables
-  * (sketches, signatures, token arrays) — bounded by the corpus; the
-  * blocks themselves live in Spark's block manager under its normal LRU
-  * eviction and are dropped eagerly by `release`.
+  * Keys carry a per-session UUID (weak identity map below), unique per
+  * SparkSession INSTANCE even when sessions share one SparkContext
+  * (`newSession()`), so a session never gets a DataFrame bound to
+  * another's state. Entries whose context has stopped are swept on the
+  * next touch. A session discarded while its context lives stays pinned
+  * (a Dataset references its session) until `release(spark)`.
   */
 object Memo {
-  private val memo = new ConcurrentHashMap[String, (SparkSession, DataFrame)]()
+  private type Entry = (SparkSession, CompletableFuture[DataFrame])
+  private val memo = new ConcurrentHashMap[String, Entry]()
 
-  // Weak identity keys (SparkSession doesn't override equals): a UUID per
-  // session instance, collision-free for the JVM lifetime. The weak key
-  // costs nothing — memo values pin the session until sweep/release — but
-  // guarantees a re-used heap address can never alias a dead session's key.
+  // weak identity keys (SparkSession doesn't override equals): a re-used
+  // heap address can never alias a dead session's UUID
   private val sessionIds =
     new java.util.WeakHashMap[SparkSession, String]()
 
-  private def sessionId(spark: SparkSession): String =
-    sessionIds.synchronized {
-      var id = sessionIds.get(spark)
-      if (id eq null) {
-        id = java.util.UUID.randomUUID().toString
-        sessionIds.put(spark, id)
-      }
-      id
-    }
+  private def sessionId(spark: SparkSession): String = sessionIds.synchronized {
+    sessionIds.computeIfAbsent(spark, _ => java.util.UUID.randomUUID().toString)
+  }
 
-  /** Memoize the plan object per (session, key), building at most once per
-    * session (modulo a benign race: two threads may build the same cheap
-    * plan; one wins the map). `cache=true` additionally marks the plan
-    * for storage — callers share one cached lineage instead of each
-    * re-marking an identical plan.
+  /** The plan object for (session, key), built at most once per session.
+    * The first toucher claims the key with a pending future and builds
+    * OUTSIDE the map (builders recurse into other memoized loaders, which
+    * would deadlock inside a single-bin compute); concurrent touchers
+    * wait on the future and get the same DataFrame. A build that throws
+    * is not memoized: the key is dropped, every waiter sees the builder's
+    * exception, and the next touch builds again. `cache=true` also marks
+    * the plan for storage.
     */
   def apply(spark: SparkSession, cache: Boolean, key: String*)(
       build: => DataFrame): DataFrame = {
     sweep()
     val k = (sessionId(spark) +: cache.toString +: key).mkString(" ")
-    val hit = memo.get(k)
-    if (hit ne null) hit._2
+    val mine: Entry = (spark, new CompletableFuture[DataFrame]())
+    val held = memo.putIfAbsent(k, mine)
+    if (held ne null)
+      try held._2.get() catch { case e: ExecutionException => throw e.getCause }
     else {
-      // build OUTSIDE computeIfAbsent: builders recurse into other memoized
-      // loaders (docShingles → documents), which would deadlock inside a
-      // single-bin compute
-      val built = if (cache) build.cache() else build
-      val prev = memo.putIfAbsent(k, (spark, built))
-      if (prev ne null) prev._2 else built
+      val built =
+        try if (cache) build.cache() else build
+        catch { case e: Throwable =>
+          memo.remove(k, mine)
+          mine._2.completeExceptionally(e)
+          throw e
+        }
+      mine._2.complete(built)
+      built
     }
   }
 
-  /** Drop entries whose session's context has stopped — their cached
-    * blocks are gone with the context; holding the DataFrames would pin
-    * dead plans (and their session state) for the JVM lifetime.
+  /** A declared shared lineage, memoized under `name d key(p)…`. `warm`
+    * is the parameters its entry points default to, which `Builds.warm`
+    * materializes; `apply(spark, d)` is the lineage at them.
     */
-  private def sweep(): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext) {
-      if (it.next().getValue._1.sparkContext.isStopped) it.remove()
+  final class Shared[P] private[Memo] (val name: String, cache: Boolean,
+      val warm: P, key: P => Seq[String],
+      build: (SparkSession, String, P) => DataFrame) {
+    def apply(spark: SparkSession, d: String, p: P): DataFrame =
+      Memo(spark, cache, name +: d +: key(p): _*)(build(spark, d, p))
+    def apply(spark: SparkSession, d: String): DataFrame = apply(spark, d, warm)
+  }
+
+  /** An object declaring shared lineages, listed in declaration order. */
+  trait Owner {
+    private val declared = ArrayBuffer.empty[Shared[_]]
+    private[graft] def declarations: Seq[Shared[_]] = declared.toSeq
+
+    protected def shared(name: String, cache: Boolean)(
+        build: (SparkSession, String) => DataFrame): Shared[Unit] =
+      shared[Unit](name, cache, (), _ => Nil)((s, d, _) => build(s, d))
+
+    protected def shared[P](name: String, cache: Boolean, warm: P,
+        key: P => Seq[String] = (p: P) => Seq(p.toString))(
+        build: (SparkSession, String, P) => DataFrame): Shared[P] = {
+      val s = new Shared(name, cache, warm, key, build)
+      declared += s
+      s
     }
   }
 
-  /** The memo keys currently held for one session (the per-session UUID
-    * prefix stripped) — test-only introspection: MemoSpec asserts that
-    * query families documented as memo-sharing really collapse to ONE
-    * entry per shared intermediate, which is exactly the property that
-    * silently broke when a cache key was derived from a default-argument
-    * lambda's class name (distinct per call site — round-4 verdict).
+  // entries of a stopped context: their blocks are gone with it
+  private def sweep(): Unit =
+    memo.values().removeIf(_._1.sparkContext.isStopped)
+
+  /** One session's memo keys, the session prefix stripped (MemoSpec and
+    * the tools read which lineages a query family shares or adds).
     */
   private[graft] def keysFor(spark: SparkSession): Seq[String] = {
     val prefix = sessionId(spark) + " "
@@ -102,25 +111,20 @@ object Memo {
     }
   }
 
-  /** Evict one session's entries, unpersisting their cached blocks — the
-    * hook for apps that discard sessions (`newSession()`) while the
-    * shared context keeps running, where sweep() can't tell the session
-    * is gone (the memo's own DataFrames keep it reachable).
+  /** Evict one session's entries and unpersist their blocks — for apps
+    * that discard sessions while the shared context keeps running.
     */
-  def release(spark: SparkSession): Unit = {
-    val it = memo.entrySet().iterator()
-    while (it.hasNext) {
-      val (s, df) = it.next().getValue
-      if (s eq spark) {
-        if (!s.sparkContext.isStopped) {
-          df.unpersist(blocking = false)
-          // the WHOLE plan: the checkpoint may sit under a Union/Project
-          // (dedupLabels memoizes checkpointed-labels ∪ singletons), not
-          // only at the root
-          Lineage.release(df)
-        }
-        it.remove()
+  def release(spark: SparkSession): Unit =
+    memo.values().removeIf { e =>
+      val (s, built) = e
+      // a pending or failed build has no blocks of its own to drop
+      if ((s eq spark) && built.isDone && !built.isCompletedExceptionally &&
+          !s.sparkContext.isStopped) {
+        val df = built.join()
+        df.unpersist(blocking = false)
+        // the WHOLE plan: a checkpoint may sit under a Union, not at the root
+        Lineage.release(df)
       }
+      s eq spark
     }
-  }
 }

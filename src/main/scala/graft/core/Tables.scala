@@ -195,7 +195,8 @@ object Tables {
     }
   }
   // memoized: the spread-probe (scan partition count) runs once per
-  // session+dir, and every operator composes over the same plan object
+  // session+dir, and every operator composes over the same plan object.
+  // Not declared builds: uncached base tables the builds themselves read
   def documents(spark: SparkSession, d: String): DataFrame =
     Memo(spark, cache = false, "documents", d)(spread(table(spark, d, "documents")))
   def embeddings(spark: SparkSession, d: String): DataFrame =

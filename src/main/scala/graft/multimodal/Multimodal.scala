@@ -27,7 +27,7 @@ import graft.core.Tables._
   * row-group target (~tens of MB) and push oversized media to object
   * storage with a pointer column — the schema below carries both forms.
   */
-object Multimodal {
+object Multimodal extends graft.core.Memo.Owner {
 
   /** Typed metadata for an opaque media payload. `uri` is the
     * pointer-form alternative to inline `content`.
@@ -276,10 +276,7 @@ object Multimodal {
   /** phashFingerprints, memo-cached — the band explode and the re-check
     * join both fold over one materialization.
     */
-  private[graft] def phashFpCached(spark: SparkSession, d: String): DataFrame =
-    graft.core.Memo(spark, cache = true, "phashFp", d) {
-      phashFingerprints(spark, d)
-    }
+  private[graft] val phashFpCached = shared("phashFp", cache = true)(phashFingerprints)
 
   def phashPairs(spark: SparkSession, d: String, maxHamming: Int = 3): DataFrame = {
     import spark.implicits._

@@ -15,10 +15,32 @@ import graft.functions.TextFunctions._
   * popularized by the GPT-3 appendix; boilerplate fractions per C4/CCNet —
   * see PAPERS.md) re-expressed as declarative Spark plans.
   */
-object Contamination {
+object Contamination extends graft.core.Memo.Owner {
 
   private def evalBucket(idCol: org.apache.spark.sql.Column) =
     pmod(Hashing.md5Bits32(concat(lit("eval:"), idCol.cast("string")), 1), lit(100L))
+
+  /** The n-gram length and eval-bucket percent the contamination entry
+    * points default to, and the eval n-gram set the builds warm.
+    */
+  final val EvalN = 5
+  final val EvalPct = 5
+
+  /** The distinct eval-bucket n-gram dictionary — memo-cached per
+    * (dir, n, evalPct): q59's membership join, q105's Bloom build AND
+    * q105's exact re-check all read this one materialization instead of
+    * re-deriving the eval-side shingle pass per use.
+    */
+  private[graft] val evalGramSet = shared("evalGrams", cache = true, (EvalN, EvalPct),
+      (p: (Int, Int)) => Seq(s"${p._1}:${p._2}")) {
+    case (spark, d, (n, evalPct)) =>
+      import spark.implicits._
+      documents(spark, d)
+        .select($"doc_id", tokens($"text").as("ws"), evalBucket($"doc_id").as("b"))
+        .filter($"b" < evalPct)
+        .select(explode(Hashing.shingles($"ws", n)).as("s"))
+        .distinct()
+  }
 
   /** Benchmark decontamination: a deterministic 5 % of documents stands
     * in for the eval/benchmark set (md5 bucket of the doc id — the same
@@ -33,30 +55,14 @@ object Contamination {
     * (doc_id) count aggregation after the semi-ish join; docs with no
     * hit re-enter via the left join with n_overlap = 0.
     */
-  /** The distinct eval-bucket n-gram dictionary — memo-cached per
-    * (dir, n, evalPct): q59's membership join, q105's Bloom build AND
-    * q105's exact re-check all read this one materialization instead of
-    * re-deriving the eval-side shingle pass per use.
-    */
-  private[graft] def evalGramSet(spark: SparkSession, d: String,
-      n: Int, evalPct: Int): DataFrame =
-    graft.core.Memo(spark, cache = true, "evalGrams", d, s"$n:$evalPct") {
-      import spark.implicits._
-      documents(spark, d)
-        .select($"doc_id", tokens($"text").as("ws"), evalBucket($"doc_id").as("b"))
-        .filter($"b" < evalPct)
-        .select(explode(Hashing.shingles($"ws", n)).as("s"))
-        .distinct()
-    }
-
   def decontaminate(spark: SparkSession, d: String,
-      n: Int = 5, evalPct: Int = 5): DataFrame = {
+      n: Int = EvalN, evalPct: Int = EvalPct): DataFrame = {
     import spark.implicits._
     val docs = documents(spark, d)
       .select($"doc_id", tokens($"text").as("ws"), evalBucket($"doc_id").as("b"))
     val shingled = docs.select($"doc_id", $"b",
       explode(Hashing.shingles($"ws", n)).as("s"))
-    val evalGrams = evalGramSet(spark, d, n, evalPct)
+    val evalGrams = evalGramSet(spark, d, (n, evalPct))
     val overlap = shingled.filter($"b" >= evalPct)
       .join(evalGrams, "s")
       .groupBy($"doc_id").agg(count(lit(1)).as("n_overlap"))
@@ -103,7 +109,7 @@ object Contamination {
     * plain column expressions (array literal + bit tests, codegen'd).
     */
   def bloomDecontaminate(spark: SparkSession, d: String,
-      n: Int = 5, evalPct: Int = 5, logM: Int = 17): DataFrame = {
+      n: Int = EvalN, evalPct: Int = EvalPct, logM: Int = 17): DataFrame = {
     import spark.implicits._
     val m = 1L << logM
     val words = (m / 64).toInt
@@ -111,7 +117,7 @@ object Contamination {
       .select($"doc_id", tokens($"text").as("ws"), evalBucket($"doc_id").as("b"))
     val shingled = docs.select($"doc_id", $"b",
       explode(Hashing.shingles($"ws", n)).as("s"))
-    val evalGrams = evalGramSet(spark, d, n, evalPct)
+    val evalGrams = evalGramSet(spark, d, (n, evalPct))
     // three probe positions per gram: disjoint 32-bit md5 windows mod m
     def probes(s: Column): Seq[Column] =
       (0 until 3).map(i => pmod(Hashing.md5Bits32(s, 1 + 8 * i), lit(m)))
@@ -163,11 +169,11 @@ object Contamination {
     * the exact membership left-join, then ONE 1-row aggregate.
     */
   def bloomFprAudit(spark: SparkSession, d: String,
-      n: Int = 5, evalPct: Int = 5, logM: Int = 17): DataFrame = {
+      n: Int = EvalN, evalPct: Int = EvalPct, logM: Int = 17): DataFrame = {
     import spark.implicits._
     val m = 1L << logM
     val words = (m / 64).toInt
-    val evalGrams = evalGramSet(spark, d, n, evalPct)
+    val evalGrams = evalGramSet(spark, d, (n, evalPct))
     def probes(s: Column): Seq[Column] =
       (0 until 3).map(i => pmod(Hashing.md5Bits32(s, 1 + 8 * i), lit(m)))
     val pow2 = typedlit((0 until 64).map(1L << _))
@@ -215,7 +221,7 @@ object Contamination {
   }
 
   def substringDecontaminate(spark: SparkSession, d: String,
-      n: Int = 8, evalPct: Int = 5): DataFrame = {
+      n: Int = 8, evalPct: Int = EvalPct): DataFrame = {
     import spark.implicits._
     val w = org.apache.spark.sql.expressions.Window
     val docs = documents(spark, d)

@@ -26,7 +26,12 @@ import graft.functions.TextFunctions._
   *     the candidates — the 100 TB near-dup path.
   *  4. SimHash: 64-bit sketch + pigeonhole banding for Hamming ≤ 3.
   */
-object Dedup {
+object Dedup extends graft.core.Memo.Owner {
+
+  /** The near-dup Jaccard threshold every dedup entry point defaults to,
+    * and the one the shared pair and label builds are warmed at.
+    */
+  final val DupThreshold = 0.5
 
   /** Exact dedup by content hash (A7 `distinct(0)` shape,
     * dataset_preparation/MBoxParser.java:79-80): canonical doc = min id
@@ -79,12 +84,11 @@ object Dedup {
     * each derivation re-ran the tokenize+shingle expression chain —
     * two full passes over every document per session.
     */
-  private[graft] def docShingleArrays(spark: SparkSession, d: String): DataFrame =
-    graft.core.Memo(spark, cache = true, "docShingleArrays", d) {
-      import spark.implicits._
-      documents(spark, d)
-        .select($"doc_id", shingles(tokens($"text"), 3).as("shs"))
-    }
+  private[graft] val docShingleArrays = shared("docShingleArrays", cache = true) { (spark, d) =>
+    import spark.implicits._
+    documents(spark, d)
+      .select($"doc_id", shingles(tokens($"text"), 3).as("shs"))
+  }
 
   /** (doc_id, n, hs, col) — the SLIM verify companion of
     * `docShingleArrays`: `hs` maps each distinct string shingle to its
@@ -105,6 +109,7 @@ object Dedup {
     * 19.9 → 3.7 s warm, identical output.
     */
   private[graft] def docShingleHashArrays(spark: SparkSession, d: String): DataFrame =
+    // not a declared build: q109's verify stage is its one catalog consumer
     graft.core.Memo(spark, cache = true, "docShingleHashArrays", d) {
       import spark.implicits._
       docShingleArrays(spark, d)
@@ -118,11 +123,10 @@ object Dedup {
     * of them in self-joins that read it twice — the cache keeps those
     * reads in-memory scans instead of repeated explodes + shuffles.
     */
-  private[graft] def docShingles(spark: SparkSession, d: String): DataFrame =
-    graft.core.Memo(spark, cache = true, "docShingles", d) {
-      import spark.implicits._
-      docShingleArrays(spark, d).select($"doc_id", explode($"shs").as("s"))
-    }
+  private[graft] val docShingles = shared("docShingles", cache = true) { (spark, d) =>
+    import spark.implicits._
+    docShingleArrays(spark, d).select($"doc_id", explode($"shs").as("s"))
+  }
 
   /** DIRECTED containment near-dup pairs (Broder's asymmetric Jaccard,
     * C(x→y) = |Sx ∩ Sy| / |Sx|): x is "contained in" y when ≥
@@ -169,25 +173,25 @@ object Dedup {
     * per-doc distinct-shingle counts. jac is an exact int ratio — no FP
     * rounding concerns.
     */
-  def jaccardPairs(spark: SparkSession, d: String, threshold: Double = 0.5): DataFrame =
-    graft.core.Memo(spark, cache = true, "jaccardPairs", d, threshold.toString) {
-      jaccardPairsUncached(spark, d, threshold)
-    }
+  def jaccardPairs(spark: SparkSession, d: String,
+      threshold: Double = DupThreshold): DataFrame =
+    jaccardPairsBuild(spark, d, threshold)
 
-  private def jaccardPairsUncached(spark: SparkSession, d: String, threshold: Double): DataFrame = {
-    import spark.implicits._
-    val sh = docShingles(spark, d)
-    val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("sz"))
-    val inter = sh.as("a").join(sh.as("b"),
-        $"a.s" === $"b.s" && $"a.doc_id" < $"b.doc_id")
-      .groupBy($"a.doc_id".as("x"), $"b.doc_id".as("y"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "x").withColumnRenamed("sz", "szx"), "x")
-      .join(sizes.withColumnRenamed("doc_id", "y").withColumnRenamed("sz", "szy"), "y")
-      .select($"x", $"y",
-        ($"inter".cast("double") / ($"szx" + $"szy" - $"inter")).as("jac"))
-      .filter($"jac" >= threshold)
+  private val jaccardPairsBuild = shared("jaccardPairs", cache = true, DupThreshold) {
+    (spark, d, threshold) =>
+      import spark.implicits._
+      val sh = docShingles(spark, d)
+      val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("sz"))
+      val inter = sh.as("a").join(sh.as("b"),
+          $"a.s" === $"b.s" && $"a.doc_id" < $"b.doc_id")
+        .groupBy($"a.doc_id".as("x"), $"b.doc_id".as("y"))
+        .agg(count(lit(1)).as("inter"))
+      inter
+        .join(sizes.withColumnRenamed("doc_id", "x").withColumnRenamed("sz", "szx"), "x")
+        .join(sizes.withColumnRenamed("doc_id", "y").withColumnRenamed("sz", "szy"), "y")
+        .select($"x", $"y",
+          ($"inter".cast("double") / ($"szx" + $"szy" - $"inter")).as("jac"))
+        .filter($"jac" >= threshold)
   }
 
   /** PREFIX-FILTERED exact Jaccard join (the SSJoin/PPJoin candidate
@@ -216,7 +220,7 @@ object Dedup {
     * instead of a banding probability.
     */
   def jaccardPrefixJoin(spark: SparkSession, d: String,
-      threshold: Double = 0.5): DataFrame = {
+      threshold: Double = DupThreshold): DataFrame = {
     import spark.implicits._
     val arr = docShingleArrays(spark, d)
     val passing = prefixAdmitted(spark, d, threshold)
@@ -293,7 +297,7 @@ object Dedup {
     * comparison against the full inverted-index join.
     */
   private[graft] def prefixCandidates(spark: SparkSession, d: String,
-      threshold: Double = 0.5): DataFrame =
+      threshold: Double = DupThreshold): DataFrame =
     // result memo (round-14, the q109 watch item's other half): the
     // pair table is 2 longs/row and ∝ candidate volume (linear in the
     // corpus by the per-copy construction), while its lineage — explode
@@ -302,6 +306,7 @@ object Dedup {
     // comparison, the verify stage, repeat invocations). Caching it
     // also cuts the verify plan's references to the shingle-array
     // cache from three to two, the round-13 storage-pressure finding.
+    // Not a declared build: q109 is its one catalog consumer.
     graft.core.Memo(spark, cache = true,
         "prefixCandidates", d, threshold.toString) {
       prefixCandidatesUncached(spark, d, threshold)
@@ -352,12 +357,11 @@ object Dedup {
     * signature column, not re-derive it per band lambda (interpreted
     * HOFs re-evaluate non-attribute children — Hashing.scala).
     */
-  private[graft] def minhashSignatures(spark: SparkSession, d: String): DataFrame =
-    graft.core.Memo(spark, cache = true, "minhashSig", d) {
-      import spark.implicits._
-      docShingleArrays(spark, d)
-        .select($"doc_id", minhashSignature($"shs", 64).as("sig"))
-    }
+  private[graft] val minhashSignatures = shared("minhashSig", cache = true) { (spark, d) =>
+    import spark.implicits._
+    docShingleArrays(spark, d)
+      .select($"doc_id", minhashSignature($"shs", 64).as("sig"))
+  }
 
   def minhashCandidates(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
@@ -370,26 +374,9 @@ object Dedup {
       .distinct()
   }
 
-  def minhashLsh(spark: SparkSession, d: String, threshold: Double = 0.5): DataFrame =
-    // result memo: the pair set is tiny (∝ dup density) and feeds q15,
-    // the cluster query and the curation pipeline — build it once
-    graft.core.Memo(spark, cache = true, "minhashLshPairs", d, threshold.toString) {
-      minhashLshUncached(spark, d, threshold)
-    }
-
-  /** The ONE function object used as the default pair generator across the
-    * whole dedup ladder. Default arguments compile to a fresh eta-expansion
-    * (a distinct lambda class) PER CALL SITE, so `dedupClusters`' default
-    * and `canonicalDocs`' default were different objects with different
-    * class names — which silently defeated the `dedupLabels` memo for a
-    * full round (label propagation ran twice per session). Sharing this
-    * single `val` makes reference equality (`eq`) hold at every default
-    * site, and `dedupLabels` memoizes exactly when it holds.
-    */
-  val MinhashLshGen: (SparkSession, String, Double) => DataFrame =
-    minhashLsh(_, _, _)
-
-  private def minhashLshUncached(spark: SparkSession, d: String, threshold: Double): DataFrame = {
+  // result memo: the pair set is tiny (∝ dup density) and feeds q15,
+  // the cluster query and the curation pipeline — build it once
+  val minhashLsh = shared("minhashLshPairs", cache = true, DupThreshold) { (spark, d, threshold) =>
     import spark.implicits._
     val candidates = minhashCandidates(spark, d)
     // exact re-check restricted to candidates
@@ -406,6 +393,18 @@ object Dedup {
         ($"inter".cast("double") / ($"szx" + $"szy" - $"inter")).as("jac"))
       .filter($"jac" >= threshold)
   }
+
+  /** The ONE function object used as the default pair generator across the
+    * whole dedup ladder. Default arguments compile to a fresh eta-expansion
+    * (a distinct lambda class) PER CALL SITE, so `dedupClusters`' default
+    * and `canonicalDocs`' default were different objects with different
+    * class names — which silently defeated the `dedupLabels` memo for a
+    * full round (label propagation ran twice per session). Sharing this
+    * single `val` makes reference equality (`eq`) hold at every default
+    * site, and `dedupLabels` memoizes exactly when it holds.
+    */
+  val MinhashLshGen: (SparkSession, String, Double) => DataFrame =
+    minhashLsh(_, _, _)
 
   /** Near-dup CLUSTERS from the pair graph: connected components by
     * iterative min-label propagation (each doc adopts the smallest doc_id
@@ -430,7 +429,7 @@ object Dedup {
     * force-broadcast (round-1 defect: driver OOM at corpus scale).
     */
   def dedupClusters(spark: SparkSession, d: String,
-      threshold: Double = 0.5, iterations: Int = 5,
+      threshold: Double = DupThreshold, iterations: Int = DupIterations,
       pairGen: (SparkSession, String, Double) => DataFrame = MinhashLshGen): DataFrame = {
     import spark.implicits._
     dedupLabels(spark, d, threshold, iterations, pairGen)
@@ -445,7 +444,7 @@ object Dedup {
     * canonical-doc survivorship) share one propagation.
     */
   def dedupLabels(spark: SparkSession, d: String,
-      threshold: Double = 0.5, iterations: Int = 5,
+      threshold: Double = DupThreshold, iterations: Int = DupIterations,
       pairGen: (SparkSession, String, Double) => DataFrame = MinhashLshGen): DataFrame =
     // one propagation per (dir, params) per session: cluster counting
     // (q32) and survivorship (q82) share the superstep work.
@@ -454,12 +453,18 @@ object Dedup {
     // never derive from closure identity (class names differ per default-
     // arg call site; and two closures of the same class capturing
     // different state would collide to one key and serve a stale result).
-    if (pairGen eq MinhashLshGen)
-      graft.core.Memo(spark, cache = false, "dedupLabels", d,
-        threshold.toString, iterations.toString, "minhashLsh") {
-        dedupLabelsUncached(spark, d, threshold, iterations, pairGen)
-      }
+    if (pairGen eq MinhashLshGen) dedupLabelsBuild(spark, d, (threshold, iterations))
     else dedupLabelsUncached(spark, d, threshold, iterations, pairGen)
+
+  /** The superstep count the fixed-loop label entry points default to. */
+  final val DupIterations = 5
+
+  private val dedupLabelsBuild = shared("dedupLabels", cache = false,
+      (DupThreshold, DupIterations),
+      (p: (Double, Int)) => Seq(p._1.toString, p._2.toString, "minhashLsh")) {
+    case (spark, d, (threshold, iterations)) =>
+      dedupLabelsUncached(spark, d, threshold, iterations, MinhashLshGen)
+  }
 
   private def dedupLabelsUncached(spark: SparkSession, d: String,
       threshold: Double, iterations: Int,
@@ -533,7 +538,7 @@ object Dedup {
     * sort, one shuffle on label.
     */
   def canonicalDocs(spark: SparkSession, d: String,
-      threshold: Double = 0.5, iterations: Int = 5,
+      threshold: Double = DupThreshold, iterations: Int = DupIterations,
       pairGen: (SparkSession, String, Double) => DataFrame = MinhashLshGen): DataFrame = {
     import spark.implicits._
     dedupLabels(spark, d, threshold, iterations, pairGen)
@@ -557,11 +562,11 @@ object Dedup {
     * |labels|-row aggregate per superstep (the pageRankConverged shape).
     */
   def dedupLabelsConverged(spark: SparkSession, d: String,
-      threshold: Double = 0.5, maxIterations: Int = 50,
+      threshold: Double = DupThreshold, maxIterations: Int = 50,
       pairGen: (SparkSession, String, Double) => DataFrame = MinhashLshGen): DataFrame =
-    // memo-shared like dedupLabels (and only under the shared default
-    // generator — same closure-identity rule): q86's cluster counting
-    // and q132's leakage-safe split ride ONE converged propagation
+    // memoized like dedupLabels, and only under the shared default
+    // generator (same closure-identity rule); not a declared build: q86
+    // is its one catalog consumer (q132's split reads the star labels)
     if (pairGen eq MinhashLshGen)
       graft.core.Memo(spark, cache = false, "dedupLabelsConverged", d,
         threshold.toString, maxIterations.toString, "minhashLsh") {
@@ -594,7 +599,7 @@ object Dedup {
     * (this corpus, by construction) the two agree exactly.
     */
   def dedupClustersConverged(spark: SparkSession, d: String,
-      threshold: Double = 0.5, maxIterations: Int = 50,
+      threshold: Double = DupThreshold, maxIterations: Int = 50,
       pairGen: (SparkSession, String, Double) => DataFrame = MinhashLshGen): DataFrame = {
     import spark.implicits._
     dedupLabelsConverged(spark, d, threshold, maxIterations, pairGen)
@@ -614,14 +619,16 @@ object Dedup {
     * leakage-safe split ride ONE star fixpoint.
     */
   def dedupLabelsStar(spark: SparkSession, d: String,
-      threshold: Double = 0.5,
+      threshold: Double = DupThreshold,
       pairGen: (SparkSession, String, Double) => DataFrame = MinhashLshGen): DataFrame =
-    if (pairGen eq MinhashLshGen)
-      graft.core.Memo(spark, cache = false, "dedupLabelsStar", d,
-        threshold.toString, "minhashLsh") {
-        dedupLabelsStarUncached(spark, d, threshold, pairGen)
-      }
+    if (pairGen eq MinhashLshGen) dedupLabelsStarBuild(spark, d, threshold)
     else dedupLabelsStarUncached(spark, d, threshold, pairGen)
+
+  private val dedupLabelsStarBuild = shared("dedupLabelsStar", cache = false,
+      DupThreshold, (t: Double) => Seq(t.toString, "minhashLsh")) {
+    (spark, d, threshold) =>
+      dedupLabelsStarUncached(spark, d, threshold, MinhashLshGen)
+  }
 
   private def dedupLabelsStarUncached(spark: SparkSession, d: String,
       threshold: Double,
@@ -637,7 +644,7 @@ object Dedup {
     * in-JVM union-find on random graphs.
     */
   def dedupClustersStar(spark: SparkSession, d: String,
-      threshold: Double = 0.5,
+      threshold: Double = DupThreshold,
       pairGen: (SparkSession, String, Double) => DataFrame = MinhashLshGen): DataFrame = {
     import spark.implicits._
     dedupLabelsStar(spark, d, threshold, pairGen)
@@ -708,7 +715,7 @@ object Dedup {
     * two doc_id projections; the report is a ≤ |sources| aggregate.
     */
   def evalContamination(spark: SparkSession, d: String,
-      threshold: Double = 0.5,
+      threshold: Double = DupThreshold,
       pairGen: (SparkSession, String, Double) => DataFrame = MinhashLshGen): DataFrame = {
     import spark.implicits._
     val docs = documents(spark, d)
@@ -765,7 +772,7 @@ object Dedup {
     * by doc_id, token mass is the memo-shared q57 BPE column convention.
     */
   def decontaminatedManifest(spark: SparkSession, d: String,
-      threshold: Double = 0.5,
+      threshold: Double = DupThreshold,
       pairGen: (SparkSession, String, Double) => DataFrame = MinhashLshGen): DataFrame = {
     import spark.implicits._
     import graft.functions.TextFunctions.{tokens, tokenSum, bpePieces}
@@ -826,12 +833,11 @@ object Dedup {
   /** (doc_id, sk) 64-bit SimHash sketches, memo-cached (the cache is a
     * collapse barrier, as in minhashLsh).
     */
-  private[graft] def simhashSketch(spark: SparkSession, d: String): DataFrame =
-    graft.core.Memo(spark, cache = true, "simhashSketch", d) {
-      import spark.implicits._
-      documents(spark, d)
-        .select($"doc_id", simhash(cleanTokens($"text")).as("sk"))
-    }
+  private[graft] val simhashSketch = shared("simhashSketch", cache = true) { (spark, d) =>
+    import spark.implicits._
+    documents(spark, d)
+      .select($"doc_id", simhash(cleanTokens($"text")).as("sk"))
+  }
 
   /** q238: SimHash bit-bias audit — per bit position of the 64-bit
     * sketch, the fraction of documents with that bit set and its
@@ -864,25 +870,24 @@ object Dedup {
           * lit(1000000.0)).cast("long").as("bias_q6"))
   }
 
-  def simhashPairs(spark: SparkSession, d: String, maxHamming: Int = 3): DataFrame =
-    // memo-cached (r17): q23 emits it and q175's eval re-reads it as the
-    // prediction side — the banded self-join + distinct ran per consumer
-    graft.core.Memo(spark, cache = true, "simhashPairs", d, maxHamming.toString) {
-      import spark.implicits._
-      val sk = simhashSketch(spark, d)
-      val bands = sk.select($"doc_id", $"sk", explode(hammingBands($"sk")).as("hb"))
-        .select($"doc_id", $"sk", $"hb.band".as("band"), $"hb.key".as("key"))
-      bands.as("a").join(bands.as("b"),
-          $"a.band" === $"b.band" && $"a.key" === $"b.key" && $"a.doc_id" < $"b.doc_id")
-        .select($"a.doc_id".as("x"), $"b.doc_id".as("y"),
-          hamming($"a.sk", $"b.sk").as("dist"))
-        // filter BEFORE distinct (r17, guide §2.3): dist is a pure
-        // function of the pair, so the two commute — but most banded
-        // collisions fail the Hamming cut, and dropping them map-side
-        // shrinks the distinct's exchange to the admitted pairs
-        .filter($"dist" <= maxHamming)
-        .distinct()
-    }
+  // memo-cached (r17): q23 emits it and q175's eval re-reads it as the
+  // prediction side — the banded self-join + distinct ran per consumer
+  val simhashPairs = shared("simhashPairs", cache = true, 3) { (spark, d, maxHamming) =>
+    import spark.implicits._
+    val sk = simhashSketch(spark, d)
+    val bands = sk.select($"doc_id", $"sk", explode(hammingBands($"sk")).as("hb"))
+      .select($"doc_id", $"sk", $"hb.band".as("band"), $"hb.key".as("key"))
+    bands.as("a").join(bands.as("b"),
+        $"a.band" === $"b.band" && $"a.key" === $"b.key" && $"a.doc_id" < $"b.doc_id")
+      .select($"a.doc_id".as("x"), $"b.doc_id".as("y"),
+        hamming($"a.sk", $"b.sk").as("dist"))
+      // filter BEFORE distinct (r17, guide §2.3): dist is a pure
+      // function of the pair, so the two commute — but most banded
+      // collisions fail the Hamming cut, and dropping them map-side
+      // shrinks the distinct's exchange to the admitted pairs
+      .filter($"dist" <= maxHamming)
+      .distinct()
+  }
 
   /** Exact-substring duplication coverage (the token-span form of
     * suffix-array dedup — Lee et al. 2022, "Deduplicating Training Data
@@ -915,7 +920,7 @@ object Dedup {
     * from the same documents scan.
     */
   def incrementalDedup(spark: SparkSession, d: String,
-      threshold: Double = 0.5, newPct: Int = 10): DataFrame = {
+      threshold: Double = DupThreshold, newPct: Int = 10): DataFrame = {
     import spark.implicits._
     val b = documents(spark, d).select($"doc_id", $"text",
       pmod(graft.functions.Hashing.md5Bits32(
@@ -1147,18 +1152,13 @@ object Dedup {
     * token side is one scan-stage size() projection; the report is one
     * |sources|-row aggregate.
     */
-  def effectiveTokens(spark: SparkSession, d: String): DataFrame =
-    // memo-cached (r18): the output is one row per SOURCE (~20 rows),
-    // but each uncached evaluation re-tokenizes the corpus for the
-    // ntok sum and re-runs the canonical pick — and q195's epoch plan
-    // inlines this lineage 3–4× in one query tree (eff → tot / w → sw
-    // → final each re-derive it). The memo makes that one corpus pass
-    // per session instead of four per q195 run plus one for q176.
-    graft.core.Memo(spark, cache = true, "effectiveTokens", d) {
-      effectiveTokensUncached(spark, d)
-    }
-
-  private def effectiveTokensUncached(spark: SparkSession, d: String): DataFrame = {
+  // memo-cached (r18): the output is one row per SOURCE (~20 rows),
+  // but each uncached evaluation re-tokenizes the corpus for the
+  // ntok sum and re-runs the canonical pick — and q195's epoch plan
+  // inlines this lineage 3–4× in one query tree (eff → tot / w → sw
+  // → final each re-derive it). The memo makes that one corpus pass
+  // per session instead of four per q195 run plus one for q176.
+  val effectiveTokens = shared("effectiveTokens", cache = true) { (spark, d) =>
     import spark.implicits._
     val canon = canonicalDocs(spark, d)
       .select($"canonical_doc".as("doc_id"), lit(1L).as("is_canon"))
@@ -1245,7 +1245,7 @@ object Dedup {
     * identical in both engines — the HLL rank trick).
     */
   def clusterSpectrum(spark: SparkSession, d: String,
-      threshold: Double = 0.5): DataFrame = {
+      threshold: Double = DupThreshold): DataFrame = {
     import spark.implicits._
     dedupLabelsStar(spark, d, threshold)
       .groupBy($"label").agg(count(lit(1)).as("sz"))

@@ -33,7 +33,7 @@ import graft.core.Tables._
   * quantized to 1e-14-scaled longs so ranks stay bit-identical across
   * engines/partitionings (they feed a hash-compare; Σ ≤ N·1e14 ≪ 2^53).
   */
-object Graph {
+object Graph extends graft.core.Memo.Owner {
 
   /** Edges (src, dst, w): nation-to-nation trade intensity. The 4-way
     * fact join shuffles on o_custkey/l_orderkey; customer and supplier
@@ -370,9 +370,8 @@ object Graph {
     * the pair aggregate is one shuffle with map-side combine. This is
     * the standard market-basket projection plan.
     */
-  private[graft] def copurchaseEdges(spark: SparkSession, d: String,
-      minCount: Int = 2): DataFrame =
-    graft.core.Memo(spark, cache = true, "copurchaseEdges", d, minCount.toString) {
+  private[graft] val copurchaseEdges =
+    shared("copurchaseEdges", cache = true, 2) { (spark, d, minCount) =>
       import spark.implicits._
       // one ORDER-grouped basket pass instead of the distinct+self-join
       // (r17, guide §3.4/§2.3): collect_set folds the distinct into the
@@ -787,7 +786,8 @@ object Graph {
     * map-side combinable, state ∝ |edges|; `localCheckpoint` per sweep
     * truncates loop lineage (the PageRank/k-core discipline).
     */
-  def labelPropagation(spark: SparkSession, d: String, rounds: Int = 4): DataFrame = {
+  def labelPropagation(spark: SparkSession, d: String,
+      rounds: Int = lpTrajectory.warm): DataFrame = {
     import spark.implicits._
     lpTrajectory(spark, d, rounds).filter($"round" === rounds)
       .select($"v".as("partkey"), $"lbl".as("community"))
@@ -799,9 +799,8 @@ object Graph {
     * modularity reads the same labels, q220's churn curve diffs
     * consecutive rounds. (rounds+1)·|V| cached rows.
     */
-  private[graft] def lpTrajectory(spark: SparkSession, d: String,
-      rounds: Int = 4): DataFrame =
-    graft.core.Memo(spark, cache = true, "lpTrajectory", d, rounds.toString) {
+  private[graft] val lpTrajectory =
+    shared("lpTrajectory", cache = true, 4) { (spark, d, rounds) =>
       import spark.implicits._
       lpSweeps(spark, copurchaseEdges(spark, d).select($"p1", $"p2"), rounds)
     }
@@ -851,7 +850,8 @@ object Graph {
     * with one vertex-keyed self-join, and aggregates to `rounds` rows
     * — no extra loop, nothing driver-side but the vertex count.
     */
-  def labelPropChurn(spark: SparkSession, d: String, rounds: Int = 4): DataFrame = {
+  def labelPropChurn(spark: SparkSession, d: String,
+      rounds: Int = lpTrajectory.warm): DataFrame = {
     import spark.implicits._
     val tr = lpTrajectory(spark, d, rounds)
     val nV = tr.filter($"round" === 0L).count()

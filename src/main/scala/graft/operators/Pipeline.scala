@@ -28,7 +28,7 @@ import graft.functions.TextFunctions._
 object Pipeline {
 
   def curateCorpus(spark: SparkSession, d: String,
-      minTokens: Int = 30, jaccardThreshold: Double = 0.5,
+      minTokens: Int = 30, jaccardThreshold: Double = Dedup.DupThreshold,
       pairGen: (SparkSession, String, Double) => DataFrame = Dedup.MinhashLshGen): DataFrame = {
     import spark.implicits._
     val docs = documents(spark, d)

@@ -15,7 +15,7 @@ import graft.functions.{Hashing, TextFunctions}
   * Text.scala:39) from per-document term scoring to full query→document
   * ranked retrieval.
   */
-object Retrieval {
+object Retrieval extends graft.core.Memo.Owner {
 
   /** q116: BM25 top-k retrieval. The q59 "eval:" hash split (5 % of
     * docs) stands in for the query workload; each eval document's
@@ -40,7 +40,7 @@ object Retrieval {
     * partitions by query_id so the sort is per-group, not global.
     */
   def bm25TopK(spark: SparkSession, d: String, k: Int = 10,
-      maxDf: Option[Long] = None): DataFrame = {
+      maxDf: Option[Long] = bm25Ranked.warm): DataFrame = {
     import spark.implicits._
     if (k <= sharedTopK)
       bm25Ranked(spark, d, maxDf).filter($"rank" <= k)
@@ -79,22 +79,6 @@ object Retrieval {
     * (the cut preserves the (score DESC, doc_id) prefix per query).
     */
   private val sharedTopK = 20
-
-  private def bm25Ranked(spark: SparkSession, d: String,
-      maxDf: Option[Long]): DataFrame =
-    graft.core.Memo(spark, cache = true, "bm25ranked", d,
-      maxDf.map(_.toString).getOrElse("none")) {
-      import spark.implicits._
-      // per-query top-20 as the native bounded-heap aggregate (round 12):
-      // partial heaps fold the doc_id-partitioned score rows map-side, so
-      // the one query shuffle carries ≤ |partitions|·|queries|·20 rows and
-      // nothing is ever sorted (the window form sorted every query group)
-      Ranks.groupTopK(
-          bm25Aggregate(spark, bm25Candidates(spark, d, maxDf)),
-          sharedTopK, "rk",
-          Seq($"query_id"), struct((-$"score_q").as("__ns"), $"doc_id", $"score_q"))
-        .select($"query_id", $"doc_id", $"rk".cast("long").as("rank"), $"score_q")
-    }
 
   /** Exact integer document scores from the candidate stream — one hash
     * aggregate on (query, doc).
@@ -145,6 +129,23 @@ object Retrieval {
       .select($"query_id", $"t", $"doc_id", $"sq")
   }
 
+  /** The train-split postings table (doc, term, tf) — memo-cached: it
+    * feeds FIVE consumers (dl, df, the N/Σdl stats action, the score
+    * join, the ceiling's N count) so the tokenize+count pass runs once
+    * per session, not once per consumer.
+    */
+  private[graft] val bm25Tf = shared("bm25tf", cache = true) { (spark, d) =>
+    import spark.implicits._
+    val isEval =
+      pmod(Hashing.md5Bits32(concat(lit("eval:"), $"doc_id".cast("string")), 1),
+        lit(100L)) < 5
+    documents(spark, d)
+      .select($"doc_id", isEval.as("ev"),
+        explode(TextFunctions.cleanTokens($"text")).as("t"))
+      .filter(!$"ev")
+      .groupBy($"doc_id", $"t").agg(count(lit(1)).as("tf"))
+  }
+
   /** Per-posting BM25 weights (t, doc_id, sq), memo-cached AND
     * pre-partitioned by doc_id:
     *  - the cache pins the one evaluation of the double weight chain per
@@ -162,47 +163,43 @@ object Retrieval {
     * forms share one table (and Bench's warm phase materializes it once,
     * attribution-stable).
     */
-  private[graft] def bm25Weights(spark: SparkSession, d: String): DataFrame = {
+  private[graft] val bm25Weights = shared("bm25wtd", cache = true) { (spark, d) =>
     import spark.implicits._
     val tf = bm25Tf(spark, d)
     val dl = tf.groupBy($"doc_id").agg(sum($"tf").as("dl"))
     val dfT = tf.groupBy($"t").agg(count(lit(1)).as("df"))
-    // the by-name memo body runs only on miss, so the corpus-constant
-    // collect (the q07 eager-scalar shape) is paid once per session
-    graft.core.Memo(spark, cache = true, "bm25wtd", d) {
-      val statsRow = dl.agg(count(lit(1)), sum($"dl")).head()
-      val n = statsRow.getLong(0)
-      // empty corpus → SUM is NULL; 1 is inert (zero postings score)
-      val sumdl = graft.core.Scalars.longAt(statsRow, 1, 1L)
-      tf.join(dfT, "t").join(dl, "doc_id")
-        .repartition(col("doc_id"))
-        .select($"t", $"doc_id",
-          round(
-            log2(((lit(n) - $"df" + lit(0.5)) / ($"df" + lit(0.5))) + lit(1.0))
-              * ($"tf" * lit(2.2))
-              / ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75)
-                  * (($"dl" * lit(n)).cast("double") / lit(sumdl).cast("double"))))
-              * lit(1000000.0)).cast("long").as("sq"))
-    }
+    // the corpus-constant collect (the q07 eager-scalar shape) runs in
+    // the build, so it is paid once per session
+    val statsRow = dl.agg(count(lit(1)), sum($"dl")).head()
+    val n = statsRow.getLong(0)
+    // empty corpus → SUM is NULL; 1 is inert (zero postings score)
+    val sumdl = graft.core.Scalars.longAt(statsRow, 1, 1L)
+    tf.join(dfT, "t").join(dl, "doc_id")
+      .repartition(col("doc_id"))
+      .select($"t", $"doc_id",
+        round(
+          log2(((lit(n) - $"df" + lit(0.5)) / ($"df" + lit(0.5))) + lit(1.0))
+            * ($"tf" * lit(2.2))
+            / ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75)
+                * (($"dl" * lit(n)).cast("double") / lit(sumdl).cast("double"))))
+            * lit(1000000.0)).cast("long").as("sq"))
   }
 
-  /** The train-split postings table (doc, term, tf) — memo-cached: it
-    * feeds FIVE consumers (dl, df, the N/Σdl stats action, the score
-    * join, the ceiling's N count) so the tokenize+count pass runs once
-    * per session, not once per consumer.
-    */
-  private[graft] def bm25Tf(spark: SparkSession, d: String): DataFrame =
-    graft.core.Memo(spark, cache = true, "bm25tf", d) {
-      import spark.implicits._
-      val isEval =
-        pmod(Hashing.md5Bits32(concat(lit("eval:"), $"doc_id".cast("string")), 1),
-          lit(100L)) < 5
-      documents(spark, d)
-        .select($"doc_id", isEval.as("ev"),
-          explode(TextFunctions.cleanTokens($"text")).as("t"))
-        .filter(!$"ev")
-        .groupBy($"doc_id", $"t").agg(count(lit(1)).as("tf"))
-    }
+  // warmed unceilinged (q116, q125, q237, q248, q255); q182's ceilinged
+  // form keys on a ceiling its own count derives, so only it builds that
+  private val bm25Ranked = shared[Option[Long]]("bm25ranked", cache = true,
+      None, m => Seq(m.fold("none")(_.toString))) { (spark, d, maxDf) =>
+    import spark.implicits._
+    // per-query top-20 as the native bounded-heap aggregate (round 12):
+    // partial heaps fold the doc_id-partitioned score rows map-side, so
+    // the one query shuffle carries ≤ |partitions|·|queries|·20 rows and
+    // nothing is ever sorted (the window form sorted every query group)
+    Ranks.groupTopK(
+        bm25Aggregate(spark, bm25Candidates(spark, d, maxDf)),
+        sharedTopK, "rk",
+        Seq($"query_id"), struct((-$"score_q").as("__ns"), $"doc_id", $"score_q"))
+      .select($"query_id", $"doc_id", $"rk".cast("long").as("rank"), $"score_q")
+  }
 
   /** The eval-split flag on the embedding corpus — vec_id ≡ doc_id, so
     * the same "eval:" md5 bucket that carves BM25's query workload
@@ -251,7 +248,8 @@ object Retrieval {
   }
 
   private def denseIvf(spark: SparkSession, d: String, kSys: Int,
-      nLists: Int = 8, nProbe: Int = 4, updates: Int = 2,
+      nLists: Int = Similarity.IvfLists, nProbe: Int = 4,
+      updates: Int = Similarity.IvfUpdates,
       tables: Int = 1): DataFrame = {
     import spark.implicits._
     import graft.functions.VectorFunctions._

@@ -22,7 +22,7 @@ import graft.functions.Hashing
   * re-materialized incrementally and membership must not drift. No
   * rand(); rand() is partition-order-dependent in any engine.
   */
-object Sampling {
+object Sampling extends graft.core.Memo.Owner {
 
   /** 0..99 bucket from the md5 of the decimal doc id — the shared
     * primitive of split/sample. A salt string keeps independent uses
@@ -227,10 +227,17 @@ object Sampling {
     * CurationOpsSpec asserts full equality), so the DuckDB oracle is
     * unchanged.
     */
-  def packSequences(spark: SparkSession, d: String, budget: Int = 2048): DataFrame =
-    // shared lineage: q57 emits this table, q75 joins text back onto it —
-    // the BPE token-count scan (the expensive part) runs once per session
-    graft.core.Memo(spark, cache = true, "packSequences", d, budget.toString) {
+  def packSequences(spark: SparkSession, d: String,
+      budget: Int = PackBudget): DataFrame =
+    packSequencesBuild(spark, d, budget)
+
+  /** The context-window size the packing entry points default to. */
+  final val PackBudget = 2048
+
+  // shared lineage: q57 emits this table, q75 joins text back onto it —
+  // the BPE token-count scan (the expensive part) runs once per session
+  private val packSequencesBuild =
+    shared("packSequences", cache = true, PackBudget) { (spark, d, budget) =>
       import spark.implicits._
       import graft.functions.TextFunctions.{tokens, tokenSum, bpePieces}
       val tk = documents(spark, d)
@@ -251,7 +258,7 @@ object Sampling {
     * point at corpus scale).
     */
   private[graft] def packSequencesGlobalWindow(spark: SparkSession,
-      d: String, budget: Int = 2048): DataFrame = {
+      d: String, budget: Int = PackBudget): DataFrame = {
     import spark.implicits._
     import graft.functions.TextFunctions.{tokens, tokenSum, bpePieces}
     val w = Window.partitionBy($"source").orderBy($"doc_id")
@@ -336,7 +343,7 @@ object Sampling {
     * joined twice on doc_id; the final aggregate is ≤ 6 rows.
     */
   def splitLeakage(spark: SparkSession, d: String,
-      threshold: Double = 0.5,
+      threshold: Double = Dedup.DupThreshold,
       pairGen: (SparkSession, String, Double) => DataFrame = Dedup.MinhashLshGen): DataFrame = {
     import spark.implicits._
     val sp = hashSplit(spark, d).select($"doc_id", $"split")

@@ -26,24 +26,23 @@ import graft.plans.LexExtreme.{lexMax, lexMin}
   * cached; the per-pair work in the quadratic joins is pure long
   * multiply-add.
   */
-object Similarity {
+object Similarity extends graft.core.Memo.Owner {
 
   /** (vec_id, embedding, qemb = quantized longs, n2 = exact squared norm),
     * cached: every similarity operator joins against this twice.
     */
-  private[graft] def corpusWithNorm(spark: SparkSession, d: String): DataFrame =
-    graft.core.Memo(spark, cache = true, "corpusWithNorm", d) {
-      import spark.implicits._
-      // a NULL embedding is not a vector: admitting it would seed
-      // lloydCentroids with null Seqs and NULL every derived qemb/n2
-      // (the nulled-fixture DegenSweep class) — every vector op
-      // correctly never sees the row; audits that count raw rows read
-      // the embeddings table directly, not this projection
-      embeddings(spark, d)
-        .filter($"embedding".isNotNull)
-        .select($"vec_id", $"embedding", quantize($"embedding").as("qemb"))
-        .withColumn("n2", dotPreQ($"qemb", $"qemb"))
-    }
+  private[graft] val corpusWithNorm = shared("corpusWithNorm", cache = true) { (spark, d) =>
+    import spark.implicits._
+    // a NULL embedding is not a vector: admitting it would seed
+    // lloydCentroids with null Seqs and NULL every derived qemb/n2
+    // (the nulled-fixture DegenSweep class) — every vector op
+    // correctly never sees the row; audits that count raw rows read
+    // the embeddings table directly, not this projection
+    embeddings(spark, d)
+      .filter($"embedding".isNotNull)
+      .select($"vec_id", $"embedding", quantize($"embedding").as("qemb"))
+      .withColumn("n2", dotPreQ($"qemb", $"qemb"))
+  }
 
   /** Exact cosine top-k (k=5) for queries vec_id < 10 against the whole
     * corpus. The query side is broadcast; the corpus is scanned once
@@ -205,8 +204,8 @@ object Similarity {
     * the exact pair set is asserted in DedupSimilaritySpec.
     */
   def embeddingNearDupIvf(spark: SparkSession, d: String,
-      threshold: Double = 0.4, nLists: Int = 8, nProbe: Int = 4,
-      updates: Int = 2, tables: Int = 1, firstTable: Int = 0): DataFrame = {
+      threshold: Double = 0.4, nLists: Int = IvfLists, nProbe: Int = 4,
+      updates: Int = IvfUpdates, tables: Int = 1, firstTable: Int = 0): DataFrame = {
     import spark.implicits._
     val c = corpusWithNorm(spark, d)
     // one candidate stream per coarse quantizer; `tables` > 1 unions
@@ -291,7 +290,7 @@ object Similarity {
     */
   def semanticDedupScaled(spark: SparkSession, d: String,
       threshold: Double = 0.4, targetCell: Int = 256, nProbe: Int = 4,
-      updates: Int = 2): DataFrame = {
+      updates: Int = IvfUpdates): DataFrame = {
     val n = corpusWithNorm(spark, d).count()
     val nLists = math.max(8L, n / targetCell).toInt
     semanticDedup(spark, d, threshold,
@@ -397,14 +396,13 @@ object Similarity {
     * at every dim because vectors share one dimensionality — the q141
     * embeddingAudit ingest contract.
     */
-  private[graft] def labelDimSums(spark: SparkSession, d: String): DataFrame =
-    graft.core.Memo(spark, cache = true, "labelDimSums", d) {
-      import spark.implicits._
-      embeddings(spark, d)
-        .select($"label", posexplode(quantize($"embedding")).as(Seq("i", "v")))
-        .groupBy($"label", $"i")
-        .agg(sum($"v").as("s"), count(lit(1)).as("cnt"))
-    }
+  private[graft] val labelDimSums = shared("labelDimSums", cache = true) { (spark, d) =>
+    import spark.implicits._
+    embeddings(spark, d)
+      .select($"label", posexplode(quantize($"embedding")).as(Seq("i", "v")))
+      .groupBy($"label", $"i")
+      .agg(sum($"v").as("s"), count(lit(1)).as("cnt"))
+  }
 
   def labelCentroids(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
@@ -435,7 +433,7 @@ object Similarity {
     * aggregation per round.
     */
   def kmeansAssign(spark: SparkSession, d: String,
-      k: Int = 8, iters: Int = 3): DataFrame = {
+      k: Int = IvfLists, iters: Int = IvfUpdates + 1): DataFrame = {
     import spark.implicits._
     val cents = lloydCentroids(spark, d, k, iters - 1)
     assignTo(corpusWithNorm(spark, d), cents)
@@ -613,8 +611,8 @@ object Similarity {
     * (centroids are a k·dims literal); the audit is a ≤ nLists
     * aggregate + 1-row broadcast.
     */
-  def ivfBalance(spark: SparkSession, d: String, nLists: Int = 8,
-      updates: Int = 2): DataFrame = {
+  def ivfBalance(spark: SparkSession, d: String, nLists: Int = IvfLists,
+      updates: Int = IvfUpdates): DataFrame = {
     import spark.implicits._
     val cents = lloydCentroids(spark, d, nLists, updates)
     val pl = corpusWithNorm(spark, d)
@@ -655,7 +653,7 @@ object Similarity {
     * truth), bounded by |queries| · corpus.
     */
   def ivfProbeSweep(spark: SparkSession, d: String, k: Int = 10,
-      nLists: Int = 8, updates: Int = 2,
+      nLists: Int = IvfLists, updates: Int = IvfUpdates,
       probes: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
     import spark.implicits._
     val cents = lloydCentroids(spark, d, nLists, updates)
@@ -733,18 +731,25 @@ object Similarity {
     * pairs, and 2-update Lloyd keeps most of its init's diversity).
     */
   private[graft] def lloydCentroids(spark: SparkSession, d: String,
-      k: Int, updates: Int, table: Int = 0): Array[(Long, Seq[Long])] = {
-    import spark.implicits._
-    // table 0 keeps the historical memo key so committed sweeps and
-    // warmed sessions keep hitting it
-    val keyParts = Seq(d, k.toString, updates.toString) ++
-      (if (table > 0) Seq(s"t$table") else Nil)
-    val tbl = graft.core.Memo(spark, cache = false,
-        ("lloydCentroids" +: keyParts): _*) {
-      lloydCentroidsUncached(spark, d, k, updates, table).toSeq.toDF("cid", "cq")
-    }
-    graft.core.Bounded.collect(tbl, k.toLong, "lloydCentroids memo (k rows)")
+      k: Int, updates: Int, table: Int = 0): Array[(Long, Seq[Long])] =
+    graft.core.Bounded.collect(lloydTable(spark, d, (k, updates, table)),
+        k.toLong, "lloydCentroids memo (k rows)")
       .map(r => (r.getLong(0), r.getSeq[Long](1)))
+
+  /** The IVF coarse quantizer every IVF and k-means entry point defaults
+    * to (lists, Lloyd updates): the centroid table the builds warm.
+    */
+  final val IvfLists = 8
+  final val IvfUpdates = 2
+
+  // (cid, cq) per (k, updates, table); table 0 keeps the historical memo
+  // key so committed sweeps and warmed sessions keep hitting it
+  private val lloydTable = shared("lloydCentroids", cache = false,
+      (IvfLists, IvfUpdates, 0), (p: (Int, Int, Int)) =>
+        Seq(p._1.toString, p._2.toString) ++ (if (p._3 > 0) Seq(s"t${p._3}") else Nil)) {
+    case (spark, d, (k, updates, table)) =>
+      import spark.implicits._
+      lloydCentroidsUncached(spark, d, k, updates, table).toSeq.toDF("cid", "cq")
   }
 
   private def lloydCentroidsUncached(spark: SparkSession, d: String,
@@ -822,7 +827,7 @@ object Similarity {
     * the DuckDB oracle.
     */
   def annIvfKmeans(spark: SparkSession, d: String, k: Int = 5,
-      nLists: Int = 8, nProbe: Int = 3, updates: Int = 2): DataFrame = {
+      nLists: Int = IvfLists, nProbe: Int = 3, updates: Int = IvfUpdates): DataFrame = {
     import spark.implicits._
     val cents = lloydCentroids(spark, d, nLists, updates)
     val c = corpusWithNorm(spark, d)
@@ -870,7 +875,7 @@ object Similarity {
     * the shuffle — the PQ memory win is exactly a shuffle-width win.
     */
   def annIvfPq(spark: SparkSession, d: String, k: Int = 5,
-      nLists: Int = 8, nProbe: Int = 3, updates: Int = 2,
+      nLists: Int = IvfLists, nProbe: Int = 3, updates: Int = IvfUpdates,
       m: Int = 16, ks: Int = 16, pqUpdates: Int = 1): DataFrame = {
     import spark.implicits._
     val c = corpusWithNorm(spark, d)
@@ -885,7 +890,8 @@ object Similarity {
     val ranked = c.select($"vec_id", $"qemb", $"n2",
       array_sort(centOptsArray(cents)).as("ds"))
     // memo-cached (released with the session): the training collects, the
-    // encode and the candidate probe all fold over this one lineage
+    // encode and the candidate probe all fold over this one lineage. Not
+    // a declared build: q91 is its one catalog consumer
     val assigned = graft.core.Memo(spark, cache = true,
         "ivfPqAssigned", d, nLists.toString, updates.toString) {
       ranked.select($"vec_id", $"qemb", $"n2",
@@ -1027,7 +1033,8 @@ object Similarity {
     // memoized + cached (released with the session): `epochs` margin
     // scans plus the final confusion pass all ride one materialization —
     // a cache()/unpersist() pair here would drop the blocks before the
-    // RETURNED plan executes and force an uncached final pass
+    // RETURNED plan executes and force an uncached final pass. Not a
+    // declared build: q98 is its one catalog consumer
     val ex = graft.core.Memo(spark, cache = true,
         "probeBase", d, targetLabel.toString) {
       // null embeddings are not trainable examples (corpusWithNorm's
@@ -1149,6 +1156,8 @@ object Similarity {
     */
   def powerIteration(spark: SparkSession, d: String, iters: Int = 4): DataFrame = {
     import spark.implicits._
+    // memo-cached: every superstep folds this one quantized corpus. Not a
+    // declared build: q119 is its one catalog consumer
     val ex = graft.core.Memo(spark, cache = true, "powerBase", d) {
       // null embeddings are not vectors (corpusWithNorm's contract)
       embeddings(spark, d).filter($"embedding".isNotNull)
@@ -1282,17 +1291,9 @@ object Similarity {
     * shuffle, on a key with labels-many partitions — at real skew the
     * rank threshold would come from an approx quantile of ccos instead.
     */
-  def centroidOutliers(spark: SparkSession, d: String,
-      frac: Double = 0.05): DataFrame =
-    // memo-shared: q66 and q78's cross-modal fusion both consume this
-    // (centroid build + group rank run once per session)
-    graft.core.Memo(spark, cache = true, "centroidOutliers", d,
-        frac.toString) {
-      centroidOutliersUncached(spark, d, frac)
-    }
-
-  private def centroidOutliersUncached(spark: SparkSession, d: String,
-      frac: Double): DataFrame = {
+  // memo-shared: q66 and q78's cross-modal fusion both consume this
+  // (centroid build + group rank run once per session)
+  val centroidOutliers = shared("centroidOutliers", cache = true, 0.05) { (spark, d, frac) =>
     import spark.implicits._
     val cent = embeddings(spark, d)
       .select($"label", posexplode(quantize($"embedding")).as(Seq("i", "q")))
@@ -1432,7 +1433,7 @@ object Similarity {
     * included) is mirrored by the q155 DuckDB oracle.
     */
   def hardNegatives(spark: SparkSession, d: String, k: Int = 5,
-      nLists: Int = 8, nProbe: Int = 4, updates: Int = 2,
+      nLists: Int = IvfLists, nProbe: Int = 4, updates: Int = IvfUpdates,
       tables: Int = 1): DataFrame = {
     import spark.implicits._
     // one candidate stream per coarse quantizer (`tables` > 1 = the
@@ -1484,7 +1485,7 @@ object Similarity {
     * form (spec law).
     */
   def hardNegativesScaled(spark: SparkSession, d: String, k: Int = 5,
-      targetCell: Int = 256, nProbe: Int = 4, updates: Int = 2): DataFrame = {
+      targetCell: Int = 256, nProbe: Int = 4, updates: Int = IvfUpdates): DataFrame = {
     val n = corpusWithNorm(spark, d).count()
     val nLists = math.max(8L, n / targetCell).toInt
     hardNegatives(spark, d, k, nLists, nProbe, updates,
@@ -1876,7 +1877,7 @@ object Similarity {
     * MLlib-collect shape, Bounded-guarded upstream).
     */
   def daviesBouldin(spark: SparkSession, d: String,
-      k: Int = 8, iters: Int = 3): DataFrame = {
+      k: Int = IvfLists, iters: Int = IvfUpdates + 1): DataFrame = {
     import spark.implicits._
     val sc = kmeansAssign(spark, d, k, iters)
       .select($"cluster", round(sqrt($"dist2".cast("double")))

@@ -20,28 +20,26 @@ import graft.functions.TextFunctions._
   * relative to the corpus, so DF-side joins are broadcast — the TF side
   * (the big one) never moves twice.
   */
-object Text {
+object Text extends graft.core.Memo.Owner {
 
   /** Tokenized view shared by the operators: (doc_id, ws[]), memo-cached
     * once per session+dir (tfIdf runs two actions over it).
     */
-  private[graft] def tokenized(spark: SparkSession, d: String): DataFrame =
-    graft.core.Memo(spark, cache = true, "cleanTokenized", d) {
-      import spark.implicits._
-      documents(spark, d).select($"doc_id", cleanTokens($"text").as("ws"))
-    }
+  private[graft] val tokenized = shared("cleanTokenized", cache = true) { (spark, d) =>
+    import spark.implicits._
+    documents(spark, d).select($"doc_id", cleanTokens($"text").as("ws"))
+  }
 
   /** (w, c) corpus vocabulary counts — memo-cached: surprisal,
     * rankedVocab, interpSurprisal and dsirWeights all fold over this
     * one tokenize+count pass (vocab-sized, so the cache is corpus-
     * sublinear).
     */
-  private[graft] def vocabCounts(spark: SparkSession, d: String): DataFrame =
-    graft.core.Memo(spark, cache = true, "vocabCounts", d) {
-      import spark.implicits._
-      documents(spark, d).select($"doc_id", explode(tokens($"text")).as("w"))
-        .groupBy($"w").agg(count(lit(1)).as("c"))
-    }
+  private[graft] val vocabCounts = shared("vocabCounts", cache = true) { (spark, d) =>
+    import spark.implicits._
+    documents(spark, d).select($"doc_id", explode(tokens($"text")).as("w"))
+      .groupBy($"w").agg(count(lit(1)).as("c"))
+  }
 
   /** TF-IDF with the reference's exact no-logarithm formula
     * tf * (N / df) (dataset_java/tf_idf/MailTFIDF.java:214-233; SURVEY
@@ -77,31 +75,30 @@ object Text {
     * 'und' when nothing matches. The marker table is a literal inline
     * relation — broadcast, never shuffled.
     */
-  def langId(spark: SparkSession, d: String): DataFrame =
-    // memo-cached (r17): q17 emits it and q186's confusion audit re-reads
-    // it — without the cache the token explode + marker join + argmax
-    // ran once per consumer
-    graft.core.Memo(spark, cache = true, "langId", d) {
-      import spark.implicits._
-      val markers = LangMarkers
-        .flatMap { case (lang, ws) => ws.map(w => (lang, w)) }
-        .toDF("mlang", "w")
-      val toks = documents(spark, d)
-        .select($"doc_id", explode(tokens($"text")).as("w"))
-      val scores = toks.join(broadcast(markers), "w")
-        .groupBy($"doc_id", $"mlang").agg(count(lit(1)).as("c"))
-      val best = scores
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy($"doc_id").orderBy($"c".desc, $"mlang".asc)))
-        .filter($"rn" === 1)
-        .select($"doc_id", $"mlang", $"c")
-      documents(spark, d).select($"doc_id")
-        .join(best, Seq("doc_id"), "left")
-        .select($"doc_id",
-          coalesce($"mlang", lit("und")).as("lang_pred"),
-          coalesce($"c", lit(0L)).as("n_markers"))
-    }
+  // memo-cached (r17): q17 emits it and q186's confusion audit re-reads
+  // it — without the cache the token explode + marker join + argmax
+  // ran once per consumer
+  val langId = shared("langId", cache = true) { (spark, d) =>
+    import spark.implicits._
+    val markers = LangMarkers
+      .flatMap { case (lang, ws) => ws.map(w => (lang, w)) }
+      .toDF("mlang", "w")
+    val toks = documents(spark, d)
+      .select($"doc_id", explode(tokens($"text")).as("w"))
+    val scores = toks.join(broadcast(markers), "w")
+      .groupBy($"doc_id", $"mlang").agg(count(lit(1)).as("c"))
+    val best = scores
+      .withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy($"doc_id").orderBy($"c".desc, $"mlang".asc)))
+      .filter($"rn" === 1)
+      .select($"doc_id", $"mlang", $"c")
+    documents(spark, d).select($"doc_id")
+      .join(best, Seq("doc_id"), "left")
+      .select($"doc_id",
+        coalesce($"mlang", lit("und")).as("lang_pred"),
+        coalesce($"c", lit(0L)).as("n_markers"))
+  }
 
   /** q186: language-ID confusion audit — q17's marker heuristic judged
     * against the corpus's labeled `lang`: per (label, predicted) doc
@@ -311,12 +308,10 @@ object Text {
     * gelly_java/PageRankWithEdgeWeights.java:103-104.
     */
   /** Memoized BPE training trajectory — q79 emits it, q94 (`bpeEncode`)
-    * applies it: one training loop per session feeds both.
+    * and q154 (`tokenizerFertility`) apply it: one training loop per
+    * session feeds all three.
     */
-  def bpeTrained(spark: SparkSession, d: String, nMerges: Int = 3): DataFrame =
-    graft.core.Memo(spark, cache = true, "bpeMerges", d, nMerges.toString) {
-      bpeTrain(spark, d, nMerges)
-    }
+  val bpeTrained = shared("bpeMerges", cache = true, 3)(bpeTrain)
 
   /** BPE ENCODE — apply the trained merge trajectory to segment every
     * eligible word ([a-z]{2,}, the training filter) of every document,
@@ -334,7 +329,8 @@ object Text {
     * merges, where the chain becomes a trie/loop inside one expression —
     * same plumbing, the per-merge-literal form is the small-n rung.
     */
-  def bpeEncode(spark: SparkSession, d: String, nMerges: Int = 3): DataFrame = {
+  def bpeEncode(spark: SparkSession, d: String,
+      nMerges: Int = bpeTrained.warm): DataFrame = {
     import spark.implicits._
     val merges = graft.core.Bounded.collect(
       bpeTrained(spark, d, nMerges).orderBy($"step"),
@@ -381,7 +377,8 @@ object Text {
     * only shuffle is the |languages|-row aggregate with map-side
     * combine.
     */
-  def tokenizerFertility(spark: SparkSession, d: String, nMerges: Int = 3): DataFrame = {
+  def tokenizerFertility(spark: SparkSession, d: String,
+      nMerges: Int = bpeTrained.warm): DataFrame = {
     import spark.implicits._
     val merges = graft.core.Bounded.collect(
       bpeTrained(spark, d, nMerges).orderBy($"step"),
@@ -408,7 +405,7 @@ object Text {
         ($"n_chars".cast("double") / $"n_pieces".cast("double")).as("chars_per_piece"))
   }
 
-  def bpeTrain(spark: SparkSession, d: String, nMerges: Int = 3): DataFrame = {
+  def bpeTrain(spark: SparkSession, d: String, nMerges: Int): DataFrame = {
     import spark.implicits._
     var words = documents(spark, d)
       .select(explode(tokens($"text")).as("w"))
@@ -554,12 +551,7 @@ object Text {
     */
   def rankedVocab(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val parted = graft.core.Memo(spark, cache = false, "vocabRanged", d) {
-      vocabCounts(spark, d)
-        .repartitionByRange(spark.sparkContext.defaultParallelism, $"c".desc, $"w".asc)
-        .withColumn("pid", spark_partition_id())
-        .cutLineage()
-    }
+    val parted = vocabRanged(spark, d)
     val offsets = Ranks.partitionOffsets(parted, "pid", None,
       spark.sparkContext.defaultParallelism,
       "rankedVocab partition offsets (|partitions| rows)")
@@ -569,6 +561,15 @@ object Text {
           .partitionBy($"pid").orderBy($"c".desc, $"w".asc)))
       .select($"w", $"c",
         ($"rn".cast("long") + element_at(typedLit(offsets), $"pid")).as("token_id"))
+  }
+
+  // shared by q72, q95 and q200 through rankedVocab
+  private val vocabRanged = shared("vocabRanged", cache = false) { (spark, d) =>
+    import spark.implicits._
+    vocabCounts(spark, d)
+      .repartitionByRange(spark.sparkContext.defaultParallelism, $"c".desc, $"w".asc)
+      .withColumn("pid", spark_partition_id())
+      .cutLineage()
   }
 
   /** Zipf rank-frequency fit: OLS slope/intercept of log₂(count) on
@@ -911,18 +912,17 @@ object Text {
     * session. (q89's backoff trains on the 80% split and keeps its own
     * "bigramCountsSplit" memo.)
     */
-  private[graft] def bigramCounts(spark: SparkSession, d: String): DataFrame =
-    graft.core.Memo(spark, cache = true, "bigramCounts", d) {
-      import spark.implicits._
-      documents(spark, d)
-        .select($"doc_id", tokens($"text").as("ws"))
-        .select(explode(when(size($"ws") >= 2,
-          zip_with(slice($"ws", lit(1), size($"ws") - 1), slice($"ws", lit(2), size($"ws") - 1),
-            (a, b) => struct(a.as("w1"), b.as("w2"))))
-          .otherwise(array().cast("array<struct<w1:string,w2:string>>"))).as("p"))
-        .select($"p.w1".as("w1"), $"p.w2".as("w2"))
-        .groupBy($"w1", $"w2").agg(count(lit(1)).as("c12"))
-    }
+  private[graft] val bigramCounts = shared("bigramCounts", cache = true) { (spark, d) =>
+    import spark.implicits._
+    documents(spark, d)
+      .select($"doc_id", tokens($"text").as("ws"))
+      .select(explode(when(size($"ws") >= 2,
+        zip_with(slice($"ws", lit(1), size($"ws") - 1), slice($"ws", lit(2), size($"ws") - 1),
+          (a, b) => struct(a.as("w1"), b.as("w2"))))
+        .otherwise(array().cast("array<struct<w1:string,w2:string>>"))).as("p"))
+      .select($"p.w1".as("w1"), $"p.w2".as("w2"))
+      .groupBy($"w1", $"w2").agg(count(lit(1)).as("c12"))
+  }
 
   def bigramLm(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
@@ -944,18 +944,13 @@ object Text {
     * broadcast onto the pair stream; one (doc_id) aggregate; docs with
     * fewer than two tokens re-enter with zero mass via the left join.
     */
-  def bigramSurprisal(spark: SparkSession, d: String): DataFrame =
-    // memo-cached (r18, the r17 langId pattern): q77 emits it, q100's
-    // bucketing and q184's mixture tilt re-read it — without the cache
-    // the per-doc bigram explode + broadcast LM join + (doc_id)
-    // aggregate ran once per consumer. The cached table is one row per
-    // doc (id + two longs + one double), far smaller than the pair
-    // stream it replaces.
-    graft.core.Memo(spark, cache = true, "bigramSurprisal", d) {
-      bigramSurprisalUncached(spark, d)
-    }
-
-  private def bigramSurprisalUncached(spark: SparkSession, d: String): DataFrame = {
+  // memo-cached (r18, the r17 langId pattern): q77 emits it, q100's
+  // bucketing and q184's mixture tilt re-read it — without the cache
+  // the per-doc bigram explode + broadcast LM join + (doc_id)
+  // aggregate ran once per consumer. The cached table is one row per
+  // doc (id + two longs + one double), far smaller than the pair
+  // stream it replaces.
+  val bigramSurprisal = shared("bigramSurprisal", cache = true) { (spark, d) =>
     import spark.implicits._
     val docBg = documents(spark, d)
       .select($"doc_id", tokens($"text").as("ws"))
@@ -1157,6 +1152,8 @@ object Text {
       .select($"doc_id", $"p.w1".as("w1"), $"p.w2".as("w2"))
     val train = docsTok.filter(
       Sampling.hashBucket($"doc_id", "split:") < trainFrac)
+    // cached: each count table feeds its marginal and several score joins;
+    // not declared builds: q89 is their one catalog consumer
     val c123 = graft.core.Memo(spark, cache = true, "trigramCounts", d, trainFrac.toString) {
       triExplode(train).groupBy($"w1", $"w2", $"w3").agg(count(lit(1)).as("c123"))
     }
@@ -1304,21 +1301,25 @@ object Text {
     * only the targetLang-independent cr — it rides the default-target
     * entry purely to share the corpus pass).
     */
-  private def dsirBuckets(spark: SparkSession, d: String,
-      targetLang: String, nBuckets: Int): DataFrame = {
-    import spark.implicits._
-    graft.core.Memo(spark, cache = true,
-        "dsirHashedBuckets", d, targetLang, nBuckets.toString) {
+  private val dsirBuckets = shared("dsirHashedBuckets", cache = true,
+      (DsirLang, DsirBuckets), (p: (String, Int)) => Seq(p._1, p._2.toString)) {
+    case (spark, d, (targetLang, nBuckets)) =>
+      import spark.implicits._
       hashedFeats(spark, d, nBuckets).groupBy($"b").agg(count(lit(1)).as("cr"),
         sum(when($"lang" === targetLang, 1L).otherwise(0L)).as("ct"))
-    }
   }
 
+  /** The target language and bucket space the DSIR entry points default
+    * to, and the bucket table the builds warm.
+    */
+  final val DsirLang = "en"
+  final val DsirBuckets = 4096
+
   def dsirHashedWeights(spark: SparkSession, d: String,
-      targetLang: String = "en", nBuckets: Int = 4096): DataFrame = {
+      targetLang: String = DsirLang, nBuckets: Int = DsirBuckets): DataFrame = {
     import spark.implicits._
     val feats = hashedFeats(spark, d, nBuckets)
-    val buckets = dsirBuckets(spark, d, targetLang, nBuckets)
+    val buckets = dsirBuckets(spark, d, (targetLang, nBuckets))
     val trRow = buckets.agg(sum($"cr"), sum($"ct")).head()
     val tr = graft.core.Scalars.longAt(trRow, 0, 0L)
     val tt = graft.core.Scalars.longAt(trRow, 1, 0L)
@@ -1350,12 +1351,12 @@ object Text {
     * per-source token totals ride the same aggregate.
     */
   def sourceDivergence(spark: SparkSession, d: String,
-      nBuckets: Int = 4096): DataFrame = {
+      nBuckets: Int = DsirBuckets): DataFrame = {
     import spark.implicits._
     val feats = hashedFeats(spark, d, nBuckets)
     // corpus bucket counts ride q90's memoized table (cr is targetLang-
     // independent) — one corpus pass serves both operators per session
-    val corpus = dsirBuckets(spark, d, "en", nBuckets).select($"b", $"cr".as("cb"))
+    val corpus = dsirBuckets(spark, d, (DsirLang, nBuckets)).select($"b", $"cr".as("cb"))
     val nTotal = graft.core.Scalars.longAt(corpus.agg(sum($"cb")).head(), 0, 0L)
     val bySource = feats.groupBy($"source", $"b").agg(count(lit(1)).as("csb"))
     val totals = bySource.groupBy($"source").agg(sum($"csb").as("ns"))
@@ -1798,18 +1799,9 @@ object Text {
     * integers, so tie GROUPS are bit-identical cross-engine and the
     * percent-rank is value-exact.
     *
-    * Scale: one shuffle on lang for the rank window (per-partition
-    * sort); n rides the same partition as a count window — no second
-    * exchange, no driver collection.
-    */
-  def qualityRank(spark: SparkSession, d: String): DataFrame =
-    graft.core.Memo(spark, cache = true, "qualityRank", d) {
-      qualityRankDistributed(spark, d)
-    }
-
-  /** The q136 calibration with NO per-language sort partition:
-    * `Ranks.groupRank`'s class-histogram construction — the (lang,
-    * stop_ratio) tie classes are one hash aggregate, their counts take
+    * Scale: NO per-language sort partition — `Ranks.groupRank`'s
+    * class-histogram construction: the (lang, stop_ratio) tie classes
+    * are one hash aggregate, their counts take
     * a distributed exclusive prefix-sum under the (lang, score) range
     * order (a language is a contiguous RANGE of that order, spread over
     * many range partitions), and rank-within-lang = class prefix −
@@ -1819,7 +1811,7 @@ object Text {
     * q146/q149 manifests, q156 curriculum, q161 committee) ride this
     * calibration.
     */
-  private def qualityRankDistributed(spark: SparkSession, d: String): DataFrame = {
+  val qualityRank = shared("qualityRank", cache = true) { (spark, d) =>
     import spark.implicits._
     val q = qualityScore(spark, d).select($"doc_id", $"stop_ratio")
       .join(documents(spark, d).select($"doc_id", $"lang"), "doc_id")
@@ -1924,26 +1916,25 @@ object Text {
     * per-doc re-aggregate — both keyed by doc_id; no dictionaries, no
     * broadcast, no window.
     */
-  def tokenEntropy(spark: SparkSession, d: String): DataFrame =
-    // memo-cached (r17): q140 emits it and q161's committee re-reads the
-    // entropy signal — each consumer re-ran the (doc, token) shuffle
-    // aggregate; the cached table is one slim row per document
-    graft.core.Memo(spark, cache = true, "tokenEntropy", d) {
-      import spark.implicits._
-      val tc = documents(spark, d)
-        .select($"doc_id", explode(tokens($"text")).as("w"))
-        .groupBy($"doc_id", $"w").agg(count(lit(1)).as("c"))
-      val n = tc.groupBy($"doc_id")
-        .agg(sum($"c").as("n"), count(lit(1)).as("n_types"))
-      tc.join(n, "doc_id")
-        .select($"doc_id", $"n", $"n_types",
-          round(($"c".cast("double") / $"n".cast("double"))
-            * log2($"n".cast("double") / $"c".cast("double"))
-            * lit(1000000.0)).cast("long").as("eq"))
-        .groupBy($"doc_id")
-        .agg(max($"n").as("n_tokens"), max($"n_types").as("n_types"),
-          sum($"eq").as("entropy_q"))
-    }
+  // memo-cached (r17): q140 emits it and q161's committee re-reads the
+  // entropy signal — each consumer re-ran the (doc, token) shuffle
+  // aggregate; the cached table is one slim row per document
+  val tokenEntropy = shared("tokenEntropy", cache = true) { (spark, d) =>
+    import spark.implicits._
+    val tc = documents(spark, d)
+      .select($"doc_id", explode(tokens($"text")).as("w"))
+      .groupBy($"doc_id", $"w").agg(count(lit(1)).as("c"))
+    val n = tc.groupBy($"doc_id")
+      .agg(sum($"c").as("n"), count(lit(1)).as("n_types"))
+    tc.join(n, "doc_id")
+      .select($"doc_id", $"n", $"n_types",
+        round(($"c".cast("double") / $"n".cast("double"))
+          * log2($"n".cast("double") / $"c".cast("double"))
+          * lit(1000000.0)).cast("long").as("eq"))
+      .groupBy($"doc_id")
+      .agg(max($"n").as("n_tokens"), max($"n_types").as("n_types"),
+        sum($"eq").as("entropy_q"))
+  }
 
   /** q233: positional token entropy — for each of the first `maxPos`
     * token positions: the Shannon entropy (log2, q140's exact
@@ -2056,7 +2047,8 @@ object Text {
     import spark.implicits._
     // memo-cached: the distinct (source, type) set feeds THREE consumers
     // (both self-join sides + the size table) — without the cache each
-    // one re-runs the tokenize+distinct corpus pass
+    // one re-runs the tokenize+distinct corpus pass. Not a declared
+    // build: q158 is its one catalog consumer
     val v = graft.core.Memo(spark, cache = true, "sourceVocab", d) {
       documents(spark, d)
         .select($"source", explode(cleanTokens($"text")).as("w"))

@@ -106,10 +106,8 @@ object MemSweep {
 
     // warm the declared builds like the bench/scale legs — under the
     // constrained heap the builds themselves are part of the rehearsal
-    graft.Builds.all.foreach { case (name, fn) =>
-      try fn(spark, fixture)
-      catch { case e: Throwable => println(s"BUILD FAIL $name: ${e.getMessage}") }
-    }
+    graft.Builds.warm(spark, fixture).failures.foreach { case (name, e) =>
+      println(s"BUILD FAIL $name: ${e.getMessage}") }
 
     println(s"| query | secs | rows | spillMemMiB | spillDiskMiB | digest |")
     println(s"|---|---|---|---|---|---|")

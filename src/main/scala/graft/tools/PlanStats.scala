@@ -7,8 +7,9 @@ import org.apache.spark.sql.SparkSession
 /** Regenerates PLANSTATS.md — a one-row-per-query audit of physical-plan
   * shape across the ENTIRE query surface: shuffle count, scans, parquet
   * re-scans, join strategies, nested-loop/cartesian occurrences,
-  * SortAggregates, the Spark jobs construction runs, and the classes
-  * Spark's code generator compiles to build and collect the query.
+  * SortAggregates, the Spark jobs construction runs, the classes
+  * Spark's code generator compiles to build and collect the query, and
+  * the memo keys it adds after the declared builds.
   * The grep-able complement to PLANS.md's full dumps: a regression that
   * turns a broadcast join into a nested loop, or doubles a query's
   * exchanges, shows up as a diff in this table.
@@ -51,24 +52,34 @@ object PlanStats {
     out.println("verdict. `sortagg` counts SortAggregate operators, which a struct- or")
     out.println("array-buffered aggregate falls back to, sorting its whole input.")
     out.println("`cjobs` counts the Spark jobs run while `SparkEntry.queries(q)` builds")
-    out.println("the frame, in this table's order on one session: a memo build is")
-    out.println("charged to the first query that touches it. Each row's query is")
-    out.println("collected after its plan is read, so a memo its action builds is not")
-    out.println("charged to a later row's construction. `cgen` counts the classes")
-    out.println("Spark's code generator compiles while the query is built and collected")
-    out.println("(`CodegenMetrics` compilations — misses of its 100-entry class cache,")
-    out.println("so a class an earlier row compiled and the cache still holds is free).")
+    out.println("the frame, in this table's order on one session that warmed the")
+    out.println("declared builds (`graft.Builds`) first: a row counts the query's own")
+    out.println("construction, not a shared build. Each row's query is collected after")
+    out.println("its plan is read, so a memo its action builds is not charged to a")
+    out.println("later row's construction. `newmemo` lists the memo keys (name and")
+    out.println("parameters) the row adds: a lineage no build declares, which its memo")
+    out.println("site says is one query's alone or keyed by call-site values. `cgen`")
+    out.println("counts the classes Spark's code generator compiles while the query is")
+    out.println("built and collected (`CodegenMetrics` compilations — misses of its")
+    out.println("100-entry class cache, so a class an earlier row compiled and the")
+    out.println("cache still holds is free). The plan columns read each build's cached")
+    out.println("plan in its materialized (final AQE) form, as the builds ran first.")
     out.println()
-    out.println("| query | shuffles | scans | rescans | bhj | smj | bnlj | sortagg | cjobs | cgen |")
-    out.println("|---|---|---|---|---|---|---|---|---|---|")
+    out.println("| query | shuffles | scans | rescans | bhj | smj | bnlj | sortagg | cjobs | cgen " +
+      "| newmemo |")
+    out.println("|---|---|---|---|---|---|---|---|---|---|---|")
     // the file each parquet scan reads, from its Location metadata
     val scanFile = "Scan parquet [^\\n]*?/(\\w+)\\.parquet".r
     var totalCjobs = 0
     var totalCgen = 0L
     def compiles = org.apache.spark.metrics.source.CodegenMetrics
       .METRIC_COMPILATION_TIME.getCount
+    def memoKeys = graft.core.Memo.keysFor(spark).toSet
+    graft.Builds.warm(spark, d).failures.foreach { case (b, e) =>
+      println(s"BUILD FAIL $b: ${e.getMessage}") }
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
+        val keys0 = memoKeys
         val cgen0 = compiles
         val (df, work) = graft.core.Profile.span(spark)(fn(spark, d))
         totalCjobs += work.jobs
@@ -77,6 +88,9 @@ object PlanStats {
         df.collect()
         val cgen = compiles - cgen0
         totalCgen += cgen
+        // "<cache> <name> <dir> <params…>" → "<name> <params…>"
+        val newmemo = (memoKeys -- keys0).toSeq.map(_.split(" ").toSeq)
+          .map(k => (k(1) +: k.drop(3)).mkString(" ")).sorted.mkString(", ")
         def c(pat: String) = pat.r.findAllIn(p).length
         val shuffles = c("(?m)^\\s*[+:]*-? ?Exchange hashpartitioning") +
           c("(?m)Exchange rangepartitioning") + c("Exchange SinglePartition")
@@ -85,10 +99,10 @@ object PlanStats {
         out.println(s"| $name | $shuffles | ${c("Scan parquet")} | $rescans | " +
           s"${c("BroadcastHashJoin")} | ${c("SortMergeJoin")} | " +
           s"${c("BroadcastNestedLoopJoin") + c("CartesianProduct")} | " +
-          s"${c("SortAggregate")} | ${work.jobs} | $cgen |")
+          s"${c("SortAggregate")} | ${work.jobs} | $cgen | $newmemo |")
       } catch {
         case e: Throwable =>
-          out.println(s"| $name | ERR ${e.getClass.getSimpleName} | | | | | | | | |")
+          out.println(s"| $name | ERR ${e.getClass.getSimpleName} | | | | | | | | | |")
       }
     }
     out.println()

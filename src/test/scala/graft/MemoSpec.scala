@@ -1,11 +1,17 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.util.Try
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Memo
 
-/** Session isolation and eviction contract of the shared-lineage memo. */
+/** Session isolation, build-once and eviction contract of the shared-lineage memo. */
 class MemoSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -24,6 +30,57 @@ class MemoSpec extends AnyFunSuite {
       assert(a.sparkSession eq spark)
       assert(b.sparkSession eq other)
     } finally Memo.release(other)
+  }
+
+  /** Four threads touch one key at once. A build counts itself, then
+    * waits until all four have called the memo and the other touchers
+    * are parked (each wait gives up after 2 s), then returns `result`
+    * of its count. Returns the build count and each thread's outcome.
+    */
+  private def touchAtOnce(s: SparkSession, key: String)(
+      result: Int => DataFrame): (Int, Seq[Try[DataFrame]]) = {
+    val builds = new AtomicInteger
+    val called = new CountDownLatch(4)
+    val out = new Array[Try[DataFrame]](4)
+    lazy val threads: Seq[Thread] = (0 until 4).map(i => new Thread(() => {
+      called.countDown()
+      out(i) = Try(Memo(s, cache = false, "memospec", key) {
+        val n = builds.incrementAndGet()
+        called.await(2, TimeUnit.SECONDS)
+        val until = System.nanoTime() + 2000000000L
+        while (threads.exists(t => (t ne Thread.currentThread) &&
+            t.getState != Thread.State.WAITING) && System.nanoTime() < until)
+          Thread.sleep(5)
+        result(n)
+      })
+    }))
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    (builds.get, out.toSeq)
+  }
+
+  test("concurrent first touch of one key builds once") {
+    val s = spark.newSession()
+    try {
+      val (builds, got) = touchAtOnce(s, "race")(_ => s.range(1).toDF())
+      assert(builds == 1, s"expected one build, got $builds")
+      val dfs = got.map(_.get)
+      assert(dfs.forall(_ eq dfs.head), "every toucher must get the one built DataFrame")
+    } finally Memo.release(s)
+  }
+
+  test("a failed build is not cached: waiters see its exception, the next touch rebuilds") {
+    val s = spark.newSession()
+    try {
+      val (builds, got) = touchAtOnce(s, "fail")(n =>
+        throw new IllegalStateException(s"build $n"))
+      assert(builds == 1, s"expected one build, got $builds")
+      val errs = got.map(_.failed.get)
+      assert(errs.forall(_ eq errs.head), s"every waiter must see the builder's exception: $errs")
+      assert(!Memo.keysFor(s).contains("false memospec fail"), "a failed build must not stay keyed")
+      val rebuilt = Memo(s, cache = false, "memospec", "fail")(s.range(2).toDF())
+      assert(rebuilt.count() == 2)
+    } finally Memo.release(s)
   }
 
   private val sf = "/root/testdata/sf0.001"
@@ -71,10 +128,16 @@ class MemoSpec extends AnyFunSuite {
     } finally Memo.release(s)
   }
 
-  test("q86/q132 share one CONVERGED dedupLabels propagation") {
-    val keys = sharedKeys("dedupLabelsConverged",
-      "q86_cc_converged", "q132_cluster_split")
-    assert(keys.size == 1, s"expected one shared converged propagation, got $keys")
+  test("q86 builds one CONVERGED dedupLabels propagation") {
+    val keys = sharedKeys("dedupLabelsConverged", "q86_cc_converged")
+    assert(keys.size == 1, s"expected one converged propagation, got $keys")
+  }
+
+  test("q87/q132 share one dedupLabelsStar build") {
+    val keys = sharedKeys("dedupLabelsStar", "q87_cc_star", "q132_cluster_split")
+    assert(keys.size == 1, s"expected one shared star propagation, got $keys")
+    assert(sharedKeys("dedupLabelsStar", "q132_cluster_split") == keys,
+      "q132 alone must build the same star labels q87 reads")
   }
 
   test("q15/q42/q63 share one minhashLshPairs build") {
