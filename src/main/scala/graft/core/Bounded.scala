@@ -16,7 +16,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
   *    `limit(bound+1)` means at most bound+1 rows ever arrive, and a
   *    result of exactly bound+1 rows proves the bound is violated (so
   *    the returned prefix is complete whenever the require passes).
-  *    Driver bound: `bound` rows.
+  *    Driver bound: `bound` rows. `collectWithin` is the same collect
+  *    without the require: None over the bound, for a site that keeps
+  *    a distributed arm for larger input.
   *  - `fold` reduces a frame into one small state, the MLlib
   *    `treeAggregate` shape at depth 1: each partition folds its rows
   *    into one state and the driver merges the |partitions| partials in
@@ -41,15 +43,24 @@ object Bounded {
   def requireWithin(n: Long, bound: Long, what: String): Unit =
     require(n <= bound, exceeded(bound, what))
 
+  /** The rows of `ds` when there are at most `bound` of them, else None:
+    * the quiet form of `collect`, for a caller with another arm for
+    * input over the bound. The same one `limit(bound+1)` collect, so at
+    * most bound+1 rows arrive either way.
+    */
+  def collectWithin[T](ds: Dataset[T], bound: Long): Option[Array[T]] = {
+    val lim = math.min(bound + 1, Int.MaxValue.toLong).toInt
+    Some(ds.limit(lim).collect()).filter(_.length <= bound)
+  }
+
   // a DataFrame IS Dataset[Row] — one definition of the bound semantics
   def collect(df: DataFrame, bound: Long, what: String): Array[Row] =
     collectDs(df, bound, what)
 
   def collectDs[T](ds: Dataset[T], bound: Long, what: String): Array[T] = {
-    val lim = math.min(bound + 1, Int.MaxValue.toLong).toInt
-    val rows = ds.limit(lim).collect()
-    requireWithin(rows.length, bound, what)
-    rows
+    val rows = collectWithin(ds, bound)
+    requireWithin(rows.fold(bound + 1)(_.length.toLong), bound, what)
+    rows.get
   }
 
   /** Fold every row of `ds` into one state: `seqOp` within a partition

@@ -21,8 +21,10 @@ import org.apache.spark.sql.graft.ContextBridge
   * stage whose properties carry the tag, and every task of those stages.
   * The listener bus is drained before the span returns, so the counts
   * are complete. Jobs of other threads are not charged, but log4j events
-  * carry no tag: `warns` holds every WARN logged in the JVM while the
-  * span ran, so a span whose warns are read must run alone.
+  * and Spark's code generator carry no tag: `warns` holds every WARN
+  * logged in the JVM while the span ran and `compiles` every class
+  * compiled in it, so a span whose warns or compiles are read must run
+  * alone.
   */
 object Profile {
   /** One stage a span ran: its shuffle-map tasks, the largest and the
@@ -32,9 +34,14 @@ object Profile {
       shuffleRead: Long, memorySpill: Long, diskSpill: Long)
 
   /** A span's jobs, the stages they ran in stage-id order (a skipped
-    * stage runs nothing and is not listed), and the WARN messages.
+    * stage runs nothing and is not listed), the WARN messages, and the
+    * classes Spark's code generator compiled (the count of
+    * `CodegenMetrics.METRIC_COMPILATION_TIME`: misses of its class
+    * cache). Warns and compiles are JVM-wide: read them from a span
+    * that ran alone.
     */
-  final case class Work(jobs: Int, stages: Seq[Stage], warns: Seq[String])
+  final case class Work(jobs: Int, stages: Seq[Stage], warns: Seq[String],
+      compiles: Long)
 
   private val spans = new AtomicLong(0L)
   private val DrainTimeoutMs = 60000L
@@ -58,11 +65,12 @@ object Profile {
     root.addAppender(appender, Level.WARN, null)
     ctx.updateLoggers()
     sc.addJobTag(tag)
+    val compiles0 = compiled
     try {
       val r = body
       drain(spark)
       (r, charge.synchronized(Work(charge.jobs, charge.stages.values.toSeq,
-        warns.asScala.toSeq)))
+        warns.asScala.toSeq, compiled - compiles0)))
     } finally {
       sc.removeJobTag(tag)
       sc.removeSparkListener(charge)
@@ -71,6 +79,9 @@ object Profile {
       appender.stop()
     }
   }
+
+  private def compiled: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Block until every posted listener event has been delivered; throws
     * a TimeoutException rather than let a caller read partial counts.

@@ -87,13 +87,16 @@ object Hashing {
 
   /** JVM twin of `md5Bits32(_, 1) % mod` — for stateful processors that
     * must make the same per-row hash-bucket decision outside Column
-    * space (e.g. the incremental manifest's fallback split). Kept next
-    * to the Column form so the two can never drift.
+    * space (e.g. the incremental manifest's fallback split, q145's
+    * driver walk). Kept next to the Column form so the two can never
+    * drift. The first 8 hex chars ARE the first 4 digest bytes, read
+    * big-endian, so no hex string is built.
     */
   def md5BucketJvm(s: String, mod: Long): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.substring(0, 8), 16) % mod
+    val b = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8"))
+    ((b(0) & 0xffL) << 24 | (b(1) & 0xffL) << 16 | (b(2) & 0xffL) << 8 |
+      (b(3) & 0xffL)) % mod
   }
 
   /** 64-bit md5-derived token hash: (hi32 << 32) | lo32 of the first 16

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -670,17 +672,96 @@ object Graph extends graft.core.Memo.Owner {
     * identically (the q52/q29 md5-determinism discipline), so the whole
     * walk corpus is value-exact, not rows-only.
     *
-    * Scale: the textbook distributed walk — each step is ONE join of the
-    * walk frontier onto the ranked adjacency keyed by the current
-    * vertex; state is |V| rows throughout; the adjacency (with
-    * per-vertex neighbor ranks) is pinned once and reused across steps,
-    * and the steps themselves run in the query's action, not as one
-    * eager job each at construction.
+    * Scale: `walkEdges` — at most `WalkDriverMaxEdges` edges walk on the
+    * driver and come back as a local table; above it the walk is the
+    * distributed join loop.
     */
-  def randomWalks(spark: SparkSession, d: String, steps: Int = 4): DataFrame = {
+  def randomWalks(spark: SparkSession, d: String, steps: Int = 4): DataFrame =
+    walkEdges(spark, copurchaseEdges(spark, d), steps)
+
+  /** The edge bound of `walkEdges`' driver arm. Bound argument: the
+    * driver holds the collected rows (about 100 bytes each) and a CSR
+    * copy of the adjacency (three long arrays of 2 entries per edge),
+    * under 100 MB at this bound, where the co-purchase graph is ~3.6k
+    * edges at sf0.1 (its pairs need two co-purchases, so they grow with
+    * the part count, not the orders).
+    */
+  private[graft] val WalkDriverMaxEdges = 500000L
+
+  /** The walk over an explicit (p1, p2) edge table with non-null ids —
+    * undirected, one adjacency entry per edge and direction. One bounded
+    * collect of the edges decides the arm:
+    *
+    *  - at most `driverMaxEdges` edges: the walk runs on the driver over
+    *    a CSR adjacency, each vertex's neighbors sorted by id, the pick
+    *    `Hashing.md5BucketJvm` (the JVM twin of the md5_bits32 pick), and
+    *    returns a local table. Construction runs the collect's one job;
+    *    the action reads the local table.
+    *  - above it: the distributed walk — each step joins the walk
+    *    frontier onto the current vertex's degree, computes the pick,
+    *    and joins the ranked adjacency on (vertex, neighbor index), so a
+    *    hub's adjacency is never fanned out per walk; state is |V| rows
+    *    throughout; the adjacency (with per-vertex neighbor ranks) is
+    *    pinned once and reused across steps, and the steps run in the
+    *    query's action.
+    *
+    * The arms give identical rows (GraphScaleSpec, KCoreSpec).
+    */
+  private[graft] def walkEdges(spark: SparkSession, edges0: DataFrame, steps: Int,
+      driverMaxEdges: Long = WalkDriverMaxEdges): DataFrame = {
+    val edges = edges0.select("p1", "p2")
+    // one partition makes the limit collect one job at any scale: Spark
+    // takes a limit over p partitions in 1 + ⌈log4 p⌉ jobs. The one task
+    // reads at most driverMaxEdges + 1 rows of the cached edges
+    graft.core.Bounded.collectWithin(edges.coalesce(1), driverMaxEdges) match {
+      case Some(rows) => driverWalks(spark, rows, steps)
+      case None => distributedWalks(spark, edges, steps)
+    }
+  }
+
+  private def driverWalks(spark: SparkSession,
+      edges: Array[org.apache.spark.sql.Row], steps: Int): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import graft.functions.Hashing.md5BucketJvm
+    // both directions of every edge, then a CSR layout: vertex i's
+    // neighbors are nbr(off(i) until off(i + 1)), sorted by id
+    val from = new Array[Long](2 * edges.length)
+    val to = new Array[Long](2 * edges.length)
+    edges.indices.foreach { i =>
+      val (a, b) = (edges(i).getLong(0), edges(i).getLong(1))
+      from(2 * i) = a; to(2 * i) = b
+      from(2 * i + 1) = b; to(2 * i + 1) = a
+    }
+    val verts = from.distinct.sorted
+    def at(v: Long) = java.util.Arrays.binarySearch(verts, v)
+    val off = new Array[Int](verts.length + 1)
+    from.foreach(v => off(at(v) + 1) += 1)
+    verts.indices.foreach(i => off(i + 1) += off(i))
+    val nbr = new Array[Long](to.length)
+    val fill = off.clone()
+    from.indices.foreach { j =>
+      val i = at(from(j)); nbr(fill(i)) = to(j); fill(i) += 1
+    }
+    verts.indices.foreach(i => java.util.Arrays.sort(nbr, off(i), off(i + 1)))
+    val walks = verts.indices.map { s =>
+      var i = s
+      Row.fromSeq(verts(s) +: (1 to steps).map { t =>
+        val pick = md5BucketJvm(s"walk:${verts(s)}:$t:${verts(i)}", off(i + 1) - off(i))
+        val next = nbr(off(i) + pick.toInt)
+        i = at(next)
+        next
+      })
+    }
+    val schema = StructType(("start_id" +: (1 to steps).map(t => s"v$t"))
+      .map(StructField(_, LongType, nullable = false)))
+    spark.createDataFrame(walks.asJava, schema)
+  }
+
+  private def distributedWalks(spark: SparkSession, edges: DataFrame,
+      steps: Int): DataFrame = {
     import spark.implicits._
     import graft.functions.Hashing.md5Bits32
-    val edges = copurchaseEdges(spark, d).select($"p1", $"p2")
     val nb = edges.select($"p1".as("v"), $"p2".as("u"))
       .union(edges.select($"p2".as("v"), $"p1".as("u")))
     // materialized once: the one pin every step's join re-reads
@@ -690,24 +771,28 @@ object Graph extends graft.core.Memo.Owner {
       .withColumn("deg", count(lit(1)).over(Window.partitionBy($"v")))
       .cutLineage()
     // every vertex with a neighbor has exactly one idx = 0 row
-    var walk = ranked.filter($"idx" === 0L)
-      .select($"v".as("start"), $"v".as("cur"))
+    val firsts = ranked.filter($"idx" === 0L)
+    var walk = firsts.select($"v".as("start"), $"v".as("cur"))
     for (t <- 1 to steps) {
-      // a per-step renamed projection: its aliases are fresh attribute
+      // per-step renamed projections: their aliases are fresh attribute
       // ids, so joining the pin onto a walk that already read it is no
       // self-join, and plain names resolve on one side only. The steps
       // stay one lineage — the md5 pick is deterministic, so nothing
-      // needs freezing between them
-      val adj = ranked.select($"v".as("__v"), $"u".as("__u"),
-        $"idx".as("__idx"), $"deg".as("__deg"))
+      // needs freezing between them. The pick is computed from the
+      // current vertex's degree BEFORE the adjacency join, so each walk
+      // meets exactly one adjacency row: joining on the vertex alone
+      // and filtering after fans every walk at a hub out to the hub's
+      // whole adjacency
+      val deg = firsts.select($"v".as("__dv"), $"deg".as("__deg"))
+      val adj = ranked.select($"v".as("__v"), $"idx".as("__idx"),
+        $"u".as(s"v$t"))
       val pick = pmod(md5Bits32(concat(lit("walk:"), $"start".cast("string"),
         lit(s":$t:"), $"cur".cast("string")), 1), $"__deg")
-      val keep = ($"start" +: (1 until t).map(i => col(s"v$i"))) :+
-        $"__u".as(s"v$t")
       walk = walk
-        .join(adj, $"cur" === $"__v")
-        .filter($"__idx" === pick)
-        .select(keep: _*)
+        .join(deg, $"cur" === $"__dv")
+        .withColumn("__pick", pick)
+        .join(adj, $"cur" === $"__v" && $"__pick" === $"__idx")
+        .select(($"start" +: (1 to t).map(i => col(s"v$i"))): _*)
         .withColumn("cur", col(s"v$t"))
     }
     walk.select($"start".as("start_id") +: (1 to steps).map(i => col(s"v$i")): _*)

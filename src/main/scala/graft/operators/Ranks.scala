@@ -57,12 +57,13 @@ object Ranks {
   /** Covering-class spans over a CLASS HISTOGRAM (`cnt` rows per
     * (groups, value) class): appends the inclusive prefix count `hi`,
     * the span start `lo` = hi − cnt + 1, and the per-group total `n` —
-    * the covering-class convention q121/q167/q197/q216 share. A class
-    * covers rank r iff lo ≤ r ≤ hi, so percentile picks and
-    * rank-weighted sums read off the histogram without ever ranking
-    * rows. The per-group window is legitimate ONLY when the class
-    * count per group is bounded by value cardinality rather than
-    * corpus rows — each caller's scaladoc carries its bound argument.
+    * the covering-class convention q121/q216 and the MAD median share
+    * (`histPercentiles` walks the same spans in one task). A class
+    * covers rank r iff lo ≤ r ≤ hi, so medians and rank-weighted sums
+    * read off the histogram without ever ranking rows. The per-group
+    * window is legitimate ONLY when the class count per group is
+    * bounded by value cardinality rather than corpus rows — each
+    * caller's scaladoc carries its bound argument.
     * `hi`/`lo`/`n` are RESERVED output names: a histogram already
     * carrying one would be silently overwritten, so that is an error.
     */
@@ -79,21 +80,65 @@ object Ranks {
       .withColumn("n", sum(cnt).over(Window.partitionBy(groups: _*)))
   }
 
-  /** Percentile picks off a `classSpans`-spanned histogram, one pass:
-    * for each (pct, outName) the covering class of rank
-    * ⌈pct·n/100⌉ = `(pct·n + 99) div 100` — exactly one class per
-    * group covers each target, so `max(when(...))` folds every pick
-    * into ONE |classes|-row aggregate (no filter+join per percentile).
-    * `also` rides the same aggregate (per-group totals over the
-    * histogram), after the picks.
+  /** Percentile picks over a CLASS HISTOGRAM (`cnt` rows per
+    * (group, value) class, `value` a long, `cnt` a positive long), in
+    * ONE task: the histogram is coalesced to one partition and a
+    * row-encoded `mapPartitions` sorts each group's classes by value
+    * (nulls first, the window order `classSpans` uses) and, for each
+    * (pct, outName), takes the value of the covering class of rank
+    * ⌈pct·n/100⌉ = `(pct·n + 99) div 100`. Beside the picks it emits
+    * what the callers fold over the same histogram: `n` = Σ cnt, `sum`
+    * = Σ value·cnt and `max` = max value (both over non-null values,
+    * null when there are none). Output: group, n, sum, max, picks —
+    * one row per group. Arithmetic is `multiplyExact`/`addExact`, so a
+    * sum that overflows a long throws, as Spark's ANSI sum does.
+    *
+    * Lazy: construction runs no job. The one task is legitimate ONLY
+    * when the histogram is bounded by value cardinality rather than
+    * corpus rows — each caller's scaladoc carries its bound argument.
+    * Against the `classSpans` windows plus a group aggregate this is
+    * one operator and one stage over the histogram, with no exchange
+    * of its own.
     */
-  def pickPercentiles(spanned: DataFrame, groups: Seq[Column], value: Column,
-      pcts: Seq[(Int, String)], also: Column*): DataFrame = {
-    val aggs = pcts.map { case (p, out) =>
-      max(when(col("lo") <= expr(s"($p * n + 99) div 100") &&
-        expr(s"($p * n + 99) div 100") <= col("hi"), value)).as(out)
-    } ++ also
-    spanned.groupBy(groups: _*).agg(aggs.head, aggs.tail: _*)
+  def histPercentiles(hist: DataFrame, group: String, value: String,
+      cnt: String, pcts: Seq[(Int, String)]): DataFrame = {
+    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val outs = Seq("n", "sum", "max") ++ pcts.map(_._2)
+    require(!outs.contains(group),
+      s"histPercentiles emits ${outs.mkString(",")}; the group column is $group")
+    val in = hist.select(col(group), col(value), col(cnt))
+    require(in.schema(value).dataType == LongType && in.schema(cnt).dataType == LongType,
+      s"histPercentiles reads long value and count columns: ${in.schema.simpleString}")
+    val schema = StructType(Seq(in.schema(group)) ++
+      Seq(StructField("n", LongType, nullable = false)) ++
+      outs.tail.map(StructField(_, LongType, nullable = true)))
+    val ps = pcts.map(_._1)
+    in.coalesce(1).mapPartitions { rows =>
+      val classes = scala.collection.mutable.LinkedHashMap
+        .empty[Any, scala.collection.mutable.ArrayBuffer[(java.lang.Long, Long)]]
+      rows.foreach { r =>
+        classes.getOrElseUpdate(r.get(0), scala.collection.mutable.ArrayBuffer.empty) +=
+          ((if (r.isNullAt(1)) null else r.getLong(1), r.getLong(2)))
+      }
+      classes.iterator.map { case (key, cs) =>
+        val sorted = cs.sortBy(c => Option(c._1).map(_.longValue))
+        val n = sorted.iterator.map(_._2).foldLeft(0L)(Math.addExact)
+        val vals = sorted.filter(_._1 ne null)
+        val sum = if (vals.isEmpty) null else java.lang.Long.valueOf(vals.iterator
+          .map(c => Math.multiplyExact(c._1.longValue, c._2)).foldLeft(0L)(Math.addExact))
+        val max = vals.lastOption.map(_._1).orNull
+        val picks = ps.map { p =>
+          val target = Math.addExact(Math.multiplyExact(p.toLong, n), 99L) / 100L
+          // the first class whose span reaches the target covers it
+          // unless the target precedes every span (p = 0)
+          var hi = 0L
+          sorted.find { case (_, c) => hi += c; target <= hi }
+            .filter { case (_, c) => hi - c < target }.map(_._1).orNull
+        }
+        Row.fromSeq(Seq(key, n, sum, max) ++ picks)
+      }
+    }(Encoders.row(schema))
   }
 
   /** Append `rankCol` = SQL `rank()` within each group (ties share a

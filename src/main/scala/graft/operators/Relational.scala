@@ -1247,11 +1247,12 @@ object Relational {
     * satisfy m(m+1)/2 ≤ Σ df = n_rows, so m ≤ √(2·n_rows) — the
     * per-relation prefix-sum window over the histogram is provably
     * sublinear at any scale, and a billion-key relation contributes
-    * at most ~√(2·rows) histogram rows to one sort partition. The
-    * middle-rank pick is the covering-class lookup (the class whose
-    * cumulative key-count span [lo, hi] contains the target rank);
-    * ties on df within a class all carry the same df, so the row-rank
-    * form's (df, k) tiebreak cannot change the picked value.
+    * at most ~√(2·rows) histogram rows to `Ranks.histPercentiles`' one
+    * task (the bound argument for that operator here). The middle-rank
+    * pick is the covering-class lookup (the class whose cumulative
+    * key-count span [lo, hi] contains the target rank); ties on df
+    * within a class all carry the same df, so the row-rank form's
+    * (df, k) tiebreak cannot change the picked value.
     */
   def joinSkewAdvisor(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
@@ -1263,16 +1264,13 @@ object Relational {
     val hist =
       dfHist(lineitem(spark, d), "lineitem.l_partkey", "l_partkey")
         .unionByName(dfHist(events(spark, d), "events.user_id", "user_id"))
-    // the totals and both percentiles from ONE aggregate over the
-    // spanned histogram (classSpans' n IS the key count), so the
-    // histogram has one consumer and needs no pin
-    Ranks.pickPercentiles(
-        Ranks.classSpans(hist, Seq($"relation"), $"df", $"cnt"),
-        Seq($"relation"), $"df", Seq(50 -> "p50_df", 99 -> "p99_df"),
-        sum($"df" * $"cnt").as("n_rows"), max($"n").as("n_keys"),
-        max($"df").as("max_df"))
-      .select($"relation", $"n_rows", $"n_keys", $"max_df", $"p50_df",
-        $"p99_df",
+    // the totals and both percentiles from ONE single-task pass over
+    // the histogram (its n IS the key count, its sum the row count), so
+    // the histogram has one consumer and needs no pin
+    Ranks.histPercentiles(hist, "relation", "df", "cnt",
+        Seq(50 -> "p50_df", 99 -> "p99_df"))
+      .select($"relation", $"sum".as("n_rows"), $"n".as("n_keys"),
+        $"max".as("max_df"), $"p50_df", $"p99_df",
         expr("max_df * n_keys * 1000000L div n_rows").as("skew_q6"),
         greatest(lit(1L),
           expr("(max_df * n_keys + n_rows - 1) div n_rows")).as("salt_factor"))

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Lineage
 import graft.core.Lineage.CutOps
 import graft.core.Tables._
 import graft.plans.LexExtreme.{lexMax, lexMin}
@@ -562,27 +561,25 @@ object Sampling extends graft.core.Memo.Owner {
     *
     * Scale: the percentile picks run on each split's (n_chars) CLASS
     * HISTOGRAM (the q121/q167 covering-class convention) — one
-    * map-side-combined aggregate is the only full-data pass, and the
-    * per-split prefix window touches ≤ |distinct lengths| rows (a
-    * constant that does not grow with corpus rows), so the 80 %-of-
-    * corpus train split is never a hot sort group. The picked rank's
+    * map-side-combined aggregate is the only full-data pass, and
+    * `Ranks.histPercentiles`' one task reads ≤ 3 · |distinct lengths|
+    * rows (a constant that does not grow with corpus rows: the bound
+    * argument for that operator here), so the 80 %-of-corpus train
+    * split is never a hot sort group. The same pass yields each
+    * split's count and length total. The picked rank's
     * covering class carries the picked value; the row form's doc_id
     * tiebreak cannot change it (all rows in a class share n_chars).
     * Everything after is arithmetic on 3 rows.
     */
   def splitDriftAudit(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
-    val hist = Lineage.counted(hashSplit(spark, d)
+    val hist = hashSplit(spark, d)
       .join(documents(spark, d).select($"doc_id", $"n_chars"), "doc_id")
-      .groupBy($"split", $"n_chars").agg(count(lit(1)).as("cnt"))).df
-    val counts = hist.groupBy($"split")
-      .agg(sum($"cnt").as("n"), sum($"n_chars" * $"cnt").as("tot"))
-    val picks = Ranks.pickPercentiles(
-      Ranks.classSpans(hist, Seq($"split"), $"n_chars", $"cnt"),
-      Seq($"split"), $"n_chars", Seq(50 -> "p50_chars", 90 -> "p90_chars"))
-    val stats = counts.join(picks, "split")
+      .groupBy($"split", $"n_chars").agg(count(lit(1)).as("cnt"))
+    val stats = Ranks.histPercentiles(hist, "split", "n_chars", "cnt",
+        Seq(50 -> "p50_chars", 90 -> "p90_chars"))
       .select($"split", $"n".as("n_docs"),
-        ($"tot".cast("double") / $"n".cast("double")).as("mean_chars"),
+        ($"sum".cast("double") / $"n".cast("double")).as("mean_chars"),
         $"p50_chars", $"p90_chars")
     val train = stats.filter($"split" === "train")
       .select($"n_docs".as("t_n"), $"p50_chars".as("t_p50"),

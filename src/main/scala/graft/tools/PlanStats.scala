@@ -3,6 +3,15 @@ package graft.tools
 import java.io.PrintWriter
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning,
+  RangePartitioning, SinglePartition}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+  BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
 
 /** Regenerates PLANSTATS.md — a one-row-per-query audit of physical-plan
   * shape across the ENTIRE query surface: shuffle count, scans, parquet
@@ -14,9 +23,10 @@ import org.apache.spark.sql.SparkSession
   * turns a broadcast join into a nested loop, or doubles a query's
   * exchanges, shows up as a diff in this table.
   *
-  * Counts come from the AQE initial physical plan at sf0.001 (plan
-  * SHAPE, not runtime re-planning — AQE may still convert sort-merge
-  * joins to broadcast at run time, so the table is conservative).
+  * Counts come from the nodes of the AQE initial physical plan at
+  * sf0.001 (plan SHAPE, not runtime re-planning — AQE may still convert
+  * sort-merge joins to broadcast at run time, so the table is
+  * conservative), not descending into cached relations.
   */
 object PlanStats {
   def main(args: Array[String]): Unit = {
@@ -38,13 +48,12 @@ object PlanStats {
     out.println("those or a declared-quadratic exact rung (q25; q210's 1-NN purity and")
     out.println("q215's agreement audit, which score the same quadratic embedding join;")
     out.println("their 100 TB path is the IVF probe candidate generator) — never between")
-    out.println("two data-bearing sides. Scan AND shuffle counts are UNCACHED logical")
-    out.println("lineages: a memo-shared table (e.g. the q205/q211/q215 pair table, or")
-    out.println("the q111 copurchase basket) re-lists its scans and exchanges per")
-    out.println("reference here but materializes once at execution — so a build whose")
-    out.println("reshape trades a broadcast join for one extra group exchange (q111,")
-    out.println("r17) raises every consumer's listed shuffle count while lowering the")
-    out.println("executed cost; read consumer rows as build-lineage × references.")
+    out.println("two data-bearing sides. The plan columns count the nodes of the")
+    out.println("query's own plan, through adaptive plans and subqueries but not into")
+    out.println("a cached table: a cached build (e.g. the q205/q211/q215 pair table, or")
+    out.println("the q111 copurchase basket) is one in-memory scan leaf whether or not")
+    out.println("it has run, so a row does not depend on which builds ran before it.")
+    out.println("A memo that is not cached still lists its lineage per reference.")
     out.println()
     out.println("`rescans` counts parquet scans beyond the first of each file: a base")
     out.println("lineage referenced by two sides re-scans its source per reference, but")
@@ -60,46 +69,49 @@ object PlanStats {
     out.println("parameters) the row adds: a lineage no build declares, which its memo")
     out.println("site says is one query's alone or keyed by call-site values. `cgen`")
     out.println("counts the classes Spark's code generator compiles while the query is")
-    out.println("built and collected (`CodegenMetrics` compilations — misses of its")
-    out.println("100-entry class cache, so a class an earlier row compiled and the")
-    out.println("cache still holds is free). The plan columns read each build's cached")
-    out.println("plan in its materialized (final AQE) form, as the builds ran first.")
+    out.println("built and collected (`Profile.Work.compiles`: misses of its 100-entry")
+    out.println("class cache, so a class an earlier row compiled and the cache still")
+    out.println("holds is free).")
     out.println()
     out.println("| query | shuffles | scans | rescans | bhj | smj | bnlj | sortagg | cjobs | cgen " +
       "| newmemo |")
     out.println("|---|---|---|---|---|---|---|---|---|---|---|")
-    // the file each parquet scan reads, from its Location metadata
-    val scanFile = "Scan parquet [^\\n]*?/(\\w+)\\.parquet".r
     var totalCjobs = 0
     var totalCgen = 0L
-    def compiles = org.apache.spark.metrics.source.CodegenMetrics
-      .METRIC_COMPILATION_TIME.getCount
     def memoKeys = graft.core.Memo.keysFor(spark).toSet
     graft.Builds.warm(spark, d).failures.foreach { case (b, e) =>
       println(s"BUILD FAIL $b: ${e.getMessage}") }
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val keys0 = memoKeys
-        val cgen0 = compiles
         val (df, work) = graft.core.Profile.span(spark)(fn(spark, d))
         totalCjobs += work.jobs
-        // the initial plan's shape, read before the collect finalizes it
-        val p = df.queryExecution.executedPlan.toString
-        df.collect()
-        val cgen = compiles - cgen0
+        // the initial plan's nodes, read before the collect finalizes it
+        val (nodes, run) = graft.core.Profile.span(spark) {
+          val p = nodesOf(df.queryExecution.executedPlan)
+          df.collect()
+          p
+        }
+        val cgen = work.compiles + run.compiles
         totalCgen += cgen
         // "<cache> <name> <dir> <params…>" → "<name> <params…>"
         val newmemo = (memoKeys -- keys0).toSeq.map(_.split(" ").toSeq)
           .map(k => (k(1) +: k.drop(3)).mkString(" ")).sorted.mkString(", ")
-        def c(pat: String) = pat.r.findAllIn(p).length
-        val shuffles = c("(?m)^\\s*[+:]*-? ?Exchange hashpartitioning") +
-          c("(?m)Exchange rangepartitioning") + c("Exchange SinglePartition")
-        val scans = scanFile.findAllMatchIn(p).map(_.group(1)).toSeq
+        def c(pf: PartialFunction[SparkPlan, Unit]) = nodes.count(pf.isDefinedAt)
+        val shuffles = c { case e: ShuffleExchangeExec if (e.outputPartitioning match {
+          case _: HashPartitioning | _: RangePartitioning | SinglePartition => true
+          case _ => false
+        }) => }
+        val scans = nodes.collect { case f: FileSourceScanExec
+            if f.relation.fileFormat.isInstanceOf[ParquetFileFormat] =>
+          f.relation.location.rootPaths.map(_.getName).mkString(",")
+        }
         val rescans = scans.size - scans.distinct.size
-        out.println(s"| $name | $shuffles | ${c("Scan parquet")} | $rescans | " +
-          s"${c("BroadcastHashJoin")} | ${c("SortMergeJoin")} | " +
-          s"${c("BroadcastNestedLoopJoin") + c("CartesianProduct")} | " +
-          s"${c("SortAggregate")} | ${work.jobs} | $cgen | $newmemo |")
+        out.println(s"| $name | $shuffles | ${scans.size} | $rescans | " +
+          s"${c { case _: BroadcastHashJoinExec => }} | " +
+          s"${c { case _: SortMergeJoinExec => }} | " +
+          s"${c { case _: BroadcastNestedLoopJoinExec | _: CartesianProductExec => }} | " +
+          s"${c { case _: SortAggregateExec => }} | ${work.jobs} | $cgen | $newmemo |")
       } catch {
         case e: Throwable =>
           out.println(s"| $name | ERR ${e.getClass.getSimpleName} | | | | | | | | | |")
@@ -113,4 +125,11 @@ object PlanStats {
       s"generated classes: $totalCgen)")
     spark.stop()
   }
+
+  /** Every node of a physical plan: through adaptive plans, query stages
+    * and subqueries, but not into a cached relation's plan — an
+    * `InMemoryTableScanExec` is one leaf, whether or not its build ran.
+    */
+  private def nodesOf(plan: SparkPlan): Seq[SparkPlan] =
+    new AdaptiveSparkPlanHelper {}.collectWithSubqueries(plan) { case p => p }
 }

@@ -249,6 +249,23 @@ class GraphScaleSpec extends AnyFunSuite {
     assert(hops.size == 2003)
   }
 
+  test("random walks: driver and distributed arms give identical rows") {
+    import spark.implicits._
+    // the hub fixture; KCoreSpec compares the arms on sf0.001
+    val edges = undEdges(hub = true)
+    val onDriver = Graph.walkEdges(spark, edges, 4)
+    val distributed = Graph.walkEdges(spark, edges, 4, driverMaxEdges = 0)
+    // the driver arm is a local table, the distributed arm a join loop
+    assert(onDriver.queryExecution.optimizedPlan.collectFirst {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.isEmpty)
+    assert(distributed.queryExecution.optimizedPlan.collectFirst {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.nonEmpty)
+    val want = distributed.as[(Long, Long, Long, Long, Long)].collect()
+    assert(want.nonEmpty)
+    assert(onDriver.as[(Long, Long, Long, Long, Long)].collect().sorted.toSeq ==
+      want.sorted.toSeq)
+  }
+
   test("iterative loops: hub runtime within noise of balanced") {
     withSkewConfs {
       import spark.implicits._

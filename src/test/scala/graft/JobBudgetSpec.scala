@@ -61,10 +61,14 @@ class JobBudgetSpec extends AnyFunSuite {
   }
 
   test("randomWalks: construction jobs do not grow with the step count") {
+    // Spark's cache is shared by sessions, so another suite's
+    // Memo.release of an equal plan can drop this session's cached edge
+    // build; cache it again so the count is q145's own
+    Graph.copurchasePairs(spark, sf).persist()
     Graph.randomWalks(spark, sf, steps = 1) // memos and table schemas warm
-    val one = jobs(Graph.randomWalks(spark, sf, steps = 1))
-    val four = jobs(Graph.randomWalks(spark, sf, steps = 4))
-    assert(one == four, s"steps=1 ran $one construction jobs, steps=4 ran $four")
+    // q145: one job, the edge collect; the walk runs on the driver
+    assert(jobs(Graph.randomWalks(spark, sf, steps = 1)) == 1)
+    assert(jobs(Graph.randomWalks(spark, sf, steps = 4)) == 1)
   }
 
   test("powerIteration and linearProbe: one construction job per step, no shuffle") {

@@ -217,6 +217,10 @@ class KCoreSpec extends AnyFunSuite {
     val walks = Graph.randomWalks(spark, sf)
       .as[(Long, Long, Long, Long, Long)].collect()
     assert(walks.length == nb.size, "one walk per vertex")
+    // the distributed arm, forced by a 0-edge driver bound, walks the same
+    val distributed = Graph.walkEdges(spark, Graph.copurchasePairs(spark, sf), 4,
+      driverMaxEdges = 0).as[(Long, Long, Long, Long, Long)].collect()
+    assert(distributed.sorted.toSeq == walks.sorted.toSeq)
     walks.foreach { case (s, v1, v2, v3, v4) =>
       var cur = s
       Seq(v1, v2, v3, v4).zipWithIndex.foreach { case (nxt, i) =>

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Profile
 
 /** `Profile.span` charges a span exactly the Spark work its own thread
-  * ran, and the WARN lines logged meanwhile.
+  * ran, and the WARN lines logged and classes compiled meanwhile.
   */
 class ProfileSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -49,6 +49,14 @@ class ProfileSpec extends AnyFunSuite {
     log.warn("profile-spec outside")
     assert(work.warns.contains("profile-spec inside") &&
       !work.warns.contains("profile-spec outside"), work.warns)
+  }
+
+  test("a span that compiles a fresh plan counts its generated classes") {
+    // a literal no other plan holds makes the generated body new
+    val k = System.nanoTime() % 1000000L + 7L
+    val (_, work) = Profile.span(spark)(
+      spark.range(100).selectExpr(s"id * $k + ${k + 1} AS x").collect())
+    assert(work.compiles > 0, work)
   }
 
   test("the rank machinery releases its pins without a recompute WARN") {

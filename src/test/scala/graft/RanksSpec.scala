@@ -1,10 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Lineage
+import graft.core.{Lineage, Profile}
 import graft.operators.Ranks
 
 /** Laws for the two-phase distributed rank family — each form must be
@@ -369,25 +370,42 @@ class RanksSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.rank.windowMaxRows")
   }
 
-  test("pickPercentiles == the value at row-rank ceil(p*n/100) per group") {
+  test("histPercentiles == the value at row-rank ceil(p*n/100) per group") {
     import spark.implicits._
-    val rows = fixture
-    val hist = rows.groupBy($"g", $"v").agg(count(lit(1)).as("cnt"))
-    val got = Ranks.pickPercentiles(
-      Ranks.classSpans(hist, Seq($"g"), $"v", $"cnt"),
-      Seq($"g"), $"v", Seq(50 -> "p50", 90 -> "p90"))
-    // brute reference: rank every row, take the ceil-rank value
-    val ranked = rows.withColumn("rn",
-        row_number().over(Window.partitionBy($"g").orderBy($"v", $"id"))
-          .cast("long"))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy($"g")))
-    def brute(p: Int, out: String) = ranked
-      .filter($"rn" === expr(s"($p * n + 99) div 100"))
-      .select($"g", $"v".as(out))
-    val want = brute(50, "w50").join(brute(90, "w90"), "g")
-    val j = got.join(want, "g")
-    assert(j.count() === 3L)
-    assert(j.filter($"p50" =!= $"w50" || $"p90" =!= $"w90").count() === 0L)
+    // brute reference: rank every row, take the ceil-rank value; the
+    // row count, value total and max are plain group aggregates
+    def brute(rows: DataFrame) = {
+      val ranked = rows.withColumn("rn",
+          row_number().over(Window.partitionBy($"g").orderBy($"v", $"id"))
+            .cast("long"))
+        .withColumn("n", count(lit(1)).over(Window.partitionBy($"g")))
+      def pick(p: Int, out: String) = ranked
+        .filter($"rn" === expr(s"($p * n + 99) div 100"))
+        .select($"g", $"v".as(out))
+      rows.groupBy($"g").agg(count(lit(1)).as("n"), sum($"v").as("sum"),
+          max($"v").as("max"))
+        .join(pick(50, "p50"), "g").join(pick(90, "p90"), "g")
+    }
+    def got(rows: DataFrame) = Ranks.histPercentiles(
+      rows.groupBy($"g", $"v").agg(count(lit(1)).as("cnt")),
+      "g", "v", "cnt", Seq(50 -> "p50", 90 -> "p90"))
+    def same(rows: DataFrame): Unit = {
+      val (g, w) = (got(rows), brute(rows))
+      assert(g.columns.toSeq == w.columns.toSeq)
+      assert(g.collect().toSet == w.collect().toSet)
+    }
+    same(fixture) // ties, a hot group
+    val (_, work) = Profile.span(spark)(got(fixture))
+    assert(work.jobs == 0, "construction runs no job")
+    // a group with no rows has no output row, as in the reference
+    same(fixture.filter($"g" === "none"))
+    // n_rows past a long throws, as Spark's ANSI sum does
+    val big = Seq(("a", Long.MaxValue / 2, 1L), ("a", Long.MaxValue / 2, 2L),
+      ("a", 3L, 3L)).toDF("g", "v", "id")
+    intercept[Exception](brute(big).collect())
+    val e = intercept[Exception](got(big).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), e.toString)
   }
 
   test("classSpans: lo/hi/n reproduce row-level rank spans on the histogram") {
